@@ -1,12 +1,16 @@
 package graft.core
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterPredicate
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.metadata.FileMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Driver-side parquet reads for the warm serve tiers — the
   * [[graft.tsdb.TickStore.scanRangeLocal]] posture generalized: a cold
@@ -18,8 +22,10 @@ import org.apache.parquet.hadoop.example.GroupReadSupport
   * term/id-filtered read skips non-matching row groups exactly like
   * the pushed-down Spark scan would.
   *
-  * Callers must treat any exception as "fall back to the Spark path" —
-  * these helpers throw rather than guess on unexpected layouts.
+  * Callers of the row readers must treat any exception as "fall back
+  * to the Spark path" — these helpers throw rather than guess on
+  * unexpected layouts. The footer helpers ([[fileMetaData]],
+  * [[schemaFile]]) back [[Tables]]' job-free schema resolution.
   */
 object LocalParquet {
 
@@ -67,6 +73,71 @@ object LocalParquet {
       }
     }
   }
+
+  private final case class CachedFooter(len: Long, mtime: Long, meta: FileMetaData)
+
+  // one entry per qualified file path; a changed length or mtime
+  // replaces it. Holds footer METADATA only (schema + key/value
+  // metadata, row groups skipped), never data.
+  private val footers =
+    new java.util.concurrent.ConcurrentHashMap[String, CachedFooter]()
+
+  /** Footer metadata of `file`: its parquet schema and key/value
+    * metadata, with row-group metadata skipped. Served from a cache
+    * keyed by (qualified path, length, modification time), so a file
+    * rewritten in place is re-read on the next call.
+    */
+  def fileMetaData(file: FileStatus, conf: Configuration): FileMetaData = {
+    val key = file.getPath.toString
+    val hit = footers.get(key)
+    if (hit != null && hit.len == file.getLen &&
+        hit.mtime == file.getModificationTime) hit.meta
+    else {
+      val opts = HadoopReadOptions.builder(conf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf), opts)
+      val meta =
+        try reader.getFooter.getFileMetaData
+        finally reader.close()
+      footers.put(key, CachedFooter(file.getLen, file.getModificationTime, meta))
+      meta
+    }
+  }
+
+  /** The file whose footer Spark's non-merging parquet schema
+    * inference reads for `root`: the root itself when it is a file;
+    * for a directory, over every leaf file Spark would list (recursive,
+    * hidden names skipped) sorted by path, the first `_common_metadata`,
+    * else the first `_metadata`, else the first data file. None when
+    * `root` is missing or holds no such file.
+    */
+  def schemaFile(root: Path, conf: Configuration): Option[FileStatus] = {
+    val fs = root.getFileSystem(conf)
+    val st =
+      try fs.getFileStatus(root)
+      catch { case _: java.io.FileNotFoundException => return None }
+    if (st.isFile) Some(st)
+    else {
+      val leaves = leafFiles(fs, root).sortBy(_.getPath.toString)
+      val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+        ParquetFileWriter.PARQUET_METADATA_FILE)
+      summaries.iterator.flatMap(n => leaves.find(_.getPath.getName == n)).nextOption()
+        .orElse(leaves.find(f => !summaries.contains(f.getPath.getName)))
+    }
+  }
+
+  // Spark's listing filter (HadoopFSUtils.shouldFilterOutPathName):
+  // skip `_x` (unless a `k=v` partition dir) and `.x` names and
+  // in-flight `._COPYING_` files, but keep the parquet summary files
+  private def listed(name: String): Boolean =
+    name.startsWith("_common_metadata") || name.startsWith("_metadata") ||
+      !((name.startsWith("_") && !name.contains("=")) ||
+        name.startsWith(".") || name.endsWith("._COPYING_"))
+
+  private def leafFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter(f => listed(f.getPath.getName)).flatMap { f =>
+      if (f.isDirectory) leafFiles(fs, f.getPath) else Seq(f)
+    }
 
   /** Root paths of a DataFrame that is a PLAIN parquet scan (no
     * projection, filter or join above the relation) — the only shape a

@@ -1,7 +1,12 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Typed access to the shared test tables plus the canonical tick view.
   *
@@ -14,12 +19,41 @@ import org.apache.spark.sql.functions._
   * DataFrame and runs unchanged over any conforming source — batch
   * parquet, a [[graft.tsdb.TickStore]], or a stream.
   *
+  * Schema contract: a bare `spark.read.parquet` launches one
+  * schema-inference Spark job (~60–120 ms) per read, so every query
+  * build would pay it once per table. [[read]] instead derives the
+  * schema on the driver from the parquet footer and reads with
+  * `spark.read.schema(s)`, so no job runs before the query's own
+  * action:
+  *  - the footer is read by [[LocalParquet.fileMetaData]], cached per
+  *    (qualified path, length, modification time) — metadata only,
+  *    one entry per path, replaced when the file changes;
+  *  - it is converted on EVERY call with Spark's own
+  *    `ParquetFileFormat.readSchemaFromFooter` and a
+  *    `ParquetToSparkSchemaConverter` built from the calling session's
+  *    conf, so the row-metadata key, TIMESTAMP_NTZ inference and the
+  *    binary/INT96 flags behave exactly as the inference job does;
+  *  - a directory root resolves from the footer Spark's non-merging
+  *    inference would touch ([[LocalParquet.schemaFile]]); partition
+  *    columns are still discovered from the paths;
+  *  - a missing path, a directory with no parquet file, or a session
+  *    with `spark.sql.parquet.mergeSchema` on reads through Spark's own
+  *    inference (and fails the same way it always did).
+  * [[graft.tsdb.TickStore]] owns its layout and reads with its declared
+  * schema instead.
+  *
   * Scale note: these are lazy scans — Catalyst pushes filters and prunes
   * columns into the parquet reader, so a 100 TB `events` table is only
   * read in the row groups / columns a query touches.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    read(spark, s"$dir/$name.parquet")
+
+  /** Parquet file or directory at `path`, read with its footer-derived
+    * schema ([[schemaOf]]).
+    */
+  def read(spark: SparkSession, path: String): DataFrame = {
     // Every timestamp column in the regenerated testdata is
     // TIMESTAMP_NTZ; comparisons against session-zoned literals wrap
     // the COLUMN in a cast, which V1 parquet pushdown cannot
@@ -27,7 +61,26 @@ object Tables {
     // every such filter, so install it on whatever session is in use
     // (idempotent; driver-created sessions have no extensions hook).
     graft.plans.GraftOptimizations.install(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    schemaOf(spark, path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** The data schema Spark's inference would give `path`, derived on
+    * the driver from one cached footer; None when inference has to run
+    * (see the schema contract above).
+    */
+  private def schemaOf(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) return None
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    LocalParquet.schemaFile(new Path(path), hadoopConf).map { f =>
+      val meta = LocalParquet.fileMetaData(f, hadoopConf)
+      ParquetFileFormat.readSchemaFromFooter(
+        new Footer(f.getPath, new ParquetMetadata(meta, java.util.Collections.emptyList())),
+        new ParquetToSparkSchemaConverter(conf))
+    }
   }
 
   /** Canonical tick view: (event_id, symbol, ts, price, volume). */

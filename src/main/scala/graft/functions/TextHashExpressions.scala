@@ -247,11 +247,25 @@ object GraftFunctions {
   // shared session's registry. Registration is idempotent (the
   // builders are static), so one pass per session suffices; weak keys
   // let short-lived sessions (TickStore per-write newSession) collect.
+  // Each session's flag doubles as its registration lock and is set
+  // only after every function exists: a concurrent first caller waits
+  // instead of resolving a half-registered set, and a throw mid-way
+  // leaves the flag unset so the next call retries.
   private val registered = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+    new java.util.WeakHashMap[SparkSession, java.util.concurrent.atomic.AtomicBoolean]())
 
   def register(spark: SparkSession): Unit = {
-    if (registered.putIfAbsent(spark, java.lang.Boolean.TRUE) != null) return
+    val done = registered.computeIfAbsent(spark,
+      _ => new java.util.concurrent.atomic.AtomicBoolean(false))
+    if (!done.get) done.synchronized {
+      if (!done.get) {
+        createAll(spark)
+        done.set(true)
+      }
+    }
+  }
+
+  private def createAll(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction("graft_minhash", {
       case Seq(t) => MinHashSig(t, 3, 16)

@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Structured Streaming ingest and windowed aggregation — the Spark
   * analog of the reference's background writer thread + live queries
@@ -62,17 +61,13 @@ object Streams {
   final case class VwapState(n: Long, pvCents: Long, v: Long)
   final case class VwapOut(symbol: String, n_ticks: Long, running_vwap: Double)
 
-  private val rawEventsSchema = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampNTZType), // parquet TIMESTAMP(MICROS), isAdjustedToUTC=false
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
+  /** Ticks streamed from the parquet files in `dir` matching `glob`,
+    * read with the batch schema of `dir/events.parquet`
+    * ([[graft.core.Tables.eventsRaw]]: footer-derived, ts TIMESTAMP_NTZ).
+    */
   private def tickStreamFrom(spark: SparkSession, dir: String, glob: String): DataFrame =
     spark.readStream
-      .schema(rawEventsSchema)
+      .schema(graft.core.Tables.eventsRaw(spark, dir).schema)
       .option("pathGlobFilter", glob)
       .parquet(dir)
       .select(col("event_id"), col("event_type").as("symbol"),
@@ -93,7 +88,7 @@ object Streams {
 
   private def sentinelInput(spark: SparkSession, dir: String): String =
     sentinelCache.computeIfAbsent(dir, _ => {
-      val maxTs = spark.read.parquet(s"$dir/events.parquet")
+      val maxTs = graft.core.Tables.eventsRaw(spark, dir)
         .agg(max(col("ts"))).head().getAs[java.time.LocalDateTime](0)
       val base = Paths.get(graft.core.TempDirs.scoped("graft_stream_in_"))
       val in = Files.createDirectory(base.resolve("in"))
@@ -491,13 +486,6 @@ object Streams {
       .orderBy("symbol", "bar_start_us")
   }
 
-  private val docsSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   /** NEW r14: STREAMING near-dup candidate flags — documents arriving
     * on a stream are MinHash-banded in-flight (the same single-pass
     * codegen'd signature expression the batch path uses) and joined
@@ -525,7 +513,7 @@ object Streams {
       .bandedSigs(graft.core.Tables.documents(spark, dir))
       .select(col("doc_id").as("corpus_doc"), col("band_id"), col("band_hash"))
     val streamed = spark.readStream
-      .schema(docsSchema)
+      .schema(graft.core.Tables.documents(spark, dir).schema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))

@@ -127,7 +127,14 @@ final class TickStore(spark: SparkSession, path: String,
       col("price"), col("volume")))
   }
 
-  private def raw(): DataFrame = spark.read.parquet(path)
+  /** Reads with the schema this store owns ([[TickStore.schema]]), never
+    * an inferred one: inference would type an all-digit `symbol=0700`
+    * partition as int (reading back `700`, and [[compact]] would then
+    * write `symbol=700/`), costs a Spark job per read, and throws on an
+    * empty store directory.
+    */
+  private def raw(): DataFrame =
+    spark.read.schema(TickStore.schema(dailyPartitions)).parquet(path)
 
   /** Full store scan (lazy). Partition column is re-ordered first. */
   def all(): DataFrame = raw().select(cols.map(col): _*)
@@ -540,6 +547,17 @@ final class TickStore(spark: SparkSession, path: String,
 
 object TickStore {
   val cols: Seq[String] = Seq("symbol", "ts", "price", "volume")
+
+  /** The stored layout: data columns as [[TickStore.ingest]] writes
+    * them, then the partition columns, which are typed from here rather
+    * than inferred from directory names.
+    */
+  def schema(dailyPartitions: Boolean): StructType = StructType(Seq(
+    StructField("ts", TimestampType),
+    StructField("price", DoubleType),
+    StructField("volume", LongType),
+    StructField("symbol", StringType)) ++
+    (if (dailyPartitions) Seq(StructField("ts_date", DateType)) else Nil))
 
   /** One µs-writing session per base session (shared SparkContext,
     * isolated SQLConf): `spark.sql.parquet.outputTimestampType =

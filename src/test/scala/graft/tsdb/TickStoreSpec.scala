@@ -146,4 +146,40 @@ class TickStoreSpec extends AnyFunSuite {
     s2.importCsv(s"$base/in", "ERR")
     assert(s2.count("ERR") === 50)
   }
+
+  test("numeric symbols round-trip append -> read -> compact -> count on both layouts") {
+    for (daily <- Seq(false, true)) {
+      val p = Files.createTempDirectory(s"ts_numsym_${daily}_").toString
+      val s2 = new TickStore(spark, p, dailyPartitions = daily)
+      val t0 = java.sql.Timestamp.valueOf("2024-03-01 09:30:00")
+      val t1 = java.sql.Timestamp.valueOf("2024-03-01 15:00:00") // same day: 2 files per partition
+      for (sym <- Seq("0700", "600519"); (t, i) <- Seq(t0, t1).zipWithIndex)
+        s2.append(sym, t, 100.0 + i, 10L + i)
+      assert(s2.all().schema("symbol").dataType === org.apache.spark.sql.types.StringType)
+      assert(s2.all().select("symbol").distinct().collect().map(_.getString(0)).toSet ===
+        Set("0700", "600519"), s"daily=$daily")
+      assert(s2.count("0700") === 2)
+      assert(s2.queryRange("0700", t0, t1).count() === 2)
+      assert(s2.queryLast("600519", 1).head().getTimestamp(1) === t1)
+      assert(s2.compact() > 0)
+      val symDirs = new java.io.File(p).list().filter(_.startsWith("symbol=")).toSet
+      assert(symDirs === Set("symbol=0700", "symbol=600519"), s"daily=$daily")
+      assert(s2.count("0700") === 2, s"daily=$daily")
+      assert(s2.count("600519") === 2, s"daily=$daily")
+      assert(s2.countAll() === 4)
+      graft.core.TempDirs.delete(p)
+    }
+  }
+
+  test("an empty store directory reads as 0 ticks on both layouts") {
+    for (daily <- Seq(false, true)) {
+      val p = Files.createTempDirectory(s"ts_empty_${daily}_").toString
+      val s2 = new TickStore(spark, p, dailyPartitions = daily)
+      assert(s2.countAll() === 0L)
+      assert(s2.count("click") === 0L)
+      assert(s2.queryLast("click", 5).collect().isEmpty)
+      assert(s2.all().columns.toSeq === TickStore.cols)
+      graft.core.TempDirs.delete(p)
+    }
+  }
 }
