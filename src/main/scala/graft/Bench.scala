@@ -255,32 +255,32 @@ object Bench {
     // the README claims. Driver-tracked so a serve-path regression
     // (cache loss, per-query replan) shows up in BENCH deltas.
     val serveDir = graft.core.TempDirs.scoped("graft_bench_serve_")
-    def serveQueries(n: Int): String = {
-      val cmds = new StringBuilder()
-      (0 until n).foreach { i =>
-        val start = 1700000000L + (i % 997)
-        cmds.append(s"query NVDA $start ${start + 50}\n")
-      }
-      cmds.append("exit\n").toString
-    }
-    def serveTimings(cmds: String): Vector[Double] = {
+    def p50(xs: Vector[Double]): Double =
+      if (xs.isEmpty) -1.0 else xs.sorted.apply((0.50 * (xs.length - 1)).round.toInt)
+    // one fresh serve() per probe (so a fresh cache): runs 201 copies
+    // of `cmd(i)` and parses the loop's own `(N ms)` lines — the FIRST
+    // command pays the cold load, the p50 is over the 200 warm ones
+    def serveProbe(embDir: Option[String])(cmd: Int => String): (Double, Double) = {
+      val cmds = (0 until 201).map(i => cmd(i) + "\n").mkString + "exit\n"
       val bout = new java.io.ByteArrayOutputStream()
       graft.Cli.serve(spark, serveDir,
         new java.io.BufferedReader(new java.io.StringReader(cmds)),
-        new java.io.PrintStream(bout, true))
-      "\\(([\\d.]+) ms\\)".r.findAllMatchIn(bout.toString)
+        new java.io.PrintStream(bout, true), embDir = embDir)
+      val t = "\\(([\\d.]+) ms\\)".r.findAllMatchIn(bout.toString)
         .map(_.group(1).toDouble).toVector
+      (t.headOption.getOrElse(-1.0), p50(t.drop(1)))
     }
-    def p50(xs: Vector[Double]): Double =
-      if (xs.isEmpty) -1.0 else xs.sorted.apply((0.50 * (xs.length - 1)).round.toInt)
+    // point-range reads against one cached symbol
+    def tickProbe(): (Double, Double) =
+      serveProbe(sys.env.get("GRAFT_EMB_DIR")) { i =>
+        val start = 1700000000L + (i % 997)
+        s"query NVDA $start ${start + 50}"
+      }
     graft.Cli.run(spark, serveDir, Array("benchmark", "NVDA", "100000"))
-    // each serve() call builds a fresh cache: the FIRST query pays the
-    // one partition-pruned Spark scan (cold path, Cli.warm) — reported
-    // as serve_cold_ms so a symbol-cache-load regression is visible;
-    // the rest are warm binary-search reads.
-    val idleTimes = serveTimings(serveQueries(201))
-    val serveColdMs = idleTimes.headOption.getOrElse(-1.0)
-    val serveP50Ms = p50(idleTimes.drop(1))
+    // the cold first query is reported as serve_cold_ms so a
+    // symbol-cache-load regression is visible; the rest are warm
+    // binary-search reads
+    val (serveColdMs, serveP50Ms) = tickProbe()
 
     // serve under ingest — the reference's background-writer/reader-
     // lock design (timeseries_db.hpp:13-17) exercised for real: a
@@ -305,69 +305,25 @@ object Bench {
       })
       writer.setDaemon(true)
       writer.start()
-      val t = serveTimings(serveQueries(201))
+      val (_, warmP50) = tickProbe()
       stop.set(true)
       writer.join(60000)
-      p50(t.drop(1))
+      warmP50
     }
 
-    // r15 (r14 verdict item 4): warm ANN-serve latency — 200 `ann`
-    // queries through the SAME Cli serve loop, answered driver-side
-    // from the cached IVFPQ artifact (digest-shared with the timed
-    // q_ann_ivfpq run, so the index build is not billed here). The
-    // first query pays the probed-cell warm (one pruned Spark read —
-    // reported as serve_ann_cold_ms); the rest are pure driver math,
-    // the reference-class interactive-retrieval latency.
-    val (serveAnnColdMs, serveAnnP50Ms) = {
-      val annQids = Seq(0L, 7L, 42L, 99L, 250L)
-      val cmds = new StringBuilder()
-      (0 until 201).foreach(i =>
-        cmds.append(s"ann ${annQids(i % annQids.size)} 10\n"))
-      cmds.append("exit\n")
-      val bout = new java.io.ByteArrayOutputStream()
-      graft.Cli.serve(spark, serveDir,
-        new java.io.BufferedReader(new java.io.StringReader(cmds.toString)),
-        new java.io.PrintStream(bout, true), embDir = Some(sfDir))
-      val t = "\\(([\\d.]+) ms\\)".r.findAllMatchIn(bout.toString)
-        .map(_.group(1).toDouble).toVector
-      (t.headOption.getOrElse(-1.0), p50(t.drop(1)))
-    }
-
-    // r16: warm BM25-serve latency — 200 `search` queries through the
-    // same Cli serve loop, answered driver-side from the cached
-    // postings buckets (digest-shared with the timed q_bm25_indexed
-    // run). First query pays the probed-bucket warm (one pruned Spark
-    // read — serve_bm25_cold_ms); the rest are pure driver scoring.
-    val (serveBm25ColdMs, serveBm25P50Ms) = {
-      val cmds = new StringBuilder()
-      (0 until 201).foreach(_ => cmds.append("search dup spark join\n"))
-      cmds.append("exit\n")
-      val bout = new java.io.ByteArrayOutputStream()
-      graft.Cli.serve(spark, serveDir,
-        new java.io.BufferedReader(new java.io.StringReader(cmds.toString)),
-        new java.io.PrintStream(bout, true), embDir = Some(sfDir))
-      val t = "\\(([\\d.]+) ms\\)".r.findAllMatchIn(bout.toString)
-        .map(_.group(1).toDouble).toVector
-      (t.headOption.getOrElse(-1.0), p50(t.drop(1)))
-    }
-
-    // r18 (the r17 verdict's #7): warm HYBRID-serve latency — 200
-    // `hybrid` queries (RRF fusion of the warm BM25 + warm IVFPQ
-    // tiers) through the same Cli serve loop; first query pays both
-    // tiers' warms (serve_hybrid_cold_ms), the rest are pure driver
-    // scoring + fusion.
-    val (serveHybridColdMs, serveHybridP50Ms) = {
-      val cmds = new StringBuilder()
-      (0 until 201).foreach(_ => cmds.append("hybrid 0 dup spark join\n"))
-      cmds.append("exit\n")
-      val bout = new java.io.ByteArrayOutputStream()
-      graft.Cli.serve(spark, serveDir,
-        new java.io.BufferedReader(new java.io.StringReader(cmds.toString)),
-        new java.io.PrintStream(bout, true), embDir = Some(sfDir))
-      val t = "\\(([\\d.]+) ms\\)".r.findAllMatchIn(bout.toString)
-        .map(_.group(1).toDouble).toVector
-      (t.headOption.getOrElse(-1.0), p50(t.drop(1)))
-    }
+    // r15-r18: warm retrieval latency through the SAME Cli serve loop,
+    // answered driver-side from the cached IVFPQ cells / BM25 postings
+    // (digest-shared with the timed q_ann_ivfpq / q_bm25_indexed runs,
+    // so no index build is billed here). The first query pays the
+    // probed cells'/terms' warm; the rest are pure driver math. `hybrid`
+    // fuses both warm tiers by RRF.
+    val annQids = Seq(0L, 7L, 42L, 99L, 250L)
+    val (serveAnnColdMs, serveAnnP50Ms) =
+      serveProbe(Some(sfDir))(i => s"ann ${annQids(i % annQids.size)} 10")
+    val (serveBm25ColdMs, serveBm25P50Ms) =
+      serveProbe(Some(sfDir))(_ => "search dup spark join")
+    val (serveHybridColdMs, serveHybridP50Ms) =
+      serveProbe(Some(sfDir))(_ => "hybrid 0 dup spark join")
 
     // ANN retrieval quality, round-tracked: recall@10 vs the exact
     // brute-force ranking on RecallSpec's fixed 5-query panel, at the

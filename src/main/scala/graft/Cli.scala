@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.ServeCache
+import graft.core.LocalParquet.localFirst
 import graft.tsdb.TickStore
 
 /** Command-line parity with the reference `tsdb_cli`
@@ -36,6 +38,14 @@ object Cli {
 
   private def ts(epochSec: Long) = new java.sql.Timestamp(epochSec * 1000L)
 
+  /** One tick as every `query`/`last` reply prints it. */
+  private def tickLine(sec: Long, price: Double, volume: Long): String =
+    f"Timestamp: $sec Price: $price%.2f Volume: $volume"
+
+  /** A Spark-path [[TickStore]] row (symbol, ts, price, volume). */
+  private def tickLine(r: Row): String =
+    tickLine(r.getTimestamp(1).getTime / 1000, r.getDouble(2), r.getLong(3))
+
   /** Testable entry point; returns an exit code. */
   def run(spark: SparkSession, dataDir: String, args: Array[String]): Int = {
     if (args.isEmpty) { help(); return 1 }
@@ -48,18 +58,12 @@ object Cli {
       case "query" if args.length == 4 =>
         val rows = store.queryRange(args(1), ts(args(2).toLong), ts(args(3).toLong)).collect()
         println(s"Found ${rows.length} results:")
-        rows.foreach { r =>
-          println(f"Timestamp: ${r.getTimestamp(1).getTime / 1000} " +
-            f"Price: ${r.getDouble(2)}%.2f Volume: ${r.getLong(3)}")
-        }
+        rows.foreach(r => println(tickLine(r)))
         0
       case "last" if args.length == 3 =>
         val rows = store.queryLast(args(1), args(2).toInt).collect()
         println(s"Last ${rows.length} ticks for ${args(1)}:")
-        rows.foreach { r =>
-          println(f"Timestamp: ${r.getTimestamp(1).getTime / 1000} " +
-            f"Price: ${r.getDouble(2)}%.2f Volume: ${r.getLong(3)}")
-        }
+        rows.foreach(r => println(tickLine(r)))
         0
       case "benchmark" if args.length == 3 =>
         val n = args(2).toInt
@@ -164,9 +168,10 @@ object Cli {
     *    Spark scan (cold but correct); `count` serves from a full
     *    count cached at warm time.
     *  - SYMBOLS: at most `maxSymbols` symbols stay cached
-    *    (`GRAFT_SERVE_MAX_SYMBOLS`, default 64), LRU-evicted via an
-    *    access-ordered LinkedHashMap — the warm set follows the query
-    *    mix; an evicted symbol pays one re-warm scan on next touch.
+    *    (`GRAFT_SERVE_MAX_SYMBOLS`, default 64), LRU-evicted by the
+    *    shared [[graft.core.ServeCache]] — the warm set follows the
+    *    query mix; an evicted symbol pays one re-warm scan on next
+    *    touch, and an `insert` invalidates its symbol.
     *
     * Protocol (one command per line, results + `(N ms)` timing):
     * {{{
@@ -212,74 +217,57 @@ object Cli {
         out.println(s"prewarm: ${e.getMessage}")
       }
     }
-    val cache = new java.util.LinkedHashMap[String, SymCache](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, SymCache]): Boolean =
-        size() > maxSymbols
-    }
-    def warm(sym: String): SymCache = {
-      val hit = cache.get(sym)
-      if (hit != null) hit
+    // the tick store keeps no versions: this loop's own `insert`
+    // invalidates its symbol instead
+    val cache = new ServeCache[String, SymCache](maxSymbols, _ => 0L)
+    def load(sym: String): SymCache = {
+      // r13 cold path: (count, max ts) come from parquet FOOTERS
+      // driver-side (symbolStatsFast — no Spark job; the footers are
+      // the per-symbol stats sidecar, maintained by every
+      // ingest/compact commit by construction), falling back to the
+      // fused stats aggregation for pre-r13 INT96 stores
+      val (total, maxTs) = localFirst("serve symbol stats")(
+        store.symbolStatsFast(sym))(store.symbolStats(sym))
+      if (total == 0L) SymCache(0L, 0L, Array.empty, Array.empty, Array.empty)
       else {
-        // r13 cold path: (count, max ts) come from parquet FOOTERS
-        // driver-side (symbolStatsFast — no Spark job; the footers are
-        // the per-symbol stats sidecar, maintained by every
-        // ingest/compact commit by construction), falling back to the
-        // fused stats aggregation for pre-r13 INT96 stores
-        val (total, maxTs) = store.symbolStatsFast(sym)
-          .getOrElse(store.symbolStats(sym))
-        val loaded =
-          if (total == 0L)
-            SymCache(0L, 0L, Array.empty, Array.empty, Array.empty)
-          else {
-            val maxSec = maxTs.get.getTime / 1000L
-            val fromSec = maxSec - windowDays.toLong * 86400L
-            // the window ticks read DRIVER-SIDE from the symbol's
-            // parquet files (scanRangeLocal — the reference's
-            // mmap'd-column-files analog, with ts row-group skipping;
-            // a Spark job pays ~250 ms of scheduling/serialization for
-            // the same bytes), falling back to a pruned Spark scan for
-            // pre-r13 INT96 stores. End bound is the UNTRUNCATED max
-            // ts: a whole-second end would silently drop the newest
-            // fractional second while `total` counts it (r12 ADVICE).
-            val endUs = Math.floorDiv(maxTs.get.getTime, 1000L) * 1000000L +
-              maxTs.get.getNanos / 1000L
-            store.scanRangeLocal(sym, fromSec * 1000000L, endUs) match {
-              case Some((us, pr, vo)) =>
-                // joint stable sort by ts (files/groups may interleave)
-                val order = us.indices.toArray.sortBy(us)
-                SymCache(fromSec, total,
-                  order.map(i => Math.floorDiv(us(i), 1000000L)),
-                  order.map(pr), order.map(vo))
-              case None =>
-                // null price/volume coalesce to 0 so this fallback and
-                // the fast path agree on degenerate rows (r13 ADVICE:
-                // getDouble/getLong NPE'd here where scanRangeLocal
-                // zero-filled)
-                val rows = store.scanRange(sym,
-                  new java.sql.Timestamp(fromSec * 1000L), maxTs.get)
-                  .select(unix_micros(col("ts")),
-                    coalesce(col("price"), lit(0.0)),
-                    coalesce(col("volume"), lit(0L)))
-                  .collect()
-                  .sortBy(_.getLong(0))
-                SymCache(fromSec, total,
-                  rows.map(r => Math.floorDiv(r.getLong(0), 1000000L)),
-                  rows.map(_.getDouble(1)), rows.map(_.getLong(2)))
-            }
-          }
-        cache.put(sym, loaded)
-        loaded
+        val maxSec = maxTs.get.getTime / 1000L
+        val fromSec = maxSec - windowDays.toLong * 86400L
+        // the window ticks read DRIVER-SIDE from the symbol's parquet
+        // files (scanRangeLocal — the reference's mmap'd-column-files
+        // analog, with ts row-group skipping; a Spark job pays ~250 ms
+        // of scheduling/serialization for the same bytes), falling back
+        // to a pruned Spark scan for pre-r13 INT96 stores. End bound is
+        // the UNTRUNCATED max ts: a whole-second end would silently drop
+        // the newest fractional second while `total` counts it (r12
+        // ADVICE). Both paths yield (epoch µs, price, volume) sorted by
+        // ts (a stable sort: files/groups may interleave).
+        val endUs = Math.floorDiv(maxTs.get.getTime, 1000L) * 1000000L +
+          maxTs.get.getNanos / 1000L
+        val (us, pr, vo) = localFirst("serve window scan")(
+          store.scanRangeLocal(sym, fromSec * 1000000L, endUs).map {
+            case (us, pr, vo) =>
+              val order = us.indices.toArray.sortBy(us)
+              (order.map(us), order.map(pr), order.map(vo))
+          }) {
+          // null price/volume coalesce to 0 so this fallback and the
+          // fast path agree on degenerate rows (r13 ADVICE:
+          // getDouble/getLong NPE'd here where scanRangeLocal
+          // zero-filled)
+          val rows = store.scanRange(sym,
+            new java.sql.Timestamp(fromSec * 1000L), maxTs.get)
+            .select(unix_micros(col("ts")),
+              coalesce(col("price"), lit(0.0)),
+              coalesce(col("volume"), lit(0L)))
+            .collect()
+            .sortBy(_.getLong(0))
+          (rows.map(_.getLong(0)), rows.map(_.getDouble(1)), rows.map(_.getLong(2)))
+        }
+        SymCache(fromSec, total, us.map(Math.floorDiv(_, 1000000L)), pr, vo)
       }
     }
-    def printSlice(c: SymCache, from: Int, until: Int): Unit = {
-      var i = from
-      while (i < until) {
-        out.println(f"Timestamp: ${c.ts(i)} Price: ${c.price(i)}%.2f " +
-          f"Volume: ${c.volume(i)}")
-        i += 1
-      }
-    }
+    def warm(sym: String): SymCache = cache.getOrLoadOne(sym)(load(sym))
+    def printTicks(c: SymCache, idx: Iterable[Int]): Unit =
+      idx.foreach(i => out.println(tickLine(c.ts(i), c.price(i), c.volume(i))))
     out.println("graft serve — warm session ready (exit to quit)")
     var done = false
     while (!done) {
@@ -288,9 +276,11 @@ object Cli {
       else {
         val t0 = System.nanoTime()
         val a = line.trim.split("\\s+")
-        try a(0) match {
-          case "" => ()
-          case "exit" | "quit" => done = true
+        // true when the command was answered: only answers carry the
+        // `(N ms)` timing line (blank lines, exit, help and errors don't)
+        try if (a(0) match {
+          case "" => false
+          case "exit" | "quit" => done = true; false
           case "query" if a.length == 4 =>
             val c = warm(a(1))
             val startSec = a(2).toLong
@@ -298,18 +288,15 @@ object Cli {
               val from = c.lowerBound(startSec)
               val until = c.lowerBound(a(3).toLong + 1) // inclusive end
               out.println(s"Found ${until - from} results:")
-              printSlice(c, from, until)
+              printTicks(c, from until until)
             } else {
               // range reaches past the cached window — pruned cold scan
               val rows = store.queryRange(a(1), ts(startSec),
                 ts(a(3).toLong)).collect()
               out.println(s"Found ${rows.length} results:")
-              rows.foreach { r =>
-                out.println(f"Timestamp: ${r.getTimestamp(1).getTime / 1000} " +
-                  f"Price: ${r.getDouble(2)}%.2f Volume: ${r.getLong(3)}")
-              }
+              rows.foreach(r => out.println(tickLine(r)))
             }
-            out.println(f"(${(System.nanoTime() - t0) / 1e6}%.2f ms)")
+            true
           case "last" if a.length == 3 =>
             val c = warm(a(1))
             val n0 = a(2).toInt
@@ -317,30 +304,22 @@ object Cli {
               val n = math.min(n0, c.ts.length)
               out.println(s"Last $n ticks for ${a(1)}:")
               // newest first, matching the one-shot `last` command
-              var i = c.ts.length - 1
-              while (i >= c.ts.length - n) {
-                out.println(f"Timestamp: ${c.ts(i)} Price: ${c.price(i)}%.2f " +
-                  f"Volume: ${c.volume(i)}")
-                i -= 1
-              }
+              printTicks(c, (c.ts.length - 1) to (c.ts.length - n) by -1)
             } else {
               // deeper than the cached window — pruned cold scan
               val rows = store.queryLast(a(1), n0).collect()
               out.println(s"Last ${rows.length} ticks for ${a(1)}:")
-              rows.foreach { r =>
-                out.println(f"Timestamp: ${r.getTimestamp(1).getTime / 1000} " +
-                  f"Price: ${r.getDouble(2)}%.2f Volume: ${r.getLong(3)}")
-              }
+              rows.foreach(r => out.println(tickLine(r)))
             }
-            out.println(f"(${(System.nanoTime() - t0) / 1e6}%.2f ms)")
+            true
           case "count" if a.length == 2 =>
             out.println(s"Count: ${warm(a(1)).total}")
-            out.println(f"(${(System.nanoTime() - t0) / 1e6}%.2f ms)")
+            true
           case "insert" if a.length == 5 =>
             store.append(a(1), ts(a(2).toLong), a(3).toDouble, a(4).toLong)
-            cache.remove(a(1)) // read-through refresh on next touch
+            cache.invalidate(a(1)) // read-through refresh on next touch
             out.println(s"Inserted tick for ${a(1)}")
-            out.println(f"(${(System.nanoTime() - t0) / 1e6}%.2f ms)")
+            true
           case "ann" if a.length == 3 =>
             annServe match {
               case Some(srv) =>
@@ -352,7 +331,7 @@ object Cli {
               case None =>
                 out.println("ann: no embeddings dir (set GRAFT_EMB_DIR)")
             }
-            out.println(f"(${(System.nanoTime() - t0) / 1e6}%.2f ms)")
+            true
           case "search" if a.length >= 2 =>
             bm25Serve match {
               case Some(srv) =>
@@ -372,7 +351,7 @@ object Cli {
               case None =>
                 out.println("search: no corpus dir (set GRAFT_EMB_DIR)")
             }
-            out.println(f"(${(System.nanoTime() - t0) / 1e6}%.2f ms)")
+            true
           case "hybrid" if a.length >= 3 =>
             // r17: warm hybrid retrieval — RRF fusion of the two warm
             // serve tiers (ANN by vector id + BM25 by terms), fused
@@ -394,11 +373,13 @@ object Cli {
               case _ =>
                 out.println("hybrid: no corpus dir (set GRAFT_EMB_DIR)")
             }
-            out.println(f"(${(System.nanoTime() - t0) / 1e6}%.2f ms)")
+            true
           case _ =>
             out.println(
               "commands: query|last|count|insert|ann|search|hybrid|exit")
-        } catch {
+            false
+        }) out.println(f"(${(System.nanoTime() - t0) / 1e6}%.2f ms)")
+        catch {
           case e: Exception => out.println(s"error: ${e.getMessage}")
         }
       }

@@ -22,12 +22,32 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
   * term/id-filtered read skips non-matching row groups exactly like
   * the pushed-down Spark scan would.
   *
-  * Callers of the row readers must treat any exception as "fall back
-  * to the Spark path" — these helpers throw rather than guess on
-  * unexpected layouts. The footer helpers ([[fileMetaData]],
-  * [[schemaFile]]) back [[Tables]]' job-free schema resolution.
+  * The row readers throw rather than guess on unexpected layouts;
+  * serve callers wrap them in [[localFirst]], which answers from Spark
+  * instead. The footer helpers ([[fileMetaData]], [[schemaFile]]) back
+  * [[Tables]]' job-free schema resolution.
   */
 object LocalParquet {
+
+  /** The one local-read-with-fallback rule of the serve tiers: answer
+    * from the driver-side read `local` when it can, else from `spark`.
+    * `local` returning None is a documented decline (an INT96 store, a
+    * table of more than 64 files, an id the read did not find) and
+    * falls back silently. A thrown exception also falls back, after
+    * one stderr line naming `site` and the exception — a fallback is
+    * never silent about a failure. Exceptions from `spark` propagate.
+    */
+  def localFirst[T](site: String)(local: => Option[T])(spark: => T): T = {
+    val got =
+      try local
+      catch {
+        case e: Exception =>
+          System.err.println(s"[graft] $site: driver-side read failed, " +
+            s"answering from Spark: $e")
+          None
+      }
+    got.getOrElse(spark)
+  }
 
   // small shared pool for fanning reader opens across files/partitions:
   // parquet-mr pays ~10-15 ms of footer/filesystem/codec setup PER

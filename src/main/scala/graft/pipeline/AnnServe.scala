@@ -1,7 +1,11 @@
 package graft.pipeline
 
+import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.{LocalParquet, ServeCache}
+import graft.core.LocalParquet.localFirst
 
 /** r15 (the r14 verdict's item 4): WARM driver-side ANN serving — the
   * TickStore `scanRangeLocal`/serve-cache posture applied to
@@ -33,144 +37,101 @@ class AnnServe private (
   import PqIndex.q6
 
   // r17 (ADVICE): a single query probing more cells than the cache
-  // holds would SELF-EVICT mid-pass (cells loaded early in warmCells
-  // evicted before scoring reads them — silently dropped candidates,
-  // no error). Guard the configuration instead of failing quietly.
+  // holds would SELF-EVICT mid-pass (cells loaded early evicted by
+  // later ones, so every repeat reloads them all). Guard the
+  // configuration instead of degrading quietly.
   require(nprobe <= maxCells,
     s"nprobe=$nprobe exceeds the cell cache bound maxCells=$maxCells — " +
       "a query would evict its own probes mid-pass")
 
-  /** `version` = the index version the arrays were loaded at — a cell
-    * whose [[IvfPqIndex.cellVersion]] has advanced past it was appended
-    * into since the load and must reload (r16, the r15 verdict's #2:
-    * without this a warm cell silently serves the pre-append array
-    * forever while the Spark query path sees the appended vectors).
+  /** A probed cell's rows sorted by vec_id. Cached at the
+    * [[IvfPqIndex.cellVersion]] it was loaded at: a cell appended into
+    * or deleted from since then is stale and reloads (r16, the r15
+    * verdict's #2: without this a warm cell silently serves the
+    * pre-append array forever while the Spark query path sees the
+    * appended vectors).
     */
   private final case class CellData(
-      ids: Array[Long], codes: Array[Array[Int]], embs: Array[Array[Float]],
-      version: Long)
+      ids: Array[Long], codes: Array[Array[Int]], embs: Array[Array[Float]])
 
-  private val cellCache =
-    new java.util.LinkedHashMap[Int, CellData](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Int, CellData]): Boolean = size() > maxCells
-    }
+  private val cellCache = new ServeCache[Int, CellData](maxCells, index.cellVersion)
 
-  private def isFresh(cell: Int): Boolean = {
-    val cd = cellCache.get(cell)
-    cd != null && index.cellVersion(cell) <= cd.version
-  }
+  // query-vector read-through cache (ids served repeatedly stay warm);
+  // a vector never changes under its id, so entries never go stale
+  private val vecCache = new ServeCache[Long, Array[Float]](4096, _ => 0L)
 
-  // query-vector read-through cache (ids served repeatedly stay warm)
-  private val vecCache =
-    new java.util.LinkedHashMap[Long, Array[Float]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Long, Array[Float]]): Boolean = size() > 4096
-    }
-
-  /** Load every missing probed cell — driver-side parquet reads of the
-    * cell partitions first (r20, the scanRangeLocal posture: no Spark
-    * job on the serve path), falling back to ONE pruned Spark read on
-    * any unexpected layout. Warm queries never reach here.
+  /** The probed cells' rows — cached cells as they are, missing or
+    * stale ones loaded driver-side from the cell partitions (r20, the
+    * scanRangeLocal posture: no Spark job on the serve path), else by
+    * ONE pruned Spark read. Warm queries never load.
     */
-  private def warmCells(probes: Seq[Int]): Map[Int, CellData] = {
-    // missing OR stale (appended-into since load) cells reload in ONE
-    // pruned read; the version is snapshotted BEFORE the read so an
-    // append racing the load marks the entry stale again, never fresh
-    val missing = probes.filter(c => !isFresh(c))
-    if (missing.nonEmpty) {
-      val loadVersions = missing.map(c => c -> index.cellVersion(c)).toMap
+  private def warmCells(probes: Seq[Int]): Map[Int, CellData] =
+    cellCache.getOrLoad(probes) { missing =>
       // both paths produce (cell -> rows sorted by vec_id); the local
-      // map carries EVERY requested cell (empty cells as empty arrays),
-      // the Spark map only the non-empty ones — the placeholder loop
-      // below covers the difference either way
+      // map carries every requested cell, the Spark map only the
+      // non-empty ones — empty cells cache as empty arrays either way
       val byCell: Map[Int, Array[(Long, Array[Int], Array[Float])]] =
-        try index.cellRowsLocal(missing)
-        catch {
-          case e: Exception =>
-            if (sys.env.contains("GRAFT_SERVE_DEBUG")) e.printStackTrace()
-            index.codes()
-              .filter(col("cell").isin(missing: _*))
-              .select(col("cell"), col("vec_id"), col("codes"), col("embedding"))
-              .collect()
-              .groupBy(_.getInt(0))
-              .map { case (cell, rs) =>
-                cell -> rs.sortBy(_.getLong(1)).map(r => (r.getLong(1),
-                  r.getSeq[Int](2).toArray, r.getSeq[Float](3).toArray))
-              }
+        localFirst("ann cell load")(Some(index.cellRowsLocal(missing))) {
+          index.codes()
+            .filter(col("cell").isin(missing: _*))
+            .select(col("cell"), col("vec_id"), col("codes"), col("embedding"))
+            .collect()
+            .groupBy(_.getInt(0))
+            .map { case (cell, rs) =>
+              cell -> rs.sortBy(_.getLong(1)).map(r => (r.getLong(1),
+                r.getSeq[Int](2).toArray, r.getSeq[Float](3).toArray))
+            }
         }
-      byCell.foreach { case (cell, rs) =>
-        cellCache.put(cell, CellData(
-          rs.map(_._1), rs.map(_._2), rs.map(_._3), loadVersions(cell)))
+      byCell.map { case (cell, rs) =>
+        cell -> CellData(rs.map(_._1), rs.map(_._2), rs.map(_._3))
       }
-      // probed cells with zero vectors still cache (empty), so a
-      // repeat probe of an empty cell stays warm. r17 (ADVICE): "empty"
-      // is decided by what the LOAD returned (keys absent from `rows`),
-      // NEVER by a post-load isFresh re-check — an append racing
-      // between the version snapshot and that re-check would flip
-      // isFresh false for a cell just loaded WITH rows, and the
-      // placeholder would clobber real data for the in-flight query.
-      // With the snapshotted (pre-read) version, a raced entry is
-      // simply stale again and reloads on the next query.
-      missing.filterNot(byCell.contains)
-        .foreach(c => cellCache.put(c,
-          CellData(Array.empty, Array.empty, Array.empty, loadVersions(c))))
-    }
-    probes.map(c => c -> cellCache.get(c)).toMap
-  }
+    }(_ => CellData(Array.empty, Array.empty, Array.empty))
 
   // the embeddings table's file roots, when (and only when) `emb` is a
   // plain parquet scan a driver-side read can stand in for (r20)
   private lazy val embRoots: Option[Seq[org.apache.hadoop.fs.Path]] =
-    try graft.core.LocalParquet.plainParquetRoots(emb)
-    catch { case _: Exception => None }
+    localFirst("ann embeddings roots")(Some(LocalParquet.plainParquetRoots(emb)))(None)
 
-  /** Query vector by id: warm cells first, then one point lookup —
-    * driver-side with a parquet-mr vec_id filter (row-group stats and
-    * dictionary pages prune exactly like the pushed-down Spark scan;
-    * no job), Spark-scan fallback on non-plain tables or any read
-    * surprise. Served ids stay warm in the LRU either way.
+  /** Driver-side point lookup of `vecId`'s embedding with a parquet-mr
+    * vec_id filter (row-group stats and dictionary pages prune exactly
+    * like the pushed-down Spark scan; no job). None when `emb` is not
+    * a plain parquet table, has more than 64 files (a driver-side
+    * lookup would open every footer — that is the distributed scan's
+    * job), or holds no such id.
     */
-  private def vecFor(vecId: Long): Array[Float] = {
-    val hit = vecCache.get(vecId)
-    if (hit != null) return hit
-    val it = cellCache.values().iterator()
-    while (it.hasNext) {
-      val cd = it.next()
-      val i = java.util.Arrays.binarySearch(cd.ids, vecId)
-      if (i >= 0) { vecCache.put(vecId, cd.embs(i)); return cd.embs(i) }
-    }
-    val local: Option[Array[Float]] = embRoots.flatMap { roots =>
-      try {
-        import graft.core.LocalParquet
-        import org.apache.parquet.filter2.predicate.FilterApi
-        val conf = emb.sparkSession.sparkContext.hadoopConfiguration
-        val files = roots.flatMap(LocalParquet.dataFiles(_, conf))
-        // many-file tables: a driver-side point lookup would open every
-        // footer — that is the distributed scan's job; fall back
-        if (files.isEmpty || files.size > 64) None
-        else {
-          val pred = FilterApi.eq(FilterApi.longColumn("vec_id"),
-            java.lang.Long.valueOf(vecId))
-          // footer stats skip non-matching row groups per file; only
-          // the file holding the id decodes anything
-          LocalParquet.parMap(files) { f =>
-            var found: Option[Array[Float]] = None
-            LocalParquet.readGroups(f.getPath, conf, Some(pred)) { g =>
-              if (found.isEmpty)
-                found = Some(LocalParquet.floatArray(g, "embedding"))
-            }
-            found
-          }.flatten.headOption
-          // clean read, id absent → Spark path (throws as before)
+  private def vecLocal(vecId: Long): Option[Array[Float]] = embRoots.flatMap { roots =>
+    val conf = emb.sparkSession.sparkContext.hadoopConfiguration
+    val files = roots.flatMap(LocalParquet.dataFiles(_, conf))
+    if (files.isEmpty || files.size > 64) None
+    else {
+      val pred = FilterApi.eq(FilterApi.longColumn("vec_id"),
+        java.lang.Long.valueOf(vecId))
+      // footer stats skip non-matching row groups per file; only the
+      // file holding the id decodes anything
+      LocalParquet.parMap(files) { f =>
+        var found: Option[Array[Float]] = None
+        LocalParquet.readGroups(f.getPath, conf, Some(pred)) { g =>
+          if (found.isEmpty)
+            found = Some(LocalParquet.floatArray(g, "embedding"))
         }
-      } catch { case _: Exception => None }
+        found
+      }.flatten.headOption
     }
-    val v = local.getOrElse(
-      emb.filter(col("vec_id") === vecId)
-        .select(col("embedding")).head().getSeq[Float](0).toArray)
-    vecCache.put(vecId, v)
-    v
+  }
+
+  /** Query vector by id: warm cells first, then the driver-side point
+    * lookup, then a Spark scan (which throws on an unknown id). Served
+    * ids stay warm in the LRU either way.
+    */
+  private def vecFor(vecId: Long): Array[Float] = vecCache.getOrLoadOne(vecId) {
+    cellCache.values.iterator.flatMap { cd =>
+      val i = java.util.Arrays.binarySearch(cd.ids, vecId)
+      if (i >= 0) Some(cd.embs(i)) else None
+    }.nextOption().getOrElse(
+      localFirst("ann vector lookup")(vecLocal(vecId)) {
+        emb.filter(col("vec_id") === vecId)
+          .select(col("embedding")).head().getSeq[Float](0).toArray
+      })
   }
 
   /** r20 (the r19 verdict's #3, guide §4.5 init-once): warm the shared
@@ -194,15 +155,13 @@ class AnnServe private (
     // GroupReadSupport, filter2 classes — ~100 ms of one-time class
     // loading otherwise billed to the first cold query). Stats prune
     // every row group for vec_id = −1, so no data is read or cached.
-    try embRoots.foreach { roots =>
-      import graft.core.LocalParquet
-      import org.apache.parquet.filter2.predicate.FilterApi
+    localFirst("ann prewarm")(embRoots.map { roots =>
       val conf = emb.sparkSession.sparkContext.hadoopConfiguration
       val pred = FilterApi.eq(FilterApi.longColumn("vec_id"),
         java.lang.Long.valueOf(-1L))
       roots.flatMap(LocalParquet.dataFiles(_, conf)).headOption.foreach(f =>
         LocalParquet.readGroups(f.getPath, conf, Some(pred))(_ => ()))
-    } catch { case _: Exception => () }
+    })(())
   }
 
   /** Warm top-k by query id — the serve-loop entry point. */

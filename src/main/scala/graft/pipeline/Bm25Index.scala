@@ -52,13 +52,20 @@ class Bm25Index private (
       .map(_.dataType)
       .getOrElse(org.apache.spark.sql.types.StringType)).toMap
 
-  /** Current postings directory — swapped by [[compact]] (the
-    * [[IvfPqIndex.compact]] posture: appends fragment bucket
-    * partitions into many small files; compaction rewrites each bucket
-    * into one file under a fresh versioned dir, row-exactly).
+  /** Current postings directory and tombstone sidecar, replaced whole.
+    * [[compact]] swaps the directory (the [[IvfPqIndex.compact]]
+    * posture: appends fragment bucket partitions into many small files;
+    * compaction rewrites each bucket into one file under a fresh
+    * versioned dir, row-exactly) and retires the sidecar in the same
+    * assignment. The sidecar (r18, the r17 verdict's #1): the doc_ids
+    * logically deleted from the index — the Lucene deleted-docs bitset
+    * re-expressed as a (small) parquet id table, rewritten under a
+    * fresh versioned path per [[delete]] batch. `None` = nothing
+    * deleted (the common case pays zero overhead).
     */
-  @volatile private var postingsPath: String = initialPostingsPath
+  @volatile private var files = IndexFiles(initialPostingsPath, None)
   private var compactGen: Int = 0
+  private var tombGen: Int = 0
 
   private def spark = docs.sparkSession
   private[pipeline] def session = spark
@@ -93,23 +100,12 @@ class Bm25Index private (
     if (v == null) 0L else v.longValue()
   }
 
-  private[pipeline] def postingsDir: String = postingsPath
-
-  /** Tombstone sidecar (r18, the r17 verdict's #1): the doc_ids
-    * logically deleted from the index — the Lucene deleted-docs bitset
-    * re-expressed as a (small) parquet id table, swapped whole under a
-    * fresh versioned path per [[delete]] batch so the read-path switch
-    * is atomic. `None` = nothing deleted (the common case pays zero
-    * overhead). Physically dropped — and the sidecar retired — by
-    * [[compact]].
-    */
-  @volatile private var tombstonePath: Option[String] = None
-  private var tombGen: Int = 0
+  private[pipeline] def postingsDir: String = files.data
 
   /** Test hook: whether any tombstones are live (compaction retires
     * them).
     */
-  private[pipeline] def hasTombstones: Boolean = tombstonePath.nonEmpty
+  private[pipeline] def hasTombstones: Boolean = files.tombstones.nonEmpty
 
   /** The LOGICAL postings table — the stored rows minus tombstoned
     * docs. Every reader (queries, serves, compaction, stats audits)
@@ -118,11 +114,7 @@ class Bm25Index private (
     * the anti-join, so the partition-pruned + row-group-skip plan
     * shape is unchanged.
     */
-  private[pipeline] def readPostings: DataFrame = {
-    val p = spark.read.parquet(postingsPath)
-    tombstonePath.fold(p)(t =>
-      p.join(spark.read.parquet(t), Seq("doc_id"), "left_anti"))
-  }
+  private[pipeline] def readPostings: DataFrame = files.frame(spark, "doc_id")
 
   /** r20 (the r19 verdict's #3): driver-side df lookup for `terms` —
     * a term-filtered parquet-mr read of the vocabulary table (filter2
@@ -160,16 +152,8 @@ class Bm25Index private (
     import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
     import org.apache.parquet.io.api.Binary
     val conf = spark.sparkContext.hadoopConfiguration
-    val pp = postingsPath // volatile: snapshot once (compact may swap)
-    val dead: Set[Long] = tombstonePath match {
-      case None => Set.empty
-      case Some(t) =>
-        val b = Set.newBuilder[Long]
-        LocalParquet.dataFiles(new org.apache.hadoop.fs.Path(t), conf)
-          .foreach(f => LocalParquet.readGroups(f.getPath, conf, None)(g =>
-            b += g.getLong("doc_id", 0)))
-        b.result()
-    }
+    val cur = files // read once: a directory and its own mask
+    val dead = cur.deadIds(conf, "doc_id")
     val termSet = terms.toSet
     val pred = terms.map(t =>
       FilterApi.eq(FilterApi.binaryColumn("term"),
@@ -178,7 +162,7 @@ class Bm25Index private (
       val acc = scala.collection.mutable.Map
         .empty[(Int, String), scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]]
       LocalParquet.dataFiles(
-          new org.apache.hadoop.fs.Path(pp, s"bucket=$b"), conf)
+          new org.apache.hadoop.fs.Path(cur.data, s"bucket=$b"), conf)
         .foreach(f => LocalParquet.readGroups(f.getPath, conf, Some(pred)) { g =>
           val t = g.getString("term", 0)
           if (termSet(t)) {
@@ -224,14 +208,15 @@ class Bm25Index private (
   def delete(ids: DataFrame): Long = synchronized {
     val incoming = ids.select(col("doc_id").cast("long").as("doc_id"))
       .distinct()
-    val newIds = tombstonePath.fold(incoming)(t =>
+    val cur = files
+    val newIds = cur.tombstones.fold(incoming)(t =>
       incoming.join(spark.read.parquet(t), Seq("doc_id"), "left_anti"))
       .localCheckpoint() // three consumers: count, postings join, sidecar write
     val nDel = newIds.count()
     if (nDel == 0L) return 0L
     // the deleted docs' posting rows — the one postings scan; deltas,
     // touched buckets and the Σdl decrement all derive from it
-    val deleted = spark.read.parquet(postingsPath)
+    val deleted = spark.read.parquet(cur.data)
       .join(newIds, Seq("doc_id"))
       .select(col("bucket"), col("term"), col("doc_id"), col("dl"))
       .localCheckpoint()
@@ -253,7 +238,7 @@ class Bm25Index private (
       .agg(coalesce(sum(col("dl")), lit(0L)).as("tot")).head().getLong(0)
     tombGen += 1
     val newTomb = s"$initialPostingsPath-tombstones-v$tombGen"
-    tombstonePath.fold(newIds)(t =>
+    cur.tombstones.fold(newIds)(t =>
       spark.read.parquet(t).unionByName(newIds))
       .write.parquet(newTomb)
     // model advances as one unit, THEN the read path switches, THEN
@@ -262,7 +247,7 @@ class Bm25Index private (
     nDocsVar -= nDel
     totalLenVar -= dlGone
     dfPath = newDfPath
-    tombstonePath = Some(newTomb)
+    files = cur.copy(tombstones = Some(newTomb))
     versionCounter += 1
     val v = java.lang.Long.valueOf(versionCounter)
     touched.foreach(b => bucketVersions.put(b, v))
@@ -309,7 +294,7 @@ class Bm25Index private (
     // the build layout (see [[Bm25Index.build]]) — the pushed In(term)
     // filter row-group-skips appended postings too
     batch.sortWithinPartitions(col("bucket"), col("term"))
-      .write.mode("append").partitionBy("bucket").parquet(postingsPath)
+      .write.mode("append").partitionBy("bucket").parquet(files.data)
     val touched = batch.select(col("bucket")).distinct().collect()
       .map(_.getInt(0))
     dfGen += 1
@@ -369,8 +354,7 @@ class Bm25Index private (
     live.repartition(col("bucket"))
       .sortWithinPartitions(col("bucket"), col("term"))
       .write.partitionBy("bucket").parquet(newPath)
-    postingsPath = newPath
-    tombstonePath = None
+    files = IndexFiles(newPath, None)
   }
 
   /** Top-k BM25 documents for `terms` — the pruned-postings path.

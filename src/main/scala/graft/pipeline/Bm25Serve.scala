@@ -3,6 +3,9 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.ServeCache
+import graft.core.LocalParquet.localFirst
+
 /** r16: WARM driver-side BM25 serving — the [[AnnServe]] posture for
   * the lexical tier. An interactive retrieval user (decontamination
   * spot-checks, dedup audits, the Cli `search` loop) wants answers
@@ -33,120 +36,82 @@ import org.apache.spark.sql.functions._
   */
 class Bm25Serve private (index: Bm25Index, maxTerms: Int, maxDf: Long) {
 
-  /** One term's postings: (doc_id, tf, dl) rows sorted by doc_id;
-    * `version` = the term's BUCKET version at load (stale when
-    * [[Bm25Index.bucketVersion]] advances past it — the AnnServe
-    * CellData handshake). `overCap` (r18, the r17 verdict's #1 "weak"):
-    * the term's df exceeds [[maxDf]] — its postings were NEVER
-    * collected (a stopword's df is O(corpus); collecting it is the one
-    * driver-OOM path the per-term cache rewrite left open). Queries
-    * touching an over-cap term route whole to the distributed
-    * [[Bm25Index.topK]]; the marker itself caches (with the same
-    * version handshake — deletes can shrink df back under the cap, and
-    * the bucket-version bump they do forces a re-check).
+  /** One term's postings: (doc_id, tf, dl) rows sorted by doc_id,
+    * cached at its BUCKET's version (stale once
+    * [[Bm25Index.bucketVersion]] advances past it — the AnnServe cell
+    * handshake). `overCap` (r18, the r17 verdict's #1 "weak"): the
+    * term's df exceeds [[maxDf]] — its postings were NEVER collected (a
+    * stopword's df is O(corpus); collecting it is the one driver-OOM
+    * path the per-term cache rewrite left open). Queries touching an
+    * over-cap term route whole to the distributed [[Bm25Index.topK]];
+    * the marker itself caches (with the same version handshake —
+    * deletes can shrink df back under the cap, and the bucket-version
+    * bump they do forces a re-check).
     */
   private final case class TermData(
-      posts: Array[(Long, Long, Long)], version: Long,
-      overCap: Boolean = false)
+      posts: Array[(Long, Long, Long)], overCap: Boolean = false)
 
-  private val termCache =
-    new java.util.LinkedHashMap[(Int, String), TermData](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, String), TermData]): Boolean =
-        size() > maxTerms
-    }
+  private val termCache = new ServeCache[(Int, String), TermData](
+    maxTerms, k => index.bucketVersion(k._1))
 
-  private def isFresh(key: (Int, String)): Boolean = {
-    val td = termCache.get(key)
-    td != null && index.bucketVersion(key._1) <= td.version
-  }
-
-  /** Load every missing/stale queried term in ONE pruned Spark read
-    * (cold path); warm queries never reach here. Only the queried
-    * terms' posting rows materialize — never a whole bucket — and
-    * (r18) only terms whose df clears [[maxDf]]: the vocabulary df
-    * table is consulted FIRST (a term-pruned, ≤ |terms|-row collect),
-    * and over-cap terms cache a marker instead of O(corpus) postings.
+  /** The queried terms' postings — cached terms as they are, missing
+    * or stale ones loaded together (cold path; warm queries never load).
+    * Only the queried terms' posting rows materialize — never a whole
+    * bucket — and (r18) only terms whose df clears [[maxDf]]: the
+    * vocabulary df table is consulted FIRST (a term-pruned, ≤ |terms|-row
+    * read), and over-cap terms cache a marker instead of O(corpus)
+    * postings. r20 (the r19 verdict's #3): both reads go driver-side
+    * first (parquet-mr, term-filtered, scanRangeLocal posture — no
+    * Spark job on the serve path), else the pruned Spark reads. Terms
+    * absent from the corpus cache empty, so a repeat stays warm.
     */
-  private def warmTerms(keys: Seq[(Int, String)]): Unit = {
-    val missing = keys.filter(k => !isFresh(k))
-    if (missing.nonEmpty) {
-      val loadVersions = missing.map(k => k -> index.bucketVersion(k._1)).toMap
-      // df gate before any postings collect — the driver-held model
-      // slice (same pruned vocabulary read Bm25Index.topK does).
-      // r20 (the r19 verdict's #3): both the df gate and the postings
-      // load go DRIVER-SIDE first (parquet-mr, term-filtered,
-      // scanRangeLocal posture — no Spark job on the serve path),
-      // falling back to the pruned Spark reads on any layout surprise.
+  private def warmTerms(keys: Seq[(Int, String)]): Map[(Int, String), TermData] =
+    termCache.getOrLoad(keys) { missing =>
       val missingTerms = missing.map(_._2).distinct
       val dfs: Map[String, Long] =
-        try index.dfLocal(missingTerms)
-        catch {
-          case _: Exception =>
-            index.session.read.parquet(index.dfDir)
-              .filter(col("term").isin(missingTerms: _*))
-              .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        localFirst("bm25 df load")(Some(index.dfLocal(missingTerms))) {
+          index.session.read.parquet(index.dfDir)
+            .filter(col("term").isin(missingTerms: _*))
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         }
       val (heavy, light) = missing.partition(k =>
         dfs.getOrElse(k._2, 0L) > maxDf)
-      heavy.foreach(k =>
-        termCache.put(k, TermData(Array.empty, loadVersions(k),
-          overCap = true)))
-      if (light.nonEmpty) {
+      val markers = heavy.map(_ -> TermData(Array.empty, overCap = true)).toMap
+      if (light.isEmpty) markers
+      else {
         val buckets = light.map(_._1).distinct
         val terms = light.map(_._2).distinct
         val byKey: Map[(Int, String), Array[(Long, Long, Long)]] =
-          try index.postingsLocal(buckets, terms)
-          catch {
-            case _: Exception =>
-              index.readPostings
-                .filter(col("bucket").isin(buckets: _*) &&
-                  col("term").isin(terms: _*))
-                .select(col("bucket"), col("term"), col("doc_id"),
-                  col("tf"), col("dl"))
-                .collect()
-                .groupBy(r => (r.getInt(0), r.getString(1)))
-                .map { case (key, rs) =>
-                  key -> rs.map(r =>
-                    (r.getLong(2), r.getLong(3), r.getLong(4))).sortBy(_._1)
-                }
+          localFirst("bm25 postings load")(Some(index.postingsLocal(buckets, terms))) {
+            index.readPostings
+              .filter(col("bucket").isin(buckets: _*) &&
+                col("term").isin(terms: _*))
+              .select(col("bucket"), col("term"), col("doc_id"),
+                col("tf"), col("dl"))
+              .collect()
+              .groupBy(r => (r.getInt(0), r.getString(1)))
+              .map { case (key, rs) =>
+                key -> rs.map(r =>
+                  (r.getLong(2), r.getLong(3), r.getLong(4))).sortBy(_._1)
+              }
           }
-        byKey.foreach { case (key, posts) =>
-          if (loadVersions.contains(key)) // only requested keys cache
-            termCache.put(key, TermData(posts, loadVersions(key)))
-        }
-        // queried terms absent from the corpus still cache (empty) so a
-        // repeat stays warm. r17 (ADVICE): "empty" is decided by what the
-        // LOAD returned (keys absent from `rows`), never by a post-load
-        // isFresh re-check — an append racing between the version
-        // snapshot and that re-check would clobber a just-loaded real
-        // entry with an empty placeholder for the in-flight query. With
-        // the snapshotted version, a raced entry is merely stale again.
-        light.filterNot(byKey.contains).foreach(k =>
-          termCache.put(k, TermData(Array.empty, loadVersions(k))))
+        markers ++ byKey.map { case (key, posts) => key -> TermData(posts) }
       }
-    }
-  }
+    }(_ => TermData(Array.empty))
 
   /** Test hook: the cached (bucket, term) keys — Bm25ServeSpec proves a
     * query against a multi-term bucket materializes only the queried
     * terms' rows.
     */
-  private[pipeline] def cachedKeys: Set[(Int, String)] = {
-    val it = termCache.keySet().iterator()
-    val b = Set.newBuilder[(Int, String)]
-    while (it.hasNext) b += it.next()
-    b.result()
-  }
+  private[pipeline] def cachedKeys: Set[(Int, String)] = termCache.keys
 
   /** Test hook: cached postings-row count and over-cap flag for a
     * term — Bm25ServeSpec proves a stopword-class term never collects
     * its O(df) postings.
     */
-  private[pipeline] def cachedState(term: String): Option[(Int, Boolean)] = {
-    val td = termCache.get((Bm25Index.bucketOf(term), term))
-    Option(td).map(t => (t.posts.length, t.overCap))
-  }
+  private[pipeline] def cachedState(term: String): Option[(Int, Boolean)] =
+    termCache.get((Bm25Index.bucketOf(term), term))
+      .map(t => (t.posts.length, t.overCap))
 
   /** r20 (the r19 verdict's #3, guide §4.5 init-once): warm the shared
     * plan fragments at serve START — the vocabulary-df read and the
@@ -169,7 +134,7 @@ class Bm25Serve private (index: Bm25Index, maxTerms: Int, maxDf: Long) {
     // the driver-side read stack (footer reader, filter2, codec
     // classes) once, at serve start — a single space can never be a
     // token (the tokenizer splits on it), so zero rows match or cache
-    try index.dfLocal(Seq(" ")) catch { case _: Exception => () }
+    localFirst("bm25 prewarm")(Some(index.dfLocal(Seq(" "))))(Map.empty)
   }
 
   private def q6micro(x: Double): Long = {
@@ -189,21 +154,19 @@ class Bm25Serve private (index: Bm25Index, maxTerms: Int, maxDf: Long) {
     require(terms.nonEmpty, "bm25 needs at least one query term")
     // r17 (ADVICE): a query with more distinct terms than the cache
     // holds would SELF-EVICT during warmTerms (terms loaded early
-    // evicted before scoring reads them — silently dropped postings).
+    // evicted by later ones, so every repeat reloads them all).
     require(terms.size <= maxTerms,
       s"${terms.size} query terms exceed the serve cache bound " +
         s"maxTerms=$maxTerms — raise the bound or use Bm25Index.topK")
     val keys = terms.map(t => (Bm25Index.bucketOf(t), t))
-    warmTerms(keys)
+    val cached = warmTerms(keys)
     // r18: a query touching an over-cap (stopword-class) term routes
     // WHOLE to the distributed path — Bm25Index.topK answers it with
     // bounded driver memory (the collect is k rows), and the two paths
     // are value-equal by the gated serve ≡ index contract, so the
     // caller can't tell beyond latency. The marker is cached, so the
     // routing decision itself stays warm.
-    if (keys.exists { k =>
-      val td = termCache.get(k); td != null && td.overCap
-    }) {
+    if (keys.exists(k => cached(k).overCap)) {
       return index.topK(terms, k, conjunctive).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     }
@@ -215,8 +178,7 @@ class Bm25Serve private (index: Bm25Index, maxTerms: Int, maxDf: Long) {
     val cnt = scala.collection.mutable.LongMap.empty[Long]
     val dls = scala.collection.mutable.LongMap.empty[Long]
     keys.foreach { key =>
-      val td = termCache.get(key)
-      val posts = if (td == null) Array.empty[(Long, Long, Long)] else td.posts
+      val posts = cached(key).posts
       val df = posts.length.toDouble
       val idf6 = PqIndex.q6(math.log((n - df + 0.5) / (df + 0.5) + 1.0))
       posts.foreach { case (doc, tf, dl) =>

@@ -52,17 +52,24 @@ class IvfPqIndex private (
     val centroids: Array[Array[Double]],
     val codebooks: IndexedSeq[Seq[(Int, Array[Double])]]) {
 
-  /** Current code-table directory — swapped by [[compact]] (appends
-    * fragment cell partitions into many small files; compaction
-    * rewrites each cell into one file under a fresh versioned dir,
-    * preserving (cell, codes) exactly).
+  /** Current code-table directory and tombstone sidecar, replaced
+    * whole. [[compact]] swaps the directory (appends fragment cell
+    * partitions into many small files; compaction rewrites each cell
+    * into one file under a fresh versioned dir, preserving (cell,
+    * codes) exactly) and retires the sidecar in the same assignment.
+    * The sidecar (r18, the r17 verdict's #1): vec_ids logically deleted
+    * from the index — the FAISS IDSelector / Lucene deleted-docs
+    * discipline: masked out of every read until [[compact]] drops them
+    * physically, rewritten under a fresh versioned path per [[delete]]
+    * batch; `None` (the common case) costs nothing.
     */
-  @volatile private var codesPath: String = initialCodesPath
+  @volatile private var files = IndexFiles(initialCodesPath, None)
   private var compactGen: Int = 0
+  private var tombGen: Int = 0
 
   private def spark = emb.sparkSession
 
-  private[pipeline] def codesDir: String = codesPath
+  private[pipeline] def codesDir: String = files.data
 
   import PqIndex.q6
 
@@ -88,17 +95,7 @@ class IvfPqIndex private (
   /** Current index version (build = 0, +1 per appended batch). */
   def version: Long = versionCounter
 
-  /** Tombstone sidecar (r18, the r17 verdict's #1): vec_ids logically
-    * deleted from the index — the FAISS IDSelector / Lucene
-    * deleted-docs discipline: masked out of every read until
-    * [[compact]] drops them physically. Swapped whole under a fresh
-    * versioned path per [[delete]] batch (atomic read-path switch);
-    * `None` (the common case) costs nothing.
-    */
-  @volatile private var tombstonePath: Option[String] = None
-  private var tombGen: Int = 0
-
-  private[pipeline] def hasTombstones: Boolean = tombstonePath.nonEmpty
+  private[pipeline] def hasTombstones: Boolean = files.tombstones.nonEmpty
 
   /** The LOGICAL stored `(vec_id, embedding, codes)` table, partitioned
     * by `cell` — stored rows minus tombstoned vectors. Every reader
@@ -107,11 +104,7 @@ class IvfPqIndex private (
     * filter pushes through its left side, so the pruned probe plan is
     * unchanged.
     */
-  private[pipeline] def codes(): DataFrame = {
-    val p = emb.sparkSession.read.parquet(codesPath)
-    tombstonePath.fold(p)(t =>
-      p.join(emb.sparkSession.read.parquet(t), Seq("vec_id"), "left_anti"))
-  }
+  private[pipeline] def codes(): DataFrame = files.frame(spark, "vec_id")
 
   /** r20 (the r19 verdict's #3): DRIVER-SIDE load of whole cell
     * partitions — the [[graft.tsdb.TickStore.scanRangeLocal]] posture
@@ -129,23 +122,14 @@ class IvfPqIndex private (
   private[pipeline] def cellRowsLocal(cells: Seq[Int])
       : Map[Int, Array[(Long, Array[Int], Array[Float])]] = {
     import graft.core.LocalParquet
-    val t0 = System.nanoTime()
     val conf = spark.sparkContext.hadoopConfiguration
-    val cp = codesPath // volatile: snapshot once (compact may swap it)
-    val dead: Set[Long] = tombstonePath match {
-      case None => Set.empty
-      case Some(t) =>
-        val b = Set.newBuilder[Long]
-        LocalParquet.dataFiles(new org.apache.hadoop.fs.Path(t), conf)
-          .foreach(f => LocalParquet.readGroups(f.getPath, conf, None)(g =>
-            b += g.getLong("vec_id", 0)))
-        b.result()
-    }
-    val out = LocalParquet.parMap(cells) { c =>
+    val cur = files // read once: a directory and its own mask
+    val dead = cur.deadIds(conf, "vec_id")
+    LocalParquet.parMap(cells) { c =>
       val rows = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Array[Int], Array[Float])]
       LocalParquet.dataFiles(
-          new org.apache.hadoop.fs.Path(cp, s"cell=$c"), conf)
+          new org.apache.hadoop.fs.Path(cur.data, s"cell=$c"), conf)
         .foreach(f => LocalParquet.readGroups(f.getPath, conf, None) { g =>
           val id = g.getLong("vec_id", 0)
           if (!dead.contains(id))
@@ -154,11 +138,6 @@ class IvfPqIndex private (
         })
       c -> rows.sortBy(_._1).toArray
     }.toMap
-    if (sys.env.contains("GRAFT_SERVE_DEBUG"))
-      System.err.println(f"cellRowsLocal: ${cells.size} cells, " +
-        f"${out.valuesIterator.map(_.length).sum} rows, " +
-        f"${(System.nanoTime() - t0) / 1e6}%.1f ms")
-    out
   }
 
   /** r18 (the r17 verdict's #1): vector DELETION — the curation
@@ -182,7 +161,8 @@ class IvfPqIndex private (
     val spark = emb.sparkSession
     val incoming = ids.select(col("vec_id").cast("long").as("vec_id"))
       .distinct()
-    val newIds = tombstonePath.fold(incoming)(t =>
+    val cur = files
+    val newIds = cur.tombstones.fold(incoming)(t =>
       incoming.join(spark.read.parquet(t), Seq("vec_id"), "left_anti"))
       .localCheckpoint() // three consumers: cells join, sidecar write, count
     // touched cells — the one codes scan; ids absent from the stored
@@ -191,15 +171,15 @@ class IvfPqIndex private (
     if (nDel == 0L) return 0L
     // touched cells — the one codes scan; ids absent from the stored
     // table touch nothing (and harmlessly ride the sidecar)
-    val touched = spark.read.parquet(codesPath)
+    val touched = spark.read.parquet(cur.data)
       .join(newIds, Seq("vec_id"))
       .select(col("cell")).distinct().collect().map(_.getInt(0))
     tombGen += 1
     val newTomb = s"$initialCodesPath-tombstones-v$tombGen"
-    tombstonePath.fold(newIds)(t =>
+    cur.tombstones.fold(newIds)(t =>
       spark.read.parquet(t).unionByName(newIds))
       .write.parquet(newTomb)
-    tombstonePath = Some(newTomb)
+    files = cur.copy(tombstones = Some(newTomb))
     versionCounter += 1
     val v = java.lang.Long.valueOf(versionCounter)
     touched.foreach(c => cellVersions.put(c, v))
@@ -466,7 +446,7 @@ class IvfPqIndex private (
         "the index dir and rebuild")
     IvfPqIndex.encodeResiduals(
       IvfPqIndex.withResiduals(assigned, centroids), m, sub, codebooks)
-      .write.mode("append").partitionBy("cell").parquet(codesPath)
+      .write.mode("append").partitionBy("cell").parquet(files.data)
     // bump the index version and stamp every touched cell (the batch's
     // distinct cells — a metadata-sized collect off the checkpointed
     // assignment) so warm serve caches can evict exactly those cells
@@ -507,8 +487,7 @@ class IvfPqIndex private (
     if (live.isEmpty) return
     live.repartition(col("cell"))
       .write.partitionBy("cell").parquet(newPath)
-    codesPath = newPath
-    tombstonePath = None
+    files = IndexFiles(newPath, None)
   }
 }
 

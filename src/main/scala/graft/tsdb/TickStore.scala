@@ -172,6 +172,24 @@ final class TickStore(spark: SparkSession, path: String,
   def queryLast(symbol: String, n: Int): DataFrame =
     all().filter(col("symbol") === symbol).orderBy(col("ts").desc).limit(n)
 
+  /** The parquet data files of `symbol` (under its daily `ts_date=`
+    * directories or flat), skipping `_`/`.` names; empty when the
+    * symbol has no directory. A fresh listing per call.
+    */
+  private def symbolFiles(symbol: String,
+      conf: org.apache.hadoop.conf.Configuration): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val dir = new org.apache.hadoop.fs.Path(path, s"symbol=$symbol")
+    val fs = dir.getFileSystem(conf)
+    if (!fs.exists(dir)) Seq.empty
+    else (if (dailyPartitions)
+        Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir, "ts_date=*/*")))
+          .map(_.toSeq).getOrElse(Seq.empty)
+      else fs.listStatus(dir).toSeq).filter { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+  }
+
   /** r13 serve-cold fast path: (tick count, newest ts) for a symbol
     * read DRIVER-SIDE from parquet footers — no Spark job at all. Row
     * counts live in every footer; the ts maximum comes from the
@@ -194,17 +212,7 @@ final class TickStore(spark: SparkSession, path: String,
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(path, s"symbol=$symbol")
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return Some((0L, None))
-    val files =
-      (if (dailyPartitions)
-        Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir, "ts_date=*/*")))
-          .map(_.toSeq).getOrElse(Seq.empty)
-      else fs.listStatus(dir).toSeq).filter { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
+    val files = symbolFiles(symbol, conf)
     var total = 0L
     var maxUs = Long.MinValue
     files.foreach { f =>
@@ -268,17 +276,7 @@ final class TickStore(spark: SparkSession, path: String,
     import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
     val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(path, s"symbol=$symbol")
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return Some((Array.empty, Array.empty, Array.empty))
-    val files =
-      (if (dailyPartitions)
-        Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir, "ts_date=*/*")))
-          .map(_.toSeq).getOrElse(Seq.empty)
-      else fs.listStatus(dir).toSeq).filter { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
+    val files = symbolFiles(symbol, conf)
     val tsB = Array.newBuilder[Long]
     val prB = Array.newBuilder[Double]
     val voB = Array.newBuilder[Long]
