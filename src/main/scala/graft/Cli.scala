@@ -387,13 +387,9 @@ object Cli {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val builder = graft.core.LocalSession.builder()
+    sys.env.get("SPARK_MASTER").foreach(builder.master)
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val code = try run(spark, sys.env.getOrElse("GRAFT_DATA_DIR", "tsdb_data"), args)
       finally spark.stop()

@@ -90,5 +90,20 @@ final class ServeCache[K, V](capacity: Int, version: K => Long) {
 }
 
 object ServeCache {
+  /** `read` under one committed `state` of the artifact: rerun until
+    * the state taken before it is still current after it. When the
+    * cache's `version` and its loads both read the artifact's current
+    * state, the entries a [[ServeCache.getOrLoad]] returns are never
+    * older than a state taken before the call, and none is newer while
+    * that state is current — so a stable read's entries all belong to
+    * the returned state, and the caller scores them with its model.
+    */
+  @annotation.tailrec
+  def stable[S <: AnyRef, V](state: => S)(read: => V): (S, V) = {
+    val s = state
+    val v = read
+    if (state eq s) (s, v) else stable(state)(read)
+  }
+
   private final case class Entry[V](value: V, version: Long)
 }

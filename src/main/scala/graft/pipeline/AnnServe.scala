@@ -177,7 +177,7 @@ class AnnServe private (
     val sub = index.sub
     val qn = IvfIndex.normalize(qvecF.map(_.toDouble))
     val probes = IvfIndex.nearestCells(index.centroids, qn, nprobe)
-    val cells = warmCells(probes)
+    val (_, cells) = ServeCache.stable(index.snapshot)(warmCells(probes))
     // per-(cell, j) ADC tables — identical construction to the query
     // path's literal maps
     val tables: Map[Int, Array[Map[Int, Double]]] = probes.map { cell =>

@@ -38,10 +38,7 @@ import org.apache.spark.sql.functions._
   */
 class Bm25Index private (
     docs: DataFrame,
-    initialPostingsPath: String,
-    initialDfPath: String,
-    initialNDocs: Long,
-    initialTotalLen: Long,
+    initial: Bm25Index.State,
     val attrCols: Seq[String]) {
 
   /** Stored attribute column types — what an [[append]] batch missing
@@ -52,60 +49,51 @@ class Bm25Index private (
       .map(_.dataType)
       .getOrElse(org.apache.spark.sql.types.StringType)).toMap
 
-  /** Current postings directory and tombstone sidecar, replaced whole.
-    * [[compact]] swaps the directory (the [[IvfPqIndex.compact]]
-    * posture: appends fragment bucket partitions into many small files;
-    * compaction rewrites each bucket into one file under a fresh
-    * versioned dir, row-exactly) and retires the sidecar in the same
-    * assignment. The sidecar (r18, the r17 verdict's #1): the doc_ids
-    * logically deleted from the index — the Lucene deleted-docs bitset
-    * re-expressed as a (small) parquet id table, rewritten under a
-    * fresh versioned path per [[delete]] batch. `None` = nothing
-    * deleted (the common case pays zero overhead).
+  /** The index state: postings directory, tombstone sidecar, bucket
+    * versions and the model (df table path, N, Σdl), replaced whole by
+    * [[delete]], [[append]] and [[compact]] under the index lock; every
+    * reader takes it once. [[compact]] swaps the directory (the
+    * [[IvfPqIndex.compact]] posture: appends fragment bucket partitions
+    * into many small files; compaction rewrites each bucket into one
+    * file under a fresh versioned dir, row-exactly) and retires the
+    * sidecar in the same assignment. The sidecar (r18, the r17
+    * verdict's #1): the doc_ids logically deleted from the index — the
+    * Lucene deleted-docs bitset re-expressed as a (small) parquet id
+    * table, rewritten under a fresh versioned path per [[delete]]
+    * batch. `None` = nothing deleted (the common case pays zero
+    * overhead).
     */
-  @volatile private var files = IndexFiles(initialPostingsPath, None)
-  private var compactGen: Int = 0
-  private var tombGen: Int = 0
+  @volatile private var state = initial
 
   private def spark = docs.sparkSession
   private[pipeline] def session = spark
 
-  // mutable model state — advanced by [[append]] (the appendEncode
-  // posture: the artifact grows in place, the driver-held scalars and
-  // the vocabulary-table path swap under a lock)
-  @volatile private var dfPath: String = initialDfPath
-  @volatile private var nDocsVar: Long = initialNDocs
-  @volatile private var totalLenVar: Long = initialTotalLen
-  private var dfGen: Int = 0
+  /** The current state, for a reader that needs more than one part of
+    * it to agree ([[Bm25Serve]]).
+    */
+  private[pipeline] def snapshot: Bm25Index.State = state
 
-  def nDocs: Long = nDocsVar
-  def totalLen: Long = totalLenVar
+  def nDocs: Long = state.nDocs
+  def totalLen: Long = state.totalLen
 
   /** Current vocabulary df table path — the serve tier's df gate reads
     * it term-pruned (a ≤ |terms|-row collect).
     */
-  private[pipeline] def dfDir: String = dfPath
+  private[pipeline] def dfDir: String = state.dfPath
 
-  /** Per-bucket append versions — the [[IvfPqIndex.cellVersion]]
-    * staleness handshake for warm [[Bm25Serve]] caches: a bucket whose
-    * version advanced past a cache entry's load version received new
-    * postings and must reload.
+  /** Last generation that appended into or deleted from `bucket` — the
+    * [[IvfPqIndex.cellVersion]] staleness handshake for warm
+    * [[Bm25Serve]] caches: a bucket whose version advanced past a cache
+    * entry's load version changed postings and must reload.
     */
-  @volatile private var versionCounter: Long = 0L
-  private val bucketVersions =
-    new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
+  def bucketVersion(bucket: Int): Long = state.files.version(bucket)
 
-  def bucketVersion(bucket: Int): Long = {
-    val v = bucketVersions.get(bucket)
-    if (v == null) 0L else v.longValue()
-  }
-
-  private[pipeline] def postingsDir: String = files.data
+  private[pipeline] def postingsDir: String = state.files.data
 
   /** Test hook: whether any tombstones are live (compaction retires
     * them).
     */
-  private[pipeline] def hasTombstones: Boolean = files.tombstones.nonEmpty
+  private[pipeline] def hasTombstones: Boolean = state.files.tombstones.nonEmpty
 
   /** The LOGICAL postings table — the stored rows minus tombstoned
     * docs. Every reader (queries, serves, compaction, stats audits)
@@ -114,7 +102,7 @@ class Bm25Index private (
     * the anti-join, so the partition-pruned + row-group-skip plan
     * shape is unchanged.
     */
-  private[pipeline] def readPostings: DataFrame = files.frame(spark, "doc_id")
+  private[pipeline] def readPostings: DataFrame = state.files.frame
 
   /** r20 (the r19 verdict's #3): driver-side df lookup for `terms` —
     * a term-filtered parquet-mr read of the vocabulary table (filter2
@@ -131,7 +119,7 @@ class Bm25Index private (
       FilterApi.eq(FilterApi.binaryColumn("term"),
         Binary.fromString(t)): FilterPredicate).reduce(FilterApi.or)
     val out = Map.newBuilder[String, Long]
-    LocalParquet.dataFiles(new org.apache.hadoop.fs.Path(dfPath), conf)
+    LocalParquet.dataFiles(new org.apache.hadoop.fs.Path(state.dfPath), conf)
       .foreach(f => LocalParquet.readGroups(f.getPath, conf, Some(pred))(g =>
         out += g.getString("term", 0) -> g.getLong("df", 0)))
     out.result()
@@ -142,8 +130,8 @@ class Bm25Index private (
     * scanRangeLocal posture; the r17 sorted-write layout means the
     * term filter skips non-matching row groups exactly like the Spark
     * scan's pushed `In`). Same semantics as collecting [[readPostings]]
-    * filtered to (buckets × terms): fresh file listing (appends seen),
-    * tombstone mask applied, rows sorted by doc_id per (bucket, term).
+    * filtered to (buckets × terms): one state's files and tombstone
+    * mask, rows sorted by doc_id per (bucket, term).
     * Throws on surprises — callers fall back to the Spark path.
     */
   private[pipeline] def postingsLocal(buckets: Seq[Int], terms: Seq[String])
@@ -152,8 +140,8 @@ class Bm25Index private (
     import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
     import org.apache.parquet.io.api.Binary
     val conf = spark.sparkContext.hadoopConfiguration
-    val cur = files // read once: a directory and its own mask
-    val dead = cur.deadIds(conf, "doc_id")
+    val cur = state.files // read once: a listing and its own mask
+    val dead = cur.deadIds(conf)
     val termSet = terms.toSet
     val pred = terms.map(t =>
       FilterApi.eq(FilterApi.binaryColumn("term"),
@@ -161,9 +149,8 @@ class Bm25Index private (
     LocalParquet.parMap(buckets) { b =>
       val acc = scala.collection.mutable.Map
         .empty[(Int, String), scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]]
-      LocalParquet.dataFiles(
-          new org.apache.hadoop.fs.Path(cur.data, s"bucket=$b"), conf)
-        .foreach(f => LocalParquet.readGroups(f.getPath, conf, Some(pred)) { g =>
+      cur.partFiles(s"bucket=$b")
+        .foreach(f => LocalParquet.readGroups(f, conf, Some(pred)) { g =>
           val t = g.getString("term", 0)
           if (termSet(t)) {
             val doc = g.getLong("doc_id", 0)
@@ -206,52 +193,23 @@ class Bm25Index private (
     * newly deleted.
     */
   def delete(ids: DataFrame): Long = synchronized {
-    val incoming = ids.select(col("doc_id").cast("long").as("doc_id"))
-      .distinct()
-    val cur = files
-    val newIds = cur.tombstones.fold(incoming)(t =>
-      incoming.join(spark.read.parquet(t), Seq("doc_id"), "left_anti"))
-      .localCheckpoint() // three consumers: count, postings join, sidecar write
-    val nDel = newIds.count()
-    if (nDel == 0L) return 0L
-    // the deleted docs' posting rows — the one postings scan; deltas,
-    // touched buckets and the Σdl decrement all derive from it
-    val deleted = spark.read.parquet(cur.data)
-      .join(newIds, Seq("doc_id"))
-      .select(col("bucket"), col("term"), col("doc_id"), col("dl"))
-      .localCheckpoint()
-    val touched = deleted.select(col("bucket")).distinct().collect()
-      .map(_.getInt(0))
-    dfGen += 1
-    val newDfPath = s"$initialDfPath-v$dfGen"
-    // vocabulary-sized merge: stored df minus the deleted docs' term
-    // counts; terms whose last doc died drop out (a from-scratch build
-    // has no row for them — and an absent row scores the same idf as
-    // df = 0, so either convention matches; we keep the table clean)
-    spark.read.parquet(dfPath)
-      .unionByName(deleted.groupBy(col("term"))
-        .agg((-count(lit(1))).as("df")))
-      .groupBy(col("term")).agg(sum(col("df")).cast("long").as("df"))
-      .filter(col("df") > 0L)
-      .write.parquet(newDfPath)
-    val dlGone = deleted.groupBy(col("doc_id")).agg(min(col("dl")).as("dl"))
-      .agg(coalesce(sum(col("dl")), lit(0L)).as("tot")).head().getLong(0)
-    tombGen += 1
-    val newTomb = s"$initialPostingsPath-tombstones-v$tombGen"
-    cur.tombstones.fold(newIds)(t =>
-      spark.read.parquet(t).unionByName(newIds))
-      .write.parquet(newTomb)
-    // model advances as one unit, THEN the read path switches, THEN
-    // versions stamp (the append ordering discipline): a serve
-    // eviction can only observe the fully advanced model
-    nDocsVar -= nDel
-    totalLenVar -= dlGone
-    dfPath = newDfPath
-    files = cur.copy(tombstones = Some(newTomb))
-    versionCounter += 1
-    val v = java.lang.Long.valueOf(versionCounter)
-    touched.foreach(b => bucketVersions.put(b, v))
-    nDel
+    val cur = state
+    cur.files.delete(ids).fold(0L) { case (nDel, rows, files) =>
+      // the deleted docs' posting rows — the one postings scan; deltas,
+      // touched buckets and the Σdl decrement all derive from it
+      val deleted = rows.select(col("bucket"), col("term"), col("doc_id"), col("dl"))
+        .localCheckpoint()
+      val touched = deleted.select(col("bucket")).distinct().collect()
+        .map(_.getInt(0))
+      val dfPath = files.fresh("df")
+      Bm25Index.mergeDf(cur.dfPath,
+        deleted.groupBy(col("term")).agg((-count(lit(1))).as("df")), dfPath)
+      val dlGone = deleted.groupBy(col("doc_id")).agg(min(col("dl")).as("dl"))
+        .agg(coalesce(sum(col("dl")), lit(0L)).as("tot")).head().getLong(0)
+      state = Bm25Index.State(files.committed(touched), dfPath,
+        cur.nDocs - nDel, cur.totalLen - dlGone)
+      nDel
+    }
   }
 
   /** r16: incremental corpus growth — the [[IvfPqIndex.appendEncode]]
@@ -289,42 +247,30 @@ class Bm25Index private (
       df.withColumn(a, lit(null).cast(attrTypes(a))))
     val batch = Bm25Index.postingsOf(aligned, attrCols)
       .localCheckpoint() // the write and the touched-bucket collect share it
+    val cur = state
     // r17: the batch sorts by (bucket, term) before the write so the
     // appended fragments keep the term-clustered row-group property of
     // the build layout (see [[Bm25Index.build]]) — the pushed In(term)
     // filter row-group-skips appended postings too
     batch.sortWithinPartitions(col("bucket"), col("term"))
-      .write.mode("append").partitionBy("bucket").parquet(files.data)
+      .write.mode("append").partitionBy("bucket").parquet(cur.files.data)
     val touched = batch.select(col("bucket")).distinct().collect()
       .map(_.getInt(0))
-    dfGen += 1
-    val newDfPath = s"$initialDfPath-v$dfGen"
     // r17 (ADVICE): df advances by the BATCH's deltas merged into the
     // previous vocabulary table — two vocabulary-sized inputs, never a
     // rescan of the corpus-sized postings (a long-running append stream
     // was paying O(corpus) per micro-batch for a vocabulary-sized fact)
-    spark.read.parquet(dfPath)
-      .unionByName(batch.groupBy(col("term")).agg(count(lit(1)).as("df")))
-      .groupBy(col("term")).agg(sum(col("df")).cast("long").as("df"))
-      .write.parquet(newDfPath)
+    val dfPath = cur.files.fresh("df")
+    Bm25Index.mergeDf(cur.dfPath,
+      batch.groupBy(col("term")).agg(count(lit(1)).as("df")), dfPath)
     val stats = newDocs
       .select(size(split(col("text"), " ")).cast("long").as("dl"))
       // coalesce: an EMPTY batch (a quiet micro-batch) sums to NULL —
       // getLong would NPE
       .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("tot"))
       .head()
-    nDocsVar += stats.getLong(0)
-    totalLenVar += stats.getLong(1)
-    dfPath = newDfPath
-    // r18 (ADVICE): stamp touched bucket versions LAST — after the
-    // scalars and the df path have advanced. A warm Bm25Serve query
-    // racing this append reloads a bucket only once its version moves,
-    // so with the stamp last an eviction can only observe the fully
-    // advanced model (new postings WITH new N/avgdl/df), never new
-    // postings scored against the old scalars.
-    versionCounter += 1
-    val v = java.lang.Long.valueOf(versionCounter)
-    touched.foreach(b => bucketVersions.put(b, v))
+    state = Bm25Index.State(cur.files.appended(touched), dfPath,
+      cur.nDocs + stats.getLong(0), cur.totalLen + stats.getLong(1))
   }
 
   /** r16: compact the bucket partitions fragmented by [[append]] —
@@ -335,26 +281,26 @@ class Bm25Index private (
     * bucket versions don't advance).
     */
   def compact(): Unit = synchronized {
-    compactGen += 1
-    val newPath = s"$initialPostingsPath-compact$compactGen"
+    val cur = state
     // r17: one file per bucket AND term-sorted within it — compaction
     // restores the tightest row-group term stats (appends fragment in
     // sorted runs; the rewrite merges them into one sorted run).
-    // r18: reads go through readPostings, so tombstoned rows DROP
+    // r18: the rewrite reads the logical table, so tombstoned rows DROP
     // PHYSICALLY here and the sidecar retires — logical contents are
     // unchanged (reads were already filtered), so bucket versions
     // don't advance and warm serve caches stay valid.
-    val live = readPostings
+    val live = cur.files.frame
     // a FULLY tombstoned index compacts to zero rows — a partitioned
     // write of an empty frame leaves a directory with no parquet files,
     // which every later read would fail to schema-infer on. Keep the
     // mask instead (reads stay correct through the anti-join); the
     // degenerate all-deleted case is not worth bricking the read path.
     if (live.isEmpty) return
+    val dir = cur.files.fresh("compact")
     live.repartition(col("bucket"))
       .sortWithinPartitions(col("bucket"), col("term"))
-      .write.partitionBy("bucket").parquet(newPath)
-    files = IndexFiles(newPath, None)
+      .write.partitionBy("bucket").parquet(dir)
+    state = cur.copy(files = cur.files.compacted(dir))
   }
 
   /** Top-k BM25 documents for `terms` — the pruned-postings path.
@@ -377,18 +323,19 @@ class Bm25Index private (
     // serve path dedup too (all three agree on any input)
     val terms = terms0.distinct
     require(terms.nonEmpty, "bm25 needs at least one query term")
+    val st = state
     // per-term df, collected from the term-pruned vocabulary table
     // (≤ |terms| rows — the driver-held model slice)
-    val dfs: Map[String, Long] = spark.read.parquet(dfPath)
+    val dfs: Map[String, Long] = spark.read.parquet(st.dfPath)
       .filter(col("term").isin(terms: _*))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val buckets = terms.map(Bm25Index.bucketOf).distinct
-    val avgdl = totalLenVar.toDouble / nDocsVar.toDouble
+    val avgdl = st.totalLen.toDouble / st.nDocs.toDouble
     // idf per queried term, quant6'd driver-side with the same double
     // chain the scan path (and the oracle) use
     val idf6: Map[String, Double] = terms.map { t =>
       val df = dfs.getOrElse(t, 0L).toDouble
-      t -> PqIndex.q6(math.log((nDocs.toDouble - df + 0.5) / (df + 0.5) + 1.0))
+      t -> PqIndex.q6(math.log((st.nDocs.toDouble - df + 0.5) / (df + 0.5) + 1.0))
     }.toMap
     val tf = col("tf").cast("double")
     val ratio = tf * lit(2.2) / (tf + lit(TextOps.Bm25K1) *
@@ -396,7 +343,7 @@ class Bm25Index private (
         lit(TextOps.Bm25B) * (col("dl").cast("double") / lit(avgdl))))
     val contrib = PqIndex.quant6(
       element_at(typedLit(idf6), col("term")) * ratio * 1000000.0)
-    val pruned = readPostings
+    val pruned = st.files.frame
       .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
     val grouped = filter.fold(pruned)(pruned.filter)
       .select(col("doc_id"), col("dl"), contrib.as("c"))
@@ -444,8 +391,9 @@ class Bm25Index private (
       .select(col("query_id"), explode(split(col("text"), " ")).as("term"))
       .distinct()
       .localCheckpoint() // three consumers: term list, nt_q, the join
-    val nDocsD = nDocsVar.toDouble
-    val avgdl = totalLenVar.toDouble / nDocsD
+    val st = state
+    val nDocsD = st.nDocs.toDouble
+    val avgdl = st.totalLen.toDouble / nDocsD
     val termRows = qterms.select(col("term")).distinct()
       .limit(Bm25Index.BatchPruneCap + 1).collect()
     val prunedRegime = termRows.length <= Bm25Index.BatchPruneCap
@@ -463,7 +411,7 @@ class Bm25Index private (
     // oracle (which mirrors the scan formulation).
     val qt = if (prunedRegime) {
       val terms = termRows.map(_.getString(0)).toSeq
-      val dfs: Map[String, Long] = spark.read.parquet(dfPath)
+      val dfs: Map[String, Long] = spark.read.parquet(st.dfPath)
         .filter(col("term").isin(terms: _*))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val idf6: Map[String, Double] = terms.map { t =>
@@ -473,7 +421,7 @@ class Bm25Index private (
       qterms.select(col("query_id"), col("term"),
         element_at(typedLit(idf6), col("term")).as("idf6"))
     } else {
-      val dfTable = spark.read.parquet(dfPath)
+      val dfTable = spark.read.parquet(st.dfPath)
       qterms.join(dfTable, Seq("term"), "left")
         .select(col("query_id"), col("term"),
           PqIndex.quant6(log(
@@ -485,10 +433,10 @@ class Bm25Index private (
       if (prunedRegime) {
         val terms = termRows.map(_.getString(0)).toSeq
         val buckets = terms.map(Bm25Index.bucketOf).distinct
-        readPostings
+        st.files.frame
           .filter(col("bucket").isin(buckets: _*) &&
             col("term").isin(terms: _*))
-      } else readPostings
+      } else st.files.frame
     val tf = col("tf").cast("double")
     val ratio = tf * lit(2.2) / (tf + lit(TextOps.Bm25K1) *
       (lit(1.0) - lit(TextOps.Bm25B) +
@@ -557,6 +505,26 @@ object Bm25Index {
     if (b < 0) b + Buckets else b
   }
 
+  /** One committed state of a BM25 index: its stored postings (files,
+    * tombstones, bucket versions) and the model they are scored
+    * against — the vocabulary df table, N and Σdl.
+    */
+  private[pipeline] final case class State(
+      files: IndexFiles, dfPath: String, nDocs: Long, totalLen: Long)
+
+  /** The df table at `from` plus per-term `deltas` (term, df), written
+    * to `to` — two vocabulary-sized inputs, never a postings scan.
+    * Terms whose df falls to 0 drop out: a from-scratch build has no
+    * row for them (an absent row scores the same idf as df = 0, so
+    * either convention matches; the table stays clean). Appended deltas
+    * are ≥ 1, so on an append the filter keeps every row.
+    */
+  private[pipeline] def mergeDf(from: String, deltas: DataFrame, to: String): Unit =
+    deltas.sparkSession.read.parquet(from).unionByName(deltas)
+      .groupBy(col("term")).agg(sum(col("df")).cast("long").as("df"))
+      .filter(col("df") > 0L)
+      .write.parquet(to)
+
   private val cache = new ConcurrentHashMap[(Int, String), Bm25Index]()
 
   /** Cached build: one index per (session, corpus digest). */
@@ -623,7 +591,8 @@ object Bm25Index {
       .repartitionByRange(col("bucket"), col("term"))
       .sortWithinPartitions(col("bucket"), col("term"))
       .write.options(writerOptions).partitionBy("bucket").parquet(postingsPath)
-    val postings = docs.sparkSession.read.parquet(postingsPath)
+    val files = IndexFiles.open(docs.sparkSession, postingsPath, "doc_id")
+    val postings = files.stored
     postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .write.parquet(dfPath)
     // r17: Σdl derives from the WRITTEN postings (per-doc dl rides
@@ -641,6 +610,6 @@ object Bm25Index {
       .groupBy(col("doc_id")).agg(min(col("dl")).as("dl"))
       .agg(coalesce(sum(col("dl")), lit(0L)).as("tot"))
       .head().getLong(0)
-    new Bm25Index(docs, postingsPath, dfPath, n, tot, attrs)
+    new Bm25Index(docs, State(files, dfPath, n, tot), attrs)
   }
 }

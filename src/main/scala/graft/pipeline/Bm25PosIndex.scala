@@ -36,32 +36,22 @@ import org.apache.spark.sql.functions._
   * row — the classic Lucene .prx trade) but there is ONE of it for
   * every n.
   */
-class Bm25PosIndex private (
-    docs: DataFrame,
-    postingsPath: String,
-    initialDfPath: String,
-    initialNDocs: Long,
-    initialTotalLen: Long,
-    initialDlHist: Map[Long, Long]) {
+class Bm25PosIndex private (docs: DataFrame, initial: Bm25PosIndex.State) {
 
   private def spark = docs.sparkSession
 
-  // mutable model state — advanced by [[delete]] (the Bm25Index
-  // tombstone discipline applied to the positional artifact)
-  @volatile private var dfPath: String = initialDfPath
-  @volatile private var nDocsVar: Long = initialNDocs
-  @volatile private var totalLenVar: Long = initialTotalLen
-  @volatile private var dlHist: Map[Long, Long] = initialDlHist
-  private var dfGen: Int = 0
-  @volatile private var tombstonePath: Option[String] = None
-  private var tombGen: Int = 0
+  /** The index state: positional postings, tombstone sidecar and the
+    * model (df table, N, Σdl and the dl histogram), replaced whole by
+    * [[delete]] under the index lock; every reader takes it once.
+    */
+  @volatile private var state = initial
 
-  def nDocs: Long = nDocsVar
-  def totalLen: Long = totalLenVar
+  def nDocs: Long = state.nDocs
+  def totalLen: Long = state.totalLen
 
-  private[pipeline] def hasTombstones: Boolean = tombstonePath.nonEmpty
+  private[pipeline] def hasTombstones: Boolean = state.files.tombstones.nonEmpty
 
-  private[pipeline] def postingsDir: String = postingsPath
+  private[pipeline] def postingsDir: String = state.files.data
 
   /** r18: document deletion on the positional tier — the
     * [[Bm25Index.delete]] tombstone discipline: ids mask out of every
@@ -72,44 +62,26 @@ class Bm25PosIndex private (
     * must be current members; already-deleted ids are ignored.
     */
   def delete(ids: DataFrame): Long = synchronized {
-    val incoming = ids.select(col("doc_id").cast("long").as("doc_id"))
-      .distinct()
-    val newIds = tombstonePath.fold(incoming)(t =>
-      incoming.join(spark.read.parquet(t), Seq("doc_id"), "left_anti"))
-      .localCheckpoint()
-    val nDel = newIds.count()
-    if (nDel == 0L) return 0L
-    val deleted = spark.read.parquet(postingsPath)
-      .join(newIds, Seq("doc_id"))
-      .select(col("term"), col("doc_id"), col("dl"))
-      .localCheckpoint()
-    dfGen += 1
-    val newDfPath = s"$initialDfPath-v$dfGen"
-    spark.read.parquet(dfPath)
-      .unionByName(deleted.groupBy(col("term"))
-        .agg((-count(lit(1))).as("df")))
-      .groupBy(col("term")).agg(sum(col("df")).cast("long").as("df"))
-      .filter(col("df") > 0L)
-      .write.parquet(newDfPath)
-    // per-dl deleted-doc counts — the dl histogram decrements (the
-    // n-gram model constants for EVERY n stay exact)
-    val dlGone = deleted.groupBy(col("doc_id")).agg(min(col("dl")).as("dl"))
-      .groupBy(col("dl")).agg(count(lit(1)).as("cnt"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    tombGen += 1
-    val newTomb = s"$postingsPath-tombstones-v$tombGen"
-    tombstonePath.fold(newIds)(t =>
-      spark.read.parquet(t).unionByName(newIds))
-      .write.parquet(newTomb)
-    nDocsVar -= nDel
-    totalLenVar -= dlGone.map { case (dl, c) => dl * c }.sum
-    dlHist = (dlHist.keySet ++ dlGone.keySet).flatMap { dl =>
-      val left = dlHist.getOrElse(dl, 0L) - dlGone.getOrElse(dl, 0L)
-      if (left > 0) Some(dl -> left) else None
-    }.toMap
-    dfPath = newDfPath
-    tombstonePath = Some(newTomb)
-    nDel
+    val cur = state
+    cur.files.delete(ids).fold(0L) { case (nDel, rows, files) =>
+      val deleted = rows.select(col("term"), col("doc_id"), col("dl"))
+        .localCheckpoint()
+      val dfPath = files.fresh("df")
+      Bm25Index.mergeDf(cur.dfPath,
+        deleted.groupBy(col("term")).agg((-count(lit(1))).as("df")), dfPath)
+      // per-dl deleted-doc counts — the dl histogram decrements (the
+      // n-gram model constants for EVERY n stay exact)
+      val dlGone = deleted.groupBy(col("doc_id")).agg(min(col("dl")).as("dl"))
+        .groupBy(col("dl")).agg(count(lit(1)).as("cnt"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val hist = (cur.dlHist.keySet ++ dlGone.keySet).flatMap { dl =>
+        val left = cur.dlHist.getOrElse(dl, 0L) - dlGone.getOrElse(dl, 0L)
+        if (left > 0) Some(dl -> left) else None
+      }.toMap
+      state = Bm25PosIndex.State(files.committed(Nil), dfPath, cur.nDocs - nDel,
+        cur.totalLen - dlGone.map { case (dl, c) => dl * c }.sum, hist)
+      nDel
+    }
   }
 
   /** Σ per-doc n-gram stream length over the corpus: docs with
@@ -118,22 +90,20 @@ class Bm25PosIndex private (
     * absent from the histogram (NULL text → no postings) also ngramize
     * to `''` and contribute 1 each.
     */
-  private def totalLenN(n: Int): Long = {
-    val inHist = dlHist.map { case (dl, cnt) =>
+  private def totalLenN(st: Bm25PosIndex.State, n: Int): Long = {
+    val inHist = st.dlHist.map { case (dl, cnt) =>
       math.max(dl - (n - 1), 1L) * cnt
     }.sum
-    inHist + (nDocs - dlHist.values.sum) // NULL-text docs: dl_n = 1
+    inHist + (st.nDocs - st.dlHist.values.sum) // NULL-text docs: dl_n = 1
   }
 
   /** Pruned positional postings for `words` — one bucket-pruned scan,
     * read through the tombstone mask (absent until the first delete).
     */
-  private def prunedFor(words: Seq[String]): DataFrame = {
+  private def prunedFor(st: Bm25PosIndex.State, words: Seq[String]): DataFrame = {
     val buckets = words.map(Bm25Index.bucketOf).distinct
-    val p = spark.read.parquet(postingsPath)
+    st.files.frame
       .filter(col("bucket").isin(buckets: _*) && col("term").isin(words: _*))
-    tombstonePath.fold(p)(t =>
-      p.join(spark.read.parquet(t), Seq("doc_id"), "left_anti"))
   }
 
   /** Top-k BM25 over `phrases` (each n words joined by `_` — the
@@ -148,7 +118,8 @@ class Bm25PosIndex private (
     require(split.forall(_._2.size == n),
       s"every phrase must have exactly $n words: $phrases")
     val words = split.flatMap(_._2).distinct
-    val posts = prunedFor(words)
+    val st = state
+    val posts = prunedFor(st, words)
       .select(col("term"), col("doc_id"), col("dl"), col("positions"))
       .localCheckpoint() // each phrase's n-way join consumes a slice
     // per (phrase, doc): tf = |∩_j shift(positions(w_j), −j)| — the
@@ -174,8 +145,8 @@ class Bm25PosIndex private (
     val dfs: Map[Int, Long] = cands.groupBy(col("pi"))
       .agg(count(lit(1)).as("df")).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val nD = nDocs.toDouble
-    val avgdl = totalLenN(n).toDouble / nD
+    val nD = st.nDocs.toDouble
+    val avgdl = totalLenN(st, n).toDouble / nD
     val idf6: Map[Int, Double] = split.indices.map { pi =>
       val df = dfs.getOrElse(pi, 0L).toDouble
       pi -> PqIndex.q6(math.log((nD - df + 0.5) / (df + 0.5) + 1.0))
@@ -204,15 +175,16 @@ class Bm25PosIndex private (
     */
   def nearTopK(a: String, b: String, w: Int, k: Int): DataFrame = {
     require(a != b, "near needs two distinct terms")
-    val posts = prunedFor(Seq(a, b))
+    val st = state
+    val posts = prunedFor(st, Seq(a, b))
       .select(col("term"), col("doc_id"), col("dl"), col("tf"),
         col("positions"))
       .localCheckpoint() // both term slices + the df collect read it
     val dfs: Map[String, Long] = posts.groupBy(col("term"))
       .agg(count(lit(1)).as("df")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val nD = nDocs.toDouble
-    val avgdl = totalLen.toDouble / nD
+    val nD = st.nDocs.toDouble
+    val avgdl = st.totalLen.toDouble / nD
     val idf6: Map[String, Double] = Seq(a, b).map { t =>
       val df = dfs.getOrElse(t, 0L).toDouble
       t -> PqIndex.q6(math.log((nD - df + 0.5) / (df + 0.5) + 1.0))
@@ -247,6 +219,12 @@ class Bm25PosIndex private (
 }
 
 object Bm25PosIndex {
+  /** One committed state: the [[Bm25Index.State]] parts plus the dl
+    * histogram the n-gram models derive from.
+    */
+  private[pipeline] final case class State(files: IndexFiles, dfPath: String,
+      nDocs: Long, totalLen: Long, dlHist: Map[Long, Long])
+
   private val cache = new ConcurrentHashMap[(Int, String), Bm25PosIndex]()
 
   /** Cached build: one positional index per (session, corpus digest). */
@@ -278,7 +256,8 @@ object Bm25PosIndex {
       .repartitionByRange(col("bucket"), col("term"))
       .sortWithinPartitions(col("bucket"), col("term"))
       .write.partitionBy("bucket").parquet(postingsPath)
-    val postings = docs.sparkSession.read.parquet(postingsPath)
+    val files = IndexFiles.open(docs.sparkSession, postingsPath, "doc_id")
+    val postings = files.stored
     postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .write.parquet(dfPath)
     val n = docs.count()
@@ -286,6 +265,6 @@ object Bm25PosIndex {
     val hist = perDoc.groupBy(col("dl")).agg(count(lit(1)).as("cnt"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val tot = hist.map { case (dl, cnt) => dl * cnt }.sum
-    new Bm25PosIndex(docs, postingsPath, dfPath, n, tot, hist)
+    new Bm25PosIndex(docs, State(files, dfPath, n, tot, hist))
   }
 }

@@ -143,7 +143,10 @@ class Bm25Serve private (index: Bm25Index, maxTerms: Int, maxDf: Long) {
   }
 
   /** Warm top-k BM25 — the serve-loop entry point. Returns
-    * (doc_id, dl, score) exactly as [[Bm25Index.topK]] would collect.
+    * (doc_id, dl, score) exactly as [[Bm25Index.topK]] would collect
+    * against one committed index state: the postings and N/avgdl come
+    * from the state taken at the start, and a mutation committed during
+    * the call makes it answer again from the new state.
     * `conjunctive = true` mirrors the index path's AND semantics.
     */
   def topK(terms0: Seq[String], k: Int,
@@ -159,7 +162,7 @@ class Bm25Serve private (index: Bm25Index, maxTerms: Int, maxDf: Long) {
       s"${terms.size} query terms exceed the serve cache bound " +
         s"maxTerms=$maxTerms — raise the bound or use Bm25Index.topK")
     val keys = terms.map(t => (Bm25Index.bucketOf(t), t))
-    val cached = warmTerms(keys)
+    val (st, cached) = ServeCache.stable(index.snapshot)(warmTerms(keys))
     // r18: a query touching an over-cap (stopword-class) term routes
     // WHOLE to the distributed path — Bm25Index.topK answers it with
     // bounded driver memory (the collect is k rows), and the two paths
@@ -170,8 +173,8 @@ class Bm25Serve private (index: Bm25Index, maxTerms: Int, maxDf: Long) {
       return index.topK(terms, k, conjunctive).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     }
-    val n = index.nDocs.toDouble
-    val avgdl = index.totalLen.toDouble / n
+    val n = st.nDocs.toDouble
+    val avgdl = st.totalLen.toDouble / n
     // per-doc exact micro accumulation (the decimal-sum twin); dl
     // rides along for the output row
     val acc = scala.collection.mutable.LongMap.empty[Long]

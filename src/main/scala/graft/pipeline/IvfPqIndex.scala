@@ -52,48 +52,41 @@ class IvfPqIndex private (
     val centroids: Array[Array[Double]],
     val codebooks: IndexedSeq[Seq[(Int, Array[Double])]]) {
 
-  /** Current code-table directory and tombstone sidecar, replaced
-    * whole. [[compact]] swaps the directory (appends fragment cell
-    * partitions into many small files; compaction rewrites each cell
-    * into one file under a fresh versioned dir, preserving (cell,
-    * codes) exactly) and retires the sidecar in the same assignment.
-    * The sidecar (r18, the r17 verdict's #1): vec_ids logically deleted
-    * from the index — the FAISS IDSelector / Lucene deleted-docs
-    * discipline: masked out of every read until [[compact]] drops them
-    * physically, rewritten under a fresh versioned path per [[delete]]
-    * batch; `None` (the common case) costs nothing.
+  /** The index state ([[IndexFiles]]): the code-table directory, the
+    * tombstone sidecar and the per-cell versions, replaced whole by
+    * [[delete]], [[appendEncode]] and [[compact]] under the index lock.
+    * [[compact]] swaps the directory (appends fragment cell partitions
+    * into many small files; compaction rewrites each cell into one file
+    * under a fresh versioned dir, preserving (cell, codes) exactly) and
+    * retires the sidecar in the same assignment. The sidecar (r18, the
+    * r17 verdict's #1): vec_ids logically deleted from the index — the
+    * FAISS IDSelector / Lucene deleted-docs discipline: masked out of
+    * every read until [[compact]] drops them physically, rewritten under
+    * a fresh versioned path per [[delete]] batch; `None` (the common
+    * case) costs nothing.
     */
-  @volatile private var files = IndexFiles(initialCodesPath, None)
-  private var compactGen: Int = 0
-  private var tombGen: Int = 0
+  @volatile private var files = IndexFiles.open(emb.sparkSession, initialCodesPath, "vec_id")
 
   private def spark = emb.sparkSession
 
   private[pipeline] def codesDir: String = files.data
 
+  /** The current state, for a reader that needs more than one part of
+    * it to agree ([[AnnServe]]).
+    */
+  private[pipeline] def snapshot: IndexFiles = files
+
   import PqIndex.q6
 
-  /** Monotone index version, bumped once per [[appendEncode]] batch —
-    * with [[cellVersion]], the staleness handshake that lets a warm
-    * [[AnnServe]] cache drop exactly the cells an append touched (r16,
+  /** Last generation that appended into or deleted from `cell` (0 =
+    * build-time only) — the staleness handshake that lets a warm
+    * [[AnnServe]] cache drop exactly the cells a mutation touched (r16,
     * the r15 verdict's #2: a warm cached cell otherwise serves the
     * pre-append array forever while the Spark query path sees the new
-    * vectors).
-    */
-  @volatile private var versionCounter: Long = 0L
-  private val cellVersions = new ConcurrentHashMap[Int, java.lang.Long]()
-
-  /** Last index version that appended into `cell` (0 = build-time
-    * only). A cache entry loaded at version v is stale iff
+    * vectors). A cache entry loaded at version v is stale iff
     * `cellVersion(cell) > v`.
     */
-  def cellVersion(cell: Int): Long = {
-    val v = cellVersions.get(cell)
-    if (v == null) 0L else v.longValue()
-  }
-
-  /** Current index version (build = 0, +1 per appended batch). */
-  def version: Long = versionCounter
+  def cellVersion(cell: Int): Long = files.version(cell)
 
   private[pipeline] def hasTombstones: Boolean = files.tombstones.nonEmpty
 
@@ -104,7 +97,7 @@ class IvfPqIndex private (
     * filter pushes through its left side, so the pruned probe plan is
     * unchanged.
     */
-  private[pipeline] def codes(): DataFrame = files.frame(spark, "vec_id")
+  private[pipeline] def codes(): DataFrame = files.frame
 
   /** r20 (the r19 verdict's #3): DRIVER-SIDE load of whole cell
     * partitions — the [[graft.tsdb.TickStore.scanRangeLocal]] posture
@@ -113,9 +106,8 @@ class IvfPqIndex private (
     * ~100–150 ms of scheduling/codegen/collect for bytes parquet-mr
     * returns in single-digit ms, and the serve loop's whole point is
     * to avoid per-query job latency. Semantics are identical to
-    * collecting [[codes]] filtered to these cells: same files (a
-    * listing is fresher than any cached Spark file index, so appended
-    * files are seen), same tombstone mask, rows sorted by vec_id.
+    * collecting [[codes]] filtered to these cells: the same state's
+    * files and tombstone mask, rows sorted by vec_id.
     * Throws on any unexpected layout — the caller falls back to the
     * Spark path.
     */
@@ -123,14 +115,13 @@ class IvfPqIndex private (
       : Map[Int, Array[(Long, Array[Int], Array[Float])]] = {
     import graft.core.LocalParquet
     val conf = spark.sparkContext.hadoopConfiguration
-    val cur = files // read once: a directory and its own mask
-    val dead = cur.deadIds(conf, "vec_id")
+    val cur = files // read once: a listing and its own mask
+    val dead = cur.deadIds(conf)
     LocalParquet.parMap(cells) { c =>
       val rows = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Array[Int], Array[Float])]
-      LocalParquet.dataFiles(
-          new org.apache.hadoop.fs.Path(cur.data, s"cell=$c"), conf)
-        .foreach(f => LocalParquet.readGroups(f.getPath, conf, None) { g =>
+      cur.partFiles(s"cell=$c")
+        .foreach(f => LocalParquet.readGroups(f, conf, None) { g =>
           val id = g.getLong("vec_id", 0)
           if (!dead.contains(id))
             rows += ((id, LocalParquet.intArray(g, "codes"),
@@ -158,32 +149,14 @@ class IvfPqIndex private (
     * the number of vectors newly deleted.
     */
   def delete(ids: DataFrame): Long = synchronized {
-    val spark = emb.sparkSession
-    val incoming = ids.select(col("vec_id").cast("long").as("vec_id"))
-      .distinct()
     val cur = files
-    val newIds = cur.tombstones.fold(incoming)(t =>
-      incoming.join(spark.read.parquet(t), Seq("vec_id"), "left_anti"))
-      .localCheckpoint() // three consumers: cells join, sidecar write, count
-    // touched cells — the one codes scan; ids absent from the stored
-    // table touch nothing (and harmlessly ride the sidecar)
-    val nDel = newIds.count()
-    if (nDel == 0L) return 0L
-    // touched cells — the one codes scan; ids absent from the stored
-    // table touch nothing (and harmlessly ride the sidecar)
-    val touched = spark.read.parquet(cur.data)
-      .join(newIds, Seq("vec_id"))
-      .select(col("cell")).distinct().collect().map(_.getInt(0))
-    tombGen += 1
-    val newTomb = s"$initialCodesPath-tombstones-v$tombGen"
-    cur.tombstones.fold(newIds)(t =>
-      spark.read.parquet(t).unionByName(newIds))
-      .write.parquet(newTomb)
-    files = cur.copy(tombstones = Some(newTomb))
-    versionCounter += 1
-    val v = java.lang.Long.valueOf(versionCounter)
-    touched.foreach(c => cellVersions.put(c, v))
-    nDel
+    cur.delete(ids).fold(0L) { case (nDel, rows, next) =>
+      // touched cells; ids absent from the stored table touch nothing
+      // (and harmlessly ride the sidecar)
+      val touched = rows.select(col("cell")).distinct().collect().map(_.getInt(0))
+      files = next.committed(touched)
+      nDel
+    }
   }
 
   /** Top-k cosine neighbors of `queryId`: one partition-pruned scan of
@@ -311,8 +284,8 @@ class IvfPqIndex private (
           col("cell").cast("long") * IvfPqIndex.CellKeyStride +
           element_at(col("codes"), j + 1).cast("long"))
     }.reduce(_ + _)
-    val cand = codes()
-      .filter(col("cell").isin(allCells: _*))
+    val probed = codes().filter(col("cell").isin(allCells: _*)) // one state, both scans
+    val cand = probed
       .join(broadcast(probeDf), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), adc.as("adc"))
@@ -331,8 +304,7 @@ class IvfPqIndex private (
     // partitions (a second pruned scan, zero corpus scans; AQE
     // broadcasts the Q·shortlist-row side — unhinted per the
     // chunk-offsets rule)
-    val vecs = codes().filter(col("cell").isin(allCells: _*))
-      .select(col("vec_id"), col("embedding"))
+    val vecs = probed.select(col("vec_id"), col("embedding"))
     val qeMap: Map[Long, Seq[Float]] =
       qvecs.map { case (id, v) => id -> v.toSeq }
     val cos = round(Similarity.cosine(col("embedding"),
@@ -444,18 +416,19 @@ class IvfPqIndex private (
         f"${PqIndex.DriftRebuildThreshold}%.1f — appended vectors no " +
         "longer match the build-time cell/codebook distribution; version " +
         "the index dir and rebuild")
-    IvfPqIndex.encodeResiduals(
-      IvfPqIndex.withResiduals(assigned, centroids), m, sub, codebooks)
-      .write.mode("append").partitionBy("cell").parquet(files.data)
-    // bump the index version and stamp every touched cell (the batch's
-    // distinct cells — a metadata-sized collect off the checkpointed
-    // assignment) so warm serve caches can evict exactly those cells
+    // the batch's distinct cells — a metadata-sized collect off the
+    // checkpointed assignment — are stamped so warm serve caches evict
+    // exactly those cells
     val touched = assigned.select(col("cell")).distinct().collect()
       .map(_.getInt(0))
+    // the write and the swap share the lock: a compact() in between
+    // would rewrite a listing without these rows and retire the
+    // directory they landed in
     synchronized {
-      versionCounter += 1
-      val v = java.lang.Long.valueOf(versionCounter)
-      touched.foreach(c => cellVersions.put(c, v))
+      IvfPqIndex.encodeResiduals(
+        IvfPqIndex.withResiduals(assigned, centroids), m, sub, codebooks)
+        .write.mode("append").partitionBy("cell").parquet(files.data)
+      files = files.appended(touched)
     }
     drift
   }
@@ -474,20 +447,20 @@ class IvfPqIndex private (
     * identical and [[cellVersion]]s don't advance.
     */
   def compact(): Unit = synchronized {
-    compactGen += 1
-    val newPath = s"$initialCodesPath-compact$compactGen"
-    // r18: codes() is the tombstone-filtered logical view, so deleted
-    // vectors drop PHYSICALLY here and the sidecar retires — logical
-    // contents unchanged, cell versions don't advance, warm serve
-    // caches stay valid.
-    val live = codes()
+    val cur = files
+    // r18: the rewrite reads the tombstone-filtered logical view, so
+    // deleted vectors drop PHYSICALLY here and the sidecar retires —
+    // logical contents unchanged, cell versions don't advance, warm
+    // serve caches stay valid.
+    val live = cur.frame
     // fully tombstoned → zero rows: a partitioned empty write leaves an
     // unreadable (file-less) dir — keep the mask instead (the Bm25Index
     // compact guard)
     if (live.isEmpty) return
+    val dir = cur.fresh("compact")
     live.repartition(col("cell"))
-      .write.partitionBy("cell").parquet(newPath)
-    files = IndexFiles(newPath, None)
+      .write.partitionBy("cell").parquet(dir)
+    files = cur.compacted(dir)
   }
 }
 

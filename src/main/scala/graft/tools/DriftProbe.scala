@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-loop probe for the IVFPQ composite drift gauge: what the gauge
@@ -12,10 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object DriftProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val corpus = emb.filter(col("vec_id") < 280)

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Dump formatted physical plans for plan audits (pushdown, broadcast,
@@ -16,10 +14,7 @@ object Explain {
     val outFile = if (args.length > 1) args(1) else "/tmp/plans.txt"
     val names = if (args.length > 2) args.drop(2).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val builder = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = graft.core.LocalSession.builder()
     // SPARK_GRAFT_NO_BROADCAST=1 → audit the large-scale plan shape
     // (SMJ/shuffle instead of broadcasts that only exist at tiny SF)
     if (sys.env.get("SPARK_GRAFT_NO_BROADCAST").contains("1"))

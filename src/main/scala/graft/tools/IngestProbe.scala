@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Codec A/B probe for the TickStore ingest path: same 2M-tick
   * generator stream, one ingest per parquet codec, ticks/sec printed
   * per run. Usage: runMain graft.tools.IngestProbe [nTicks]
@@ -9,13 +7,8 @@ import org.apache.spark.sql.SparkSession
 object IngestProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 2000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = graft.core.LocalSession.cpus
+    val spark = graft.core.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val synth = spark.read.format("tickgen")
       .option("rows", n).option("partitions", cpus.toInt).load()

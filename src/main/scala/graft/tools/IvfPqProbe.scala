@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Dev-loop sweep for the r15 residual IVFPQ layout: recall@10 on the
   * RecallSpec/Bench query panel across (nlist, nprobe, cb, shortlist),
@@ -10,13 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object IvfPqProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val emb = graft.core.Tables.embeddings(spark, sfDir).cache()
     val n = emb.count()

@@ -1,5 +1,5 @@
 package graft.tools
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Dev-loop probe for the IVF recall/nprobe curve alone (RecallProbe
   * covers the whole ANN shelf but pays the LSH/PQ sweeps every run).
@@ -8,10 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object IvfProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val emb = graft.core.Tables.embeddings(spark, sfDir).cache()
     val qids = Seq(0L, 7L, 42L, 99L, 250L)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Time individual SparkEntry queries by name (dev loop for bench
   * regressions): `runMain graft.tools.QTime q_dedup_clusters ...`.
   * Each query runs twice; both timings print (cold + warm).
@@ -9,13 +7,8 @@ import org.apache.spark.sql.SparkSession
 object QTime {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val builder = graft.core.LocalSession.builder()
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
     sys.env.get("SPARK_GRAFT_STATE_PROVIDER").foreach(p =>
       builder.config("spark.sql.streaming.stateStore.providerClass", p))
     val spark = builder.getOrCreate()

@@ -5,13 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all suites (Spark startup is ~5s). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.LocalSession.builder().appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +16,8 @@ import graft.core.Tables
   * serve deleted rows. A reader thread loops over the driver-side serve
   * load and the Spark-path logical table while the main thread deletes
   * and compacts, and no id whose delete had returned before a read
-  * began may appear in that read.
+  * began may appear in that read. An append racing `compact` must land
+  * in the directory the index keeps, never in the one it retires.
   */
 class CompactRaceSpec extends AnyFunSuite {
   import TestSpark._
@@ -28,37 +31,16 @@ class CompactRaceSpec extends AnyFunSuite {
   private def race(ids: Seq[Long], delete: Seq[Long] => Unit, compact: () => Unit)
       (read: Int => Set[Long]): (Seq[String], Int) = {
     val deleted = new AtomicReference(Set.empty[Long])
-    val stop = new AtomicBoolean(false)
-    val leaks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val failure = new AtomicReference[Throwable](null)
-    var reads = 0
-    val reader = new Thread(() => {
-      try {
-        var i = 0
-        while (!stop.get) {
-          val before = deleted.get
-          val leaked = read(i) intersect before
-          if (leaked.nonEmpty) leaks.add(s"read $i returned deleted ids ${leaked.take(5)}")
-          i += 1
-        }
-        reads = i
-      } catch { case t: Throwable => failure.set(t) }
-    })
-    reader.start()
-    try {
-      (0 until rounds).foreach { r =>
-        val batch = ids.filter(_ % rounds == r)
-        delete(batch)
-        deleted.set(deleted.get ++ batch)
-        compact()
-      }
-    } finally {
-      stop.set(true)
-      reader.join(120000)
+    CompactRaceSpec.race((0 until rounds).map { r => () =>
+      val batch = ids.filter(_ % rounds == r)
+      delete(batch)
+      deleted.set(deleted.get ++ batch)
+      compact()
+    }) { i =>
+      val before = deleted.get
+      val leaked = read(i) intersect before
+      if (leaked.nonEmpty) Some(s"read $i returned deleted ids ${leaked.take(5)}") else None
     }
-    Option(failure.get).foreach(t => throw t)
-    import scala.jdk.CollectionConverters._
-    (leaks.asScala.toSeq, reads)
   }
 
   test("IVFPQ: no read returns a vector deleted before it began") {
@@ -99,5 +81,66 @@ class CompactRaceSpec extends AnyFunSuite {
     assert(leaks.isEmpty, leaks.mkString("; "))
     assert(reads > 0)
     assert(local() === matching -- victims)
+  }
+
+  test("IVFPQ: vectors appended while compact runs are never lost") {
+    import spark.implicits._
+    val emb = Tables.embeddings(spark, sf)
+    val nl = IvfPqIndex.defaultNlist(IvfPqIndex.countFor(emb))
+    val idx = IvfPqIndex.build(emb, nl, 8, 16) // private — appends mutate
+    val src = emb.filter(col("vec_id") < 5).localCheckpoint()
+    val offsets = (1 to 6).map(_ * 100000L)
+    val appended = offsets.flatMap(o => (0L until 5L).map(_ + o)).toSet
+    val done = new AtomicBoolean(false)
+    val failure = new AtomicReference[Throwable](null)
+    val appender = new Thread(() =>
+      try offsets.foreach(o => idx.appendEncode(src.withColumn("vec_id", col("vec_id") + o)))
+      catch { case t: Throwable => failure.set(t) }
+      finally done.set(true))
+    appender.start()
+    var compactions = 0
+    try while (!done.get) {
+      idx.compact()
+      compactions += 1
+      Thread.sleep(20) // let a waiting append take the lock
+    } finally appender.join(300000)
+    Option(failure.get).foreach(t => throw t)
+    assert(compactions > 0)
+    val viaSpark = idx.codes().select(col("vec_id")).as[Long].collect().toSet
+    val viaLocal = idx.cellRowsLocal(0 until nl).valuesIterator.flatMap(_.map(_._1)).toSet
+    assert((appended -- viaSpark).isEmpty, s"codes() lost ${appended -- viaSpark}")
+    assert((appended -- viaLocal).isEmpty, s"cellRowsLocal lost ${appended -- viaLocal}")
+  }
+}
+
+object CompactRaceSpec {
+  /** Runs `read` (given the read number) on a thread while the calling
+    * thread runs `rounds` in order, until the last round returns;
+    * returns the problems the reads reported and how many reads ran.
+    * A read that throws fails the race.
+    */
+  def race(rounds: Seq[() => Unit])(read: Int => Option[String]): (Seq[String], Int) = {
+    val stop = new AtomicBoolean(false)
+    val problems = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val failure = new AtomicReference[Throwable](null)
+    var reads = 0
+    val reader = new Thread(() => {
+      try {
+        var i = 0
+        while (!stop.get) {
+          read(i).foreach(problems.add)
+          i += 1
+        }
+        reads = i
+      } catch { case t: Throwable => failure.set(t) }
+    })
+    reader.start()
+    try rounds.foreach(_())
+    finally {
+      stop.set(true)
+      reader.join(120000)
+    }
+    Option(failure.get).foreach(t => throw t)
+    (problems.asScala.toSeq, reads)
   }
 }
