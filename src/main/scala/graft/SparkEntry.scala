@@ -519,14 +519,17 @@ object SparkEntry {
       KMeansOps.kmeansCensus(Tables.embeddings(s, dir))),
     "q_ann_pq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      verifyPqDigest = Some(graft.pipeline.IvfIndex.corpusDigest(emb))
-      Similarity.pqTopK(emb, 0L, 10)
+      val out = Similarity.pqTopK(emb, 0L, 10)
+      // the oracle dump inlines the codebooks of the index this query
+      // probed (Similarity.pqTopK's default m = 8, cb = 16)
+      verifyPqCodebooks = Some(graft.pipeline.PqIndex.forTable(emb, 8, 16).codebooks)
+      out
     }),
     "q_ann_ivfpq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       // r15: the residual IVFPQ tier carries its OWN constant set
-      // (coarse centroids + residual codebooks, digest-keyed)
-      verifyIvfPqDigest = Some(graft.pipeline.IvfIndex.corpusDigest(emb))
+      // (coarse centroids + residual codebooks)
+      recordIvfPq(Similarity.ivfPqIndex(emb))
       Similarity.ivfPqTopK(emb, 0L, 10)
     }),
     // r16 (the r15 verdict's #3): attribute-filtered ANN — the same
@@ -536,7 +539,7 @@ object SparkEntry {
     // the dumped constants
     "q_ann_filtered" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      verifyIvfPqDigest = Some(graft.pipeline.IvfIndex.corpusDigest(emb))
+      recordIvfPq(Similarity.ivfPqIndex(emb))
       Similarity.ivfPqTopKFiltered(emb, 0L, col("label") === 1)
     }),
     // r18 (the r17 verdict's #6): BATCH ANN — the whole recall panel
@@ -546,7 +549,7 @@ object SparkEntry {
     // member from the dumped constants
     "q_ann_batch" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      verifyIvfPqDigest = Some(graft.pipeline.IvfIndex.corpusDigest(emb))
+      recordIvfPq(Similarity.ivfPqIndex(emb))
       Similarity.ivfPqTopKBatch(emb, SparkEntry.AnnBatchIds)
     }),
     // r18 (the r17 verdict's #1): vector DELETION on the ANN tier —
@@ -554,27 +557,24 @@ object SparkEntry {
     // answer must equal the same index with the deleted ids masked
     // from the candidate set (the FAISS IDSelector semantic), which the
     // oracle re-derives from the dumped constants. A PRIVATE build —
-    // delete mutates, the shared digest-cached index must not see it;
-    // forTable first so the constants register for the oracle dump.
+    // delete mutates, the shared index must not see it.
     "q_ann_deleted" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      verifyIvfPqDigest = Some(graft.pipeline.IvfIndex.corpusDigest(emb))
       val nl = graft.pipeline.IvfPqIndex.defaultNlist(
         graft.pipeline.IvfPqIndex.countFor(emb))
       // a STANDING index the curation batch was deleted from once —
       // the tombstone lifecycle (build and delete are one-time, the
-      // timed path is the masked probe); private build, never the
-      // shared digest-cached instance (delete mutates), cached like
-      // forTable so repeated calls measure the query, not the rebuild
-      // deletion was invented to avoid
-      val idx = annDeletedFixture.computeIfAbsent(
-        (System.identityHashCode(s), graft.pipeline.IvfIndex.corpusDigest(emb)),
-        _ => {
-          graft.pipeline.IvfPqIndex.forTable(emb, nl, 8, 16) // oracle consts
-          val i = graft.pipeline.IvfPqIndex.build(emb, nl, 8, 16)
-          i.delete(emb.filter(col("vec_id") % 9 === 4).select(col("vec_id")))
-          i
-        })
+      // timed path is the masked probe); its own registry entry, never
+      // the shared forTable instance (delete mutates), so repeated
+      // calls measure the query, not the rebuild deletion was invented
+      // to avoid
+      val idx = graft.core.Artifacts(
+          graft.core.Artifacts.keyOf(emb, "fixture.ann_deleted", nl)) {
+        val i = graft.pipeline.IvfPqIndex.build(emb, nl, 8, 16)
+        i.delete(emb.filter(col("vec_id") % 9 === 4).select(col("vec_id")))
+        i
+      }
+      recordIvfPq(idx)
       idx.topK(0L, 10, graft.pipeline.IvfPqIndex.defaultNprobe(nl),
         Similarity.IvfPqShortlist)
     }),
@@ -675,12 +675,12 @@ object SparkEntry {
     "q_ann_lsh" -> ((s, dir) =>
       Similarity.lshTopK(Tables.embeddings(s, dir), 0L, 10, dim = 64)),
     "q_ann_ivf" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      // record WHICH corpus this verify-path query ran against, so the
-      // oracle dump later requests exactly its centroids (r13 ADVICE:
-      // "most recently used" could be swapped by an unrelated query)
-      verifyIvfDigest = Some(graft.pipeline.IvfIndex.corpusDigest(emb))
-      Similarity.ivfTopK(emb, 0L, 10)
+      // record the centroids of the index this query probed, so the
+      // oracle dump carries exactly them (r13 ADVICE: an unrelated IVF
+      // build must not swap them)
+      val idx = graft.pipeline.IvfIndex.forTable(Tables.embeddings(s, dir), 16)
+      verifyIvfCentroids = Some(idx.centroids)
+      idx.topK(0L, 10, Similarity.DefaultNprobe)
     }),
     "q_embed_dedup" -> ((s, dir) =>
       Similarity.embeddingNearDups(Tables.embeddings(s, dir), dim = 64, threshold = 0.25)),
@@ -815,13 +815,12 @@ object SparkEntry {
       val docs = Tables.documents(s, dir)
       // a STANDING index the curation batch was deleted from once (see
       // q_ann_deleted) — the timed path is the tombstone-masked query
-      val idx = bm25DeletedFixture.computeIfAbsent(
-        (System.identityHashCode(s), graft.pipeline.IvfIndex.corpusDigest(docs)),
-        _ => {
-          val i = graft.pipeline.Bm25Index.build(docs)
-          i.delete(docs.filter(col("doc_id") % 7 === 3).select(col("doc_id")))
-          i
-        })
+      val idx = graft.core.Artifacts(
+          graft.core.Artifacts.keyOf(docs, "fixture.bm25_deleted")) {
+        val i = graft.pipeline.Bm25Index.build(docs)
+        i.delete(docs.filter(col("doc_id") % 7 === 3).select(col("doc_id")))
+        i
+      }
       idx.topK(SparkEntry.Bm25Terms, 10)
     }),
     // r17: dimension-truncation fidelity — overlap@10 of m-prefix
@@ -839,10 +838,11 @@ object SparkEntry {
       graft.pipeline.Similarity.matryoshkaTopK(Tables.embeddings(s, dir), 0L)),
     "q_semdedup" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      // r16: artifact-backed — record the corpus digest so the oracle
-      // dump later requests exactly the centroids this query used
-      verifySemDedupDigest = Some(graft.pipeline.IvfIndex.corpusDigest(emb))
-      Similarity.semDedup(emb)
+      // r16: artifact-backed — record the centroids this query's
+      // verdicts were computed against for the oracle dump
+      val out = Similarity.semDedup(emb)
+      verifySemDedup = graft.pipeline.SemDedupIndex.constantsFor(emb)
+      out
     }),
     // r16 (the r15 verdict's #7): incremental SemDeDup refresh, ORACLED
     // — a 4% modular append assigns against the stored base-fit
@@ -854,9 +854,10 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val base = emb.filter(col("vec_id") % 25 =!= 0)
       val nw = emb.filter(col("vec_id") % 25 === 0)
-      verifySemDedupAppendDigest = Some(
-        graft.pipeline.IvfIndex.corpusDigest(base.unionByName(nw)))
-      Similarity.semDedupAppend(base, nw)
+      val out = Similarity.semDedupAppend(base, nw)
+      verifySemDedupAppend =
+        graft.pipeline.SemDedupIndex.constantsFor(base.unionByName(nw))
+      out
     }),
     // r18 (the r17 verdict's #1): verdict refresh after DELETION — the
     // non-monotone direction (removing a keeper can resurrect the doc
@@ -866,16 +867,18 @@ object SparkEntry {
     "q_semdedup_deleted" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val del = emb.filter(col("vec_id") % 21 === 6).select(col("vec_id"))
-      verifySemDedupDeletedDigest = Some(graft.pipeline.IvfIndex.corpusDigest(
-        graft.pipeline.SemDedupIndex.remainingOf(emb, del)))
-      Similarity.semDedupDelete(emb, del)
+      val out = Similarity.semDedupDelete(emb, del)
+      verifySemDedupDeleted = graft.pipeline.SemDedupIndex.constantsFor(
+        graft.pipeline.SemDedupIndex.remainingOf(emb, del))
+      out
     }),
     // r16: the per-cluster curation census off the same verdict
     // artifact (a metadata read — zero corpus scans)
     "q_semdedup_impact" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      verifySemDedupDigest = Some(graft.pipeline.IvfIndex.corpusDigest(emb))
-      Similarity.semDedupImpact(emb)
+      val out = Similarity.semDedupImpact(emb)
+      verifySemDedup = graft.pipeline.SemDedupIndex.constantsFor(emb)
+      out
     }),
     "q_dedup_survivors" -> ((s, dir) =>
       Dedup.qualitySurvivors(Tables.documents(s, dir))),
@@ -935,37 +938,34 @@ object SparkEntry {
     * epoch-second timestamps (like the reference's format), so the
     * oracle is the direct scan with ts truncated to seconds.
     */
-  private val csvCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def csvImport(s: SparkSession, dir: String): DataFrame = {
     // CSV dump + import are a one-time staging per source dir (the
-    // orcRoundtrip pattern): repeated bench iterations reuse one copy
-    // and one cleanup hook; the timed query then measures the
-    // imported store's scan path, not temp-dir churn
-    val base = csvCache.computeIfAbsent(dir, _ => {
-      val basePath = java.nio.file.Files.createTempDirectory("graft_csv_")
-      registerCleanup(basePath)
-      val csvPath = s"${basePath.toString}/in"
+    // orcRoundtrip pattern): repeated bench iterations reuse one copy;
+    // the timed query then measures the imported store's scan path,
+    // not temp-dir churn
+    val base = staged(s, "staging.csv", dir) { basePath =>
+      val csvPath = s"$basePath/in"
       ticks(s, dir).filter(col("symbol") === "view")
         .select(unix_timestamp(col("ts")).as("timestamp"), col("price"), col("volume"))
         .write.option("header", "true").csv(csvPath)
-      new TickStore(s, s"${basePath.toString}/store").importCsv(csvPath, "VIEW")
-      basePath.toString
-    })
+      new TickStore(s, s"$basePath/store").importCsv(csvPath, "VIEW")
+    }
     new TickStore(s, s"$base/store").all()
       .select(unix_micros(col("ts")).as("ts_us"), col("price"), col("volume"))
       .orderBy("ts_us", "price", "volume")
   }
 
-  private def registerCleanup(p: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      try {
-        val walk = java.nio.file.Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        finally walk.close()
-      } catch { case _: Exception => () }
-    }))
+  /** A one-time staging copy of source dir `dir`: `write` fills a
+    * fresh [[graft.core.TempDirs]] dir once per session; later calls
+    * get its path.
+    */
+  private def staged(s: SparkSession, kind: String, dir: String)(
+      write: String => Unit): String =
+    graft.core.Artifacts(graft.core.Artifacts.key(s, kind, dir)) {
+      val base = graft.core.TempDirs.scoped("graft_" + kind.stripPrefix("staging.") + "_")
+      write(base)
+      base
+    }
 
   /** Z-ordered layout round trip: write ticks clustered by the Morton
     * code of (user_id, coarse time), then run a two-dimensional
@@ -973,24 +973,19 @@ object SparkEntry {
     * direct filtered scan; the point of the layout is that BOTH
     * predicates prune row groups (see [[graft.tsdb.Layout]]).
     */
-  private val zorderCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def zorderScan(s: SparkSession, dir: String): DataFrame = {
     // the Z-ordered layout is a one-time storage decision per source
     // dir (like the bucketed tables / IVF index): build once, reuse —
     // the timed query measures the two-dimensionally pruned SCAN
-    val base = zorderCache.computeIfAbsent(dir, _ => {
-      val basePath = java.nio.file.Files.createTempDirectory("graft_zorder_")
-      registerCleanup(basePath)
+    val base = staged(s, "staging.zorder", dir) { basePath =>
       val epoch2024 = 1704067200L // 2024-01-01T00:00:00Z
       val df = keyedTicks(s, dir)
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts")).as("ts_us"), col("price"))
         .withColumn("ts_sec", expr(s"ts_us div 1000000 - $epoch2024"))
-      graft.tsdb.Layout.writeZOrdered(df, basePath.toString, "user_id", "ts_sec",
+      graft.tsdb.Layout.writeZOrdered(df, basePath, "user_id", "ts_sec",
         partitions = 8)
-      basePath.toString
-    })
+    }
     graft.tsdb.Layout.read(s, base)
       .filter(col("user_id").between(7L, 11L) &&
         col("ts_us") >= 1704844800L * 1000000L && // 2024-01-10
@@ -999,15 +994,9 @@ object SparkEntry {
       .orderBy("event_id")
   }
 
-  /** Bucketed table layout is a one-time storage decision (like the
-    * IVF index): build once per (session, source dir), reuse across
-    * queries in the process.
-    */
-  private val bucketedCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), (String, String)]()
-  // table-name ids come from a dedicated counter, NOT bucketedCache.size():
-  // two concurrent computeIfAbsent builds would observe the same size and
-  // collide on the catalog table name, re-pointing one entry's data
+  // bucketed table names come from a dedicated counter: two sessions
+  // building concurrently must not collide on a catalog table name,
+  // re-pointing one entry's data
   private val bucketedId = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Bucketed co-located join: both fact tables written `bucketBy` on
@@ -1017,25 +1006,27 @@ object SparkEntry {
     * fact-fact query into a free merge of pre-bucketed files. The only
     * remaining exchange is the final tiny per-priority aggregate.
     * `BucketedJoinSpec` asserts the no-shuffle plan; the oracle is the
-    * equivalent plain join (bucketing must not change results).
+    * equivalent plain join (bucketing must not change results). The
+    * layout is a one-time storage decision (like the IVF index): built
+    * once per (session, source dir).
     */
   private def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    val (liT, ordT) = bucketedCache.computeIfAbsent(
-      (System.identityHashCode(s), dir), _ => {
-        val base = graft.core.TempDirs.scoped("graft_bucketed_")
-        val id = bucketedId.getAndIncrement()
-        val li = s"graft_li_bucketed_$id"
-        val ord = s"graft_ord_bucketed_$id"
-        Tables.lineitem(s, dir)
-          .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-          .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-          .option("path", s"$base/li").mode("overwrite").saveAsTable(li)
-        Tables.orders(s, dir)
-          .select(col("o_orderkey"), col("o_orderpriority"))
-          .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-          .option("path", s"$base/ord").mode("overwrite").saveAsTable(ord)
-        (li, ord)
-      })
+    val (liT, ordT) = graft.core.Artifacts(
+        graft.core.Artifacts.key(s, "staging.bucketed", dir)) {
+      val base = graft.core.TempDirs.scoped("graft_bucketed_")
+      val id = bucketedId.getAndIncrement()
+      val li = s"graft_li_bucketed_$id"
+      val ord = s"graft_ord_bucketed_$id"
+      Tables.lineitem(s, dir)
+        .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
+        .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+        .option("path", s"$base/li").mode("overwrite").saveAsTable(li)
+      Tables.orders(s, dir)
+        .select(col("o_orderkey"), col("o_orderpriority"))
+        .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+        .option("path", s"$base/ord").mode("overwrite").saveAsTable(ord)
+      (li, ord)
+    }
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(12, 2)
     s.table(liT).join(s.table(ordT), col("l_orderkey") === col("o_orderkey"))
@@ -1071,24 +1062,13 @@ object SparkEntry {
     * parquet — write the corpus as ORC (zlib), read it back through
     * the ORC reader, digest every column. Value-preserving, so the
     * oracle is the direct parquet scan (same pattern as JSONL).
-    * The written copy is cached per input dir (the
-    * Streams.sentinelInput pattern) so Bench's repeated iterations
-    * reuse one corpus-sized copy and register one cleanup hook.
+    * The written copy is staged once per (session, input dir) so
+    * Bench's repeated iterations reuse one corpus-sized copy.
     */
-  private val orcCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def orcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val base = orcCache.computeIfAbsent(dir, _ => {
-      val basePath = java.nio.file.Files.createTempDirectory("graft_orc_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        val walk = java.nio.file.Files.walk(basePath)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      }))
-      Tables.documents(s, dir).write.orc(s"${basePath.toString}/docs")
-      basePath.toString
-    })
+    val base = staged(s, "staging.orc", dir) { basePath =>
+      Tables.documents(s, dir).write.orc(s"$basePath/docs")
+    }
     s.read.orc(s"$base/docs")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
         md5(col("text")).as("text_md5"))
@@ -1241,6 +1221,28 @@ object SparkEntry {
       |                  (a, b) -> a * 16 + b))) AS s
       |  FROM documents)""".stripMargin
 
+  /** Model constants recorded by the ANN and SemDeDup query lambdas
+    * from the artifact each query used — the oracle dump inlines THESE
+    * (r14, closing the r13 ADVICE lastUsed-swap hazard: an unrelated
+    * build after the query can no longer swap them). None until the
+    * query ran; the dump then emits a placeholder that loudly
+    * mismatches.
+    */
+  @volatile private var verifyIvfCentroids: Option[Array[Array[Double]]] = None
+  @volatile private var verifyPqCodebooks
+      : Option[IndexedSeq[Seq[(Int, Array[Double])]]] = None
+  /** (coarse centroids, residual codebooks, nlist) of the r15 IVFPQ
+    * tier.
+    */
+  @volatile private var verifyIvfPqConstants
+      : Option[(Array[Array[Double]], IndexedSeq[Seq[(Int, Array[Double])]], Int)] = None
+  @volatile private var verifySemDedup: Option[graft.pipeline.SemDedupIndex.Fit] = None
+  @volatile private var verifySemDedupAppend: Option[graft.pipeline.SemDedupIndex.Fit] = None
+  @volatile private var verifySemDedupDeleted: Option[graft.pipeline.SemDedupIndex.Fit] = None
+
+  private def recordIvfPq(idx: graft.pipeline.IvfPqIndex): Unit =
+    verifyIvfPqConstants = Some((idx.centroids, idx.codebooks, idx.nlist))
+
   /** The IVF centroids as a DuckDB VALUES list. The KMeans fit runs
     * inside the `q_ann_ivf` query (cached, offline-style) BEFORE
     * [[oracleSql]] is dumped — Verify executes every query first — so
@@ -1251,54 +1253,14 @@ object SparkEntry {
     * (distance ROUND(...,6), ties to the lower cell id — see
     * [[graft.pipeline.IvfIndex]]).
     */
-  /** Corpus digests recorded by the `q_ann_ivf`/`q_ann_pq` lambdas at
-    * execution time — the oracle dump requests THESE digests' model
-    * constants (r14, closing the r13 ADVICE lastUsed-swap hazard).
-    */
-  @volatile private var verifyIvfDigest: Option[String] = None
-  @volatile private var verifyPqDigest: Option[String] = None
-  @volatile private var verifyIvfPqDigest: Option[String] = None
-  @volatile private var verifySemDedupDigest: Option[String] = None
-  @volatile private var verifySemDedupAppendDigest: Option[String] = None
-  @volatile private var verifySemDedupDeletedDigest: Option[String] = None
-
-  /** r18: the standing deleted-from indexes behind q_ann_deleted /
-    * q_bm25_deleted — build + delete run once per (session, corpus
-    * digest); repeated calls time the tombstone-masked QUERY, not a
-    * rebuild (which deletion exists to avoid).
-    */
-  private val annDeletedFixture =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String),
-      graft.pipeline.IvfPqIndex]()
-  private val bm25DeletedFixture =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String),
-      graft.pipeline.Bm25Index]()
-
-  /** (coarse centroids, residual codebooks, nlist) of the r15 IVFPQ
-    * tier for the corpus the verify run actually queried.
-    */
-  private def verifyIvfPqConstants
-      : Option[(Array[Array[Double]], IndexedSeq[Seq[(Int, Array[Double])]], Int)] =
-    verifyIvfPqDigest.flatMap(graft.pipeline.IvfPqIndex.constantsFor)
-
-  private def verifyIvfCentroids: Option[Array[Array[Double]]] =
-    verifyIvfDigest.flatMap(graft.pipeline.IvfIndex.centroidsFor)
-      .orElse(graft.pipeline.IvfIndex.lastCentroids)
-
-  private[graft] def verifyPqCodebooks
-      : Option[IndexedSeq[Seq[(Int, Array[Double])]]] =
-    verifyPqDigest.flatMap(graft.pipeline.PqIndex.codebooksFor)
-      .orElse(graft.pipeline.PqIndex.lastCodebooks)
-
   private def ivfCentroidsSql: String =
     verifyIvfCentroids match {
       case Some(cs) => cs.zipWithIndex
         .map { case (c, i) => s"($i, [${c.mkString(", ")}])" }
         .mkString(", ")
       // only reachable if the dump runs without the query having run —
-      // never the Verify flow (IvfIndex.lastCentroids warns on stderr);
-      // yields a syntactically valid oracle that will loudly mismatch
-      // instead of crashing the dump
+      // never the Verify flow; yields a syntactically valid oracle that
+      // will loudly mismatch instead of crashing the dump
       case None => "(0, [0.0])"
     }
 
@@ -7898,9 +7860,9 @@ object SparkEntry {
       def cbSql(j: Int): String = cbs match {
         case Some(c) => c(j).map { case (cell, cent) =>
           s"($cell, [${cent.mkString(", ")}])" }.mkString(", ")
-        // only reachable if the dump runs without the query having run
-        // (PqIndex.lastCodebooks warns on stderr); yields a valid
-        // oracle that will loudly mismatch instead of crashing the dump
+        // only reachable if the dump runs without the query having run;
+        // yields a valid oracle that will loudly mismatch instead of
+        // crashing the dump
         case None => "(0, [0.0])"
       }
       def jcte(j: Int): String = {
@@ -9537,28 +9499,24 @@ object SparkEntry {
       // r16: artifact-backed SemDeDup verified from the dumped final
       // centroids (assignment, size cap, keeper rule, cosine gate all
       // re-derived — see duckSemDedupSql)
-      duckSemDedupSql(
-        verifySemDedupDigest.flatMap(graft.pipeline.SemDedupIndex.constantsFor)),
+      duckSemDedupSql(verifySemDedup),
     "q_semdedup_append" ->
       // r16: the incremental path equals a full union re-verdict
       // against the stored base-fit centroids (monotone drops), which
       // is exactly what this SQL re-derives from the dumped constants
-      duckSemDedupSql(verifySemDedupAppendDigest
-        .flatMap(graft.pipeline.SemDedupIndex.constantsFor)),
+      duckSemDedupSql(verifySemDedupAppend),
     "q_semdedup_deleted" ->
       // r18: the delete path equals a filtered-corpus re-verdict
       // against the stored base-fit centroids (touched clusters
       // re-verdict in full — deletion is non-monotone), which this SQL
       // re-derives from the dumped constants over the filtered corpus
-      duckSemDedupSql(verifySemDedupDeletedDigest
-        .flatMap(graft.pipeline.SemDedupIndex.constantsFor),
+      duckSemDedupSql(verifySemDedupDeleted,
         srcWhere = " WHERE vec_id % 21 <> 6"),
     "q_semdedup_impact" ->
       // r16: per-cluster census over the same re-derived verdicts;
       // kept_frac = one division of exact longs (IEEE-identical), dc
       // bounds are the shared ROUND(…,6) assignment distances
-      s"""WITH ${duckSemDedupCtes(
-             verifySemDedupDigest.flatMap(graft.pipeline.SemDedupIndex.constantsFor))}
+      s"""WITH ${duckSemDedupCtes(verifySemDedup)}
          |SELECT CAST(cluster AS BIGINT) AS cluster,
          |       CAST(COUNT(*) AS BIGINT) AS n_vectors,
          |       CAST(SUM(is_kept) AS BIGINT) AS n_kept,

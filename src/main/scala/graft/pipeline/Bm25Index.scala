@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -525,14 +523,9 @@ object Bm25Index {
       .filter(col("df") > 0L)
       .write.parquet(to)
 
-  private val cache = new ConcurrentHashMap[(Int, String), Bm25Index]()
-
   /** Cached build: one index per (session, corpus digest). */
-  def forTable(docs: DataFrame): Bm25Index = {
-    val key = (System.identityHashCode(docs.sparkSession),
-      IvfIndex.corpusDigest(docs))
-    cache.computeIfAbsent(key, _ => build(docs))
-  }
+  def forTable(docs: DataFrame): Bm25Index =
+    graft.core.Artifacts(graft.core.Artifacts.keyOf(docs, "bm25"))(build(docs))
 
   /** Offline build: ONE corpus scan writes the bucket-partitioned
     * postings (dl denormalized onto each row), the vocabulary df table

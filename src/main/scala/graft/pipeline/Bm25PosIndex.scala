@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -225,14 +223,9 @@ object Bm25PosIndex {
   private[pipeline] final case class State(files: IndexFiles, dfPath: String,
       nDocs: Long, totalLen: Long, dlHist: Map[Long, Long])
 
-  private val cache = new ConcurrentHashMap[(Int, String), Bm25PosIndex]()
-
   /** Cached build: one positional index per (session, corpus digest). */
-  def forTable(docs: DataFrame): Bm25PosIndex = {
-    val key = (System.identityHashCode(docs.sparkSession),
-      IvfIndex.corpusDigest(docs))
-    cache.computeIfAbsent(key, _ => build(docs))
-  }
+  def forTable(docs: DataFrame): Bm25PosIndex =
+    graft.core.Artifacts(graft.core.Artifacts.keyOf(docs, "bm25pos"))(build(docs))
 
   /** Offline build: ONE corpus tokenize (posexplode keeps positions)
     * writes the bucket-partitioned positional postings in the

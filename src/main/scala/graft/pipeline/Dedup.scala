@@ -355,44 +355,39 @@ object Dedup {
     * permanent table beside the corpus, rebuilt by the ingest
     * pipeline when the corpus version advances.
     */
-  private val artifactCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String, String), String]()
-
-  /** Full-fixpoint build counter plus the corpus digests it ran for —
-    * the digest set lets the append spec assert (parallel-suite-safe)
-    * that an incremental refresh never ran the whole-corpus fixpoint
-    * for ITS union corpus.
+  /** The parquet artifact at `k`: `write` fills a fresh dir once;
+    * every later call gets its path.
     */
-  private[pipeline] val fullBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
-  private[pipeline] val fullBuildDigests =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def artifactPath(docs: DataFrame, tag: String)(build: String => Unit): String = {
-    val key = (System.identityHashCode(docs.sparkSession),
-      IvfIndex.corpusDigest(docs), tag)
-    artifactCache.computeIfAbsent(key, _ => {
-      val p = graft.core.TempDirs.scoped("graft_dedup_") + s"/$tag"
-      build(p)
+  private def artifact(k: graft.core.Artifacts.Key)(write: String => Unit): String =
+    graft.core.Artifacts(k) {
+      val p = graft.core.TempDirs.scoped("graft_dedup_") + "/artifact"
+      write(p)
       p
-    })
-  }
+    }
 
-  private def artifact(docs: DataFrame, tag: String)(build: String => Unit): DataFrame =
-    docs.sparkSession.read.parquet(artifactPath(docs, tag)(build))
+  /** The whole-corpus fixpoint of `docs`, its own registry entry: its
+    * presence says whether a corpus ever paid the full fixpoint (an
+    * appended union never does).
+    */
+  private[pipeline] def fixpointKey(docs: DataFrame): graft.core.Artifacts.Key =
+    graft.core.Artifacts.keyOf(docs, "dedup.fixpoint")
 
-  private def clustersPath(docs: DataFrame): String = {
-    val digest = IvfIndex.corpusDigest(docs)
-    artifactPath(docs, "clusters") { p =>
-      fullBuilds.incrementAndGet()
-      fullBuildDigests.add(digest)
+  private def clustersKey(docs: DataFrame) =
+    graft.core.Artifacts.keyOf(docs, "dedup.clusters")
+
+  /** The clusters artifact: labels at the path, banded signatures at
+    * `<path>_bands`. Built by the fixpoint, or for an appended union
+    * by [[clustersAppend]].
+    */
+  private def clustersPath(docs: DataFrame): String =
+    graft.core.Artifacts(clustersKey(docs))(artifact(fixpointKey(docs)) { p =>
       nearDupClusters(docs, minhashCandidates(docs)).write.parquet(p)
       // the banded signature table rides along (k·N tiny rows, no
       // text): it is what lets [[clustersAppend]] find new↔old
       // candidate pairs WITHOUT re-tokenizing the base corpus
       bandedSigs(docs).select("doc_id", "band_id", "band_hash")
         .write.parquet(p + "_bands")
-    }
-  }
+    })
 
   def clusters(docs: DataFrame): DataFrame =
     docs.sparkSession.read.parquet(clustersPath(docs))
@@ -435,16 +430,18 @@ object Dedup {
     * incremental index; the rebuild trigger is the corpus version
     * advancing (the [[clusters]] digest), exactly as for [[PqIndex]].
     */
-  def clustersAppend(base: DataFrame, newDocs: DataFrame): DataFrame = {
+  def clustersAppend(base: DataFrame, newDocs: DataFrame): DataFrame =
+    // r15 (ADVICE): a repeat call finds the union's refreshed artifact
+    // without re-tokenizing and re-checkpointing the appended docs
+    // (localCheckpoint runs a job)
+    base.sparkSession.read.parquet(
+      artifact(clustersKey(base.unionByName(newDocs)))(appendTo(base, newDocs, _)))
+
+  /** Writes the clusters artifact of `base ∪ newDocs` to `p` from the
+    * base's stored labels and bands (see [[clustersAppend]]).
+    */
+  private def appendTo(base: DataFrame, newDocs: DataFrame, p: String): Unit = {
     val spark = base.sparkSession
-    // r15 (ADVICE): consult the union-digest cache FIRST — a repeat
-    // call whose refreshed artifact already exists must not re-tokenize
-    // and re-checkpoint the appended docs (localCheckpoint runs a job).
-    val union = base.unionByName(newDocs)
-    val unionKey = (System.identityHashCode(spark),
-      IvfIndex.corpusDigest(union), "clusters")
-    val cached = artifactCache.get(unionKey)
-    if (cached != null) return spark.read.parquet(cached)
     // CONTRACT (r15, ADVICE): base and newDocs doc_ids must be
     // DISJOINT — an appended doc reusing a base id would emit two rows
     // for that doc_id (one from updatedOld, one from updatedNew),
@@ -506,14 +503,9 @@ object Dedup {
     val merged = updatedOld.unionByName(updatedNew)
       .withColumn("is_survivor",
         (col("doc_id") === col("cluster_id")).cast("long"))
-    val path = artifactCache.computeIfAbsent(unionKey, _ => {
-      val p = graft.core.TempDirs.scoped("graft_dedup_") + "/clusters"
-      merged.write.parquet(p)
-      all.select(col("doc_id"), col("band_id"), col("band_hash"))
-        .write.parquet(p + "_bands")
-      p
-    })
-    spark.read.parquet(path)
+    merged.write.parquet(p)
+    all.select(col("doc_id"), col("band_id"), col("band_hash"))
+      .write.parquet(p + "_bands")
   }
 
   /** Exact n-gram Jaccard for candidate pairs (verification stage after
@@ -593,9 +585,10 @@ object Dedup {
     * the corpus-version cadence is the correct posture here.
     */
   def spans(docs: DataFrame, n: Int = 3): DataFrame =
-    artifact(docs, s"spans_$n") { p =>
-      spanDedupCompute(docs, n).write.parquet(p)
-    }
+    docs.sparkSession.read.parquet(
+      artifact(graft.core.Artifacts.keyOf(docs, "dedup.spans", n)) { p =>
+        spanDedupCompute(docs, n).write.parquet(p)
+      })
 
   private def spanDedupCompute(docs: DataFrame, n: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -31,8 +29,8 @@ import org.apache.spark.sql.functions._
   * `q_ann_ivf` end-to-end (centroids inlined as a VALUES list, same
   * rounded-argmin rule; see SparkEntry.centroidsSql).
   *
-  * Process-lifetime cache keyed by (session, source plan, nlist) so
-  * repeated queries against the same corpus reuse one build.
+  * One build per (session, corpus digest, nlist) through
+  * [[graft.core.Artifacts]], so repeated queries reuse it.
   */
 class IvfIndex private (
     emb: DataFrame,
@@ -77,42 +75,6 @@ class IvfIndex private (
 }
 
 object IvfIndex {
-  private val cache = new ConcurrentHashMap[(Int, String, Int), IvfIndex]()
-
-  /** Centroids of the most recently used index, keyed by corpus digest
-    * — read by `SparkEntry.oracleSql` AFTER the verify run's queries
-    * execute, so the dumped DuckDB SQL carries exactly the centroid
-    * table the Spark answer was computed against. The key set lets the
-    * dump detect (and warn about) a multi-corpus process, where "most
-    * recently used" is ambiguous.
-    */
-  @volatile private var lastUsed: Option[(String, Array[Array[Double]])] = None
-  private val usedKeys = ConcurrentHashMap.newKeySet[String]()
-  private val byDigest = new ConcurrentHashMap[String, Array[Array[Double]]]()
-
-  /** r14 (the r13 ADVICE's lastUsed hazard, fixed for IVF and PQ
-    * alike): centroids KEYED BY CORPUS DIGEST — SparkEntry's
-    * `q_ann_ivf` lambda records the digest of the corpus it actually
-    * queried, and the oracle dump requests THAT digest's constants, so
-    * an unrelated IVF query against another corpus between the verify
-    * execution and the dump can no longer swap the oracle's centroid
-    * table. [[lastCentroids]] stays as the legacy fallback (with its
-    * multi-corpus warning) for dumps where no digest was recorded.
-    */
-  def centroidsFor(digest: String): Option[Array[Array[Double]]] =
-    Option(byDigest.get(digest))
-
-  def lastCentroids: Option[Array[Array[Double]]] = {
-    if (usedKeys.size > 1) System.err.println(
-      s"[graft] WARNING: IVF indexes for ${usedKeys.size} distinct corpora " +
-        "were used in this process; the dumped q_ann_ivf oracle carries the " +
-        "most recently used one")
-    if (lastUsed.isEmpty) System.err.println(
-      "[graft] WARNING: ivfCentroidsSql read before any IVF query ran — " +
-        "emitting a placeholder oracle that will loudly mismatch")
-    lastUsed.map(_._2)
-  }
-
   /** Driver-side unit normalization — the exact double op sequence
     * (index-order square fold, IEEE sqrt, one division per component)
     * the build's per-row normalization and the DuckDB oracle both use.
@@ -127,44 +89,12 @@ object IvfIndex {
     if (nrm > 0) v.map(_ / nrm) else v.map(_ => 0.0)
   }
 
-  /** Collision-safe digest of the corpus identity: MD5 over the full
-    * canonicalized plan string plus the schema. Cache keys hold this
-    * 32-char string, not the plan tree itself — a long-lived serve
-    * process must not pin every corpus's analyzed plan in memory.
+  /** Cached build: one index per (session, corpus digest, nlist) —
+    * the query path never rebuilds.
     */
-  private[graft] def corpusDigest(emb: DataFrame): String = {
-    val plan = emb.queryExecution.analyzed.canonicalized
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest((plan.toString + "|" + emb.schema.catalogString)
-      .getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
-  // index parquet lives in temp dirs for the process lifetime; one
-  // shutdown hook removes them all recursively (deleteOnExit alone
-  // cannot delete non-empty directories)
-  private val tempDirs = ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-  private lazy val cleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tempDirs.forEach { p =>
-        val s = java.nio.file.Files.walk(p)
-        try s.sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => java.nio.file.Files.deleteIfExists(q))
-        catch { case _: java.io.IOException => () }
-        finally s.close()
-      }))
-
-  /** Cached build: one index per (session, corpus digest, nlist) for
-    * the process lifetime — the query path never rebuilds.
-    */
-  def forTable(emb: DataFrame, nlist: Int): IvfIndex = {
-    val digest = corpusDigest(emb)
-    val key = (System.identityHashCode(emb.sparkSession), digest, nlist)
-    val idx = cache.computeIfAbsent(key, _ => build(emb, nlist))
-    usedKeys.add(digest)
-    byDigest.put(digest, idx.centroids)
-    lastUsed = Some((digest, idx.centroids))
-    idx
-  }
+  def forTable(emb: DataFrame, nlist: Int): IvfIndex =
+    graft.core.Artifacts(graft.core.Artifacts.keyOf(emb, "ivf", nlist))(
+      build(emb, nlist))
 
   /** The `nprobe` cell ids nearest to `q`: squared L2 accumulated in
     * index order, rounded to 6 digits, ties to the lower cell id — the
@@ -259,9 +189,7 @@ object IvfIndex {
       struct(sqDist(col("vn"), c).as("d"), lit(i).as("c"))
     }: _*)).getField("c")
 
-    cleanupHook // install the shutdown-hook cleaner once
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_")
-    tempDirs.add(dir)
+    val dir = graft.core.TempDirs.scoped("graft_ivf_")
     val cellsPath = s"$dir/cells"
     // r20 (guide §6 small-files): shuffle by cell before the
     // partitioned write so each cell is one file, not one fragment per

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -515,37 +513,18 @@ object IvfPqIndex {
   def defaultNprobe(nlist: Int): Int =
     math.max(4, math.ceil(nlist * 0.4).toInt)
 
-  private val cache =
-    new ConcurrentHashMap[(Int, String, Int, Int, Int), IvfPqIndex]()
-  private val countByDigest = new ConcurrentHashMap[String, java.lang.Long]()
-  private val byDigest = new ConcurrentHashMap[String,
-    (Array[Array[Double]], IndexedSeq[Seq[(Int, Array[Double])]], Int)]()
-
-  /** (centroids, residual codebooks, nlist) keyed by corpus digest —
-    * the oracle-dump handshake (see [[IvfIndex.centroidsFor]]).
+  /** Corpus row count, one per (session, corpus digest), so the nlist
+    * policy costs one metadata-only count per corpus, not per query.
     */
-  def constantsFor(digest: String)
-      : Option[(Array[Array[Double]], IndexedSeq[Seq[(Int, Array[Double])]], Int)] =
-    Option(byDigest.get(digest))
-
-  /** Corpus row count, digest-cached so the nlist policy costs one
-    * metadata-only count per corpus per process, not per query.
-    */
-  private[graft] def countFor(emb: DataFrame): Long = {
-    val d = IvfIndex.corpusDigest(emb)
-    countByDigest.computeIfAbsent(d, _ => emb.count()).longValue()
-  }
+  private[graft] def countFor(emb: DataFrame): Long =
+    graft.core.Artifacts(graft.core.Artifacts.keyOf(emb, "count"))(emb.count())
 
   /** Cached build: one index per (session, corpus digest, nlist, m,
     * cb) for the process lifetime.
     */
-  def forTable(emb: DataFrame, nlist: Int, m: Int, cb: Int): IvfPqIndex = {
-    val digest = IvfIndex.corpusDigest(emb)
-    val key = (System.identityHashCode(emb.sparkSession), digest, nlist, m, cb)
-    val idx = cache.computeIfAbsent(key, _ => build(emb, nlist, m, cb))
-    byDigest.put(digest, (idx.centroids, idx.codebooks, idx.nlist))
-    idx
-  }
+  def forTable(emb: DataFrame, nlist: Int, m: Int, cb: Int): IvfPqIndex =
+    graft.core.Artifacts(graft.core.Artifacts.keyOf(emb, "ivfpq", nlist, m, cb))(
+      build(emb, nlist, m, cb))
 
   /** Unit-normalized vector column — the [[IvfIndex.build]] op
     * sequence (index-order square fold, IEEE sqrt, one guarded

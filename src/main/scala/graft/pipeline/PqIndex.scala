@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -156,49 +154,12 @@ class PqIndex private (
 }
 
 object PqIndex {
-  private val cache = new ConcurrentHashMap[(Int, String, Int, Int), PqIndex]()
-
-  /** Codebooks of the most recently used index — read by
-    * `SparkEntry.oracleSql` AFTER the verify run's queries execute
-    * (the [[IvfIndex.lastCentroids]] pattern), so the dumped DuckDB
-    * SQL carries exactly the codebook constants the Spark answer was
-    * computed against.
-    */
-  @volatile private var lastUsed: Option[(String, IndexedSeq[Seq[(Int, Array[Double])]])] = None
-  private val usedKeys = ConcurrentHashMap.newKeySet[String]()
-  private val byDigest =
-    new ConcurrentHashMap[String, IndexedSeq[Seq[(Int, Array[Double])]]]()
-
-  /** Codebooks keyed by corpus digest — see
-    * [[IvfIndex.centroidsFor]] for the r14 rationale (the lastUsed
-    * swap hazard from the r13 ADVICE).
-    */
-  def codebooksFor(digest: String): Option[IndexedSeq[Seq[(Int, Array[Double])]]] =
-    Option(byDigest.get(digest))
-
-  def lastCodebooks: Option[IndexedSeq[Seq[(Int, Array[Double])]]] = {
-    if (usedKeys.size > 1) System.err.println(
-      s"[graft] WARNING: PQ indexes for ${usedKeys.size} distinct corpora " +
-        "were used in this process; the dumped q_ann_pq oracle carries the " +
-        "most recently used one")
-    if (lastUsed.isEmpty) System.err.println(
-      "[graft] WARNING: pqCodebooksSql read before any PQ query ran — " +
-        "emitting a placeholder oracle that will loudly mismatch")
-    lastUsed.map(_._2)
-  }
-
   /** Cached build: one index per (session, corpus digest, m, cb) for
     * the process lifetime — the query path never rebuilds.
     */
-  def forTable(emb: DataFrame, m: Int, cb: Int): PqIndex = {
-    val digest = IvfIndex.corpusDigest(emb)
-    val key = (System.identityHashCode(emb.sparkSession), digest, m, cb)
-    val idx = cache.computeIfAbsent(key, _ => build(emb, m, cb))
-    usedKeys.add(digest)
-    byDigest.put(digest, idx.codebooks)
-    lastUsed = Some((digest, idx.codebooks))
-    idx
-  }
+  def forTable(emb: DataFrame, m: Int, cb: Int): PqIndex =
+    graft.core.Artifacts(graft.core.Artifacts.keyOf(emb, "pq", m, cb))(
+      build(emb, m, cb))
 
   private[pipeline] def q6(x: Double): Double = {
     val s = x * 1000000.0

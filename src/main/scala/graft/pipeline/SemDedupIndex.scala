@@ -1,8 +1,5 @@
 package graft.pipeline
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -28,13 +25,13 @@ import org.apache.spark.sql.functions._
   *    [[Dedup.maxBucket]] precedent: a degenerate cluster (all vectors
   *    identical) otherwise lands m²/2 pairs on one task; a real corpus
   *    removes those with exact dedup first.
-  *  - **artifact lifecycle**: the fit + verdict runs ONCE per (corpus
-  *    digest, tau); every later call — and every downstream consumer —
-  *    is a metadata read of the persisted verdict table. The fitted
-  *    centroids are digest-keyed for the oracle dump
-  *    ([[IvfIndex.centroidsFor]] handshake), so DuckDB re-derives
-  *    assignment, cap, keeper rule and cosine gate from the SAME
-  *    constants the Spark answer used.
+  *  - **artifact lifecycle**: the fit runs ONCE per corpus digest and
+  *    the verdict once per (digest, tau); every later call — and every downstream consumer —
+  *    is a metadata read of the persisted verdict table. The verdict
+  *    artifact carries the fitted centroids ([[constantsFor]]), which
+  *    the oracle dump inlines, so DuckDB re-derives assignment, cap,
+  *    keeper rule and cosine gate from the SAME constants the Spark
+  *    answer used.
   *  - **incremental append** ([[append]]): new vectors assign against
   *    the STORED centroids (the [[IvfPqIndex.appendEncode]]
   *    discipline) and only TOUCHED clusters re-verdict — drops are
@@ -63,51 +60,56 @@ object SemDedupIndex {
     */
   def defaultK(n: Long): Int = IvfPqIndex.defaultNlist(n)
 
-  private val artifactCache =
-    new ConcurrentHashMap[(Int, String, String), String]()
-  private val byDigest =
-    new ConcurrentHashMap[String, (Seq[(Int, Array[Double])], Int)]()
+  /** Fitted centroids and k of a corpus. */
+  type Fit = (Seq[(Int, Array[Double])], Int)
 
-  /** Full fit+verdict build counter plus PER-DIGEST build counts — the
-    * spec gate that repeated queries (and the append path) never
-    * re-fit. Per-digest (not a global count) so parallel suites
-    * building their own fixtures can't race the assertion (the
-    * [[Dedup.fullBuildDigests]] pattern, counted).
+  /** A persisted verdict table and the fit it was computed against —
+    * for an append or delete refresh, the BASE corpus's fit.
     */
-  private[pipeline] val fullBuilds = new AtomicInteger(0)
-  private[pipeline] val buildCounts =
-    new ConcurrentHashMap[String, AtomicInteger]()
+  private[pipeline] final case class Verdicts(path: String, fit: Fit)
 
-  /** (final centroids, k) for the corpus `digest` — the oracle-dump
-    * handshake (see [[IvfIndex.centroidsFor]]).
+  /** The cosine threshold every caller uses unless it passes its own. */
+  private[pipeline] val DefaultTau = 0.25
+
+  /** The from-scratch fit of `emb`, its own registry entry: its
+    * presence says whether a corpus ever paid the full fit (an appended
+    * union or a filtered corpus never does).
     */
-  def constantsFor(digest: String): Option[(Seq[(Int, Array[Double])], Int)] =
-    Option(byDigest.get(digest))
+  private[pipeline] def fitKey(emb: DataFrame): graft.core.Artifacts.Key =
+    graft.core.Artifacts.keyOf(emb, "semdedup.fit")
 
-  private def tag(tau: Double): String = s"sem_$tau"
+  private def fitOf(emb: DataFrame): Fit =
+    graft.core.Artifacts(fitKey(emb)) {
+      val k = defaultK(IvfPqIndex.countFor(emb))
+      (KMeansOps.fitCentroids(emb, k, iters = 2), k)
+    }
+
+  private[pipeline] def verdictKey(emb: DataFrame, tau: Double): graft.core.Artifacts.Key =
+    graft.core.Artifacts.keyOf(emb, "semdedup.verdicts", tau)
+
+  /** The (centroids, k) the built verdict artifact of `emb` was
+    * computed against — the oracle-dump handshake; None until built.
+    */
+  def constantsFor(emb: DataFrame): Option[Fit] =
+    graft.core.Artifacts.peek[Verdicts](verdictKey(emb, DefaultTau)).map(_.fit)
 
   /** The persisted verdict table `(vec_id, cluster, dc, is_kept)` for
     * `emb` — built on first touch, a parquet read ever after.
     */
-  def verdicts(emb: DataFrame, tau: Double = 0.25): DataFrame =
-    emb.sparkSession.read.parquet(verdictPath(emb, tau))
+  def verdicts(emb: DataFrame, tau: Double = DefaultTau): DataFrame =
+    emb.sparkSession.read.parquet(verdictsOf(emb, tau).path)
 
-  private def verdictPath(emb: DataFrame, tau: Double): String = {
-    val digest = IvfIndex.corpusDigest(emb)
-    val key = (System.identityHashCode(emb.sparkSession), digest, tag(tau))
-    artifactCache.computeIfAbsent(key, _ => {
-      fullBuilds.incrementAndGet()
-      buildCounts.computeIfAbsent(digest, _ => new AtomicInteger(0))
-        .incrementAndGet()
-      val k = defaultK(IvfPqIndex.countFor(emb))
-      val cents = KMeansOps.fitCentroids(emb, k, iters = 2)
-      val p = graft.core.TempDirs.scoped("graft_semdedup_") + "/verdicts"
-      verdictsAgainst(emb, cents, tau).write.parquet(p)
-      // registered INSIDE the build lambda: a later cache hit (any
-      // thread) is therefore guaranteed to find the constants
-      byDigest.put(digest, (cents, k))
-      p
-    })
+  private def verdictsOf(emb: DataFrame, tau: Double): Verdicts =
+    graft.core.Artifacts(verdictKey(emb, tau)) {
+      val fit = fitOf(emb)
+      written(verdictsAgainst(emb, fit._1, tau), fit)
+    }
+
+  /** `verdicts` persisted as an artifact scored against `fit`. */
+  private def written(table: DataFrame, fit: Fit): Verdicts = {
+    val p = graft.core.TempDirs.scoped("graft_semdedup_") + "/verdicts"
+    table.write.parquet(p)
+    Verdicts(p, fit)
   }
 
   /** The full verdict pass against FIXED centroids — shared by the
@@ -206,16 +208,16 @@ object SemDedupIndex {
     * digest, so later [[verdicts]] reads of it hit the cache.
     */
   def delete(base: DataFrame, delIds: DataFrame,
-      tau: Double = 0.25): DataFrame = {
+      tau: Double = DefaultTau): DataFrame =
+    base.sparkSession.read.parquet(graft.core.Artifacts(
+      verdictKey(remainingOf(base, delIds), tau))(deleted(base, delIds, tau)).path)
+
+  /** The verdict artifact of `base` minus `delIds` (see [[delete]]). */
+  private def deleted(base: DataFrame, delIds: DataFrame,
+      tau: Double): Verdicts = {
     val spark = base.sparkSession
-    val remaining = remainingOf(base, delIds)
-    val remDigest = IvfIndex.corpusDigest(remaining)
-    val remKey = (System.identityHashCode(spark), remDigest, tag(tau))
-    val cached = artifactCache.get(remKey)
-    if (cached != null) return spark.read.parquet(cached)
-    val basePath = verdictPath(base, tau) // builds the base artifact if absent
-    val (cents, k) = byDigest.get(IvfIndex.corpusDigest(base))
-    val stored = spark.read.parquet(basePath)
+    val baseV = verdictsOf(base, tau) // builds the base artifact if absent
+    val stored = spark.read.parquet(baseV.path)
     val delSet = delIds.select(col("vec_id")).distinct().localCheckpoint()
     // clusters that lost a member (metadata-sized); their survivors
     // re-fetch embeddings by vec_id (the append discipline — the
@@ -231,29 +233,22 @@ object SemDedupIndex {
     val reVerdict = verdictsOver(touchedMembers, touchedMembers, tau)
     val untouched = survivors.join(touched, Seq("cluster"), "left_anti")
       .select(col("vec_id"), col("cluster"), col("dc"), col("is_kept"))
-    val merged = untouched.unionByName(reVerdict)
-    val path = artifactCache.computeIfAbsent(remKey, _ => {
-      val p = graft.core.TempDirs.scoped("graft_semdedup_") + "/verdicts"
-      merged.write.parquet(p)
-      p
-    })
     // the filtered corpus answers oracle dumps with the BASE constants
-    byDigest.putIfAbsent(remDigest, (cents, k))
-    spark.read.parquet(path)
+    written(untouched.unionByName(reVerdict), baseV.fit)
   }
 
   def append(base: DataFrame, newVecs: DataFrame,
-      tau: Double = 0.25): DataFrame = {
+      tau: Double = DefaultTau): DataFrame =
+    base.sparkSession.read.parquet(graft.core.Artifacts(
+      verdictKey(base.unionByName(newVecs), tau))(appended(base, newVecs, tau)).path)
+
+  /** The verdict artifact of `base ∪ newVecs` (see [[append]]). */
+  private def appended(base: DataFrame, newVecs: DataFrame,
+      tau: Double): Verdicts = {
     val spark = base.sparkSession
-    val union = base.unionByName(newVecs)
-    val unionDigest = IvfIndex.corpusDigest(union)
-    val unionKey = (System.identityHashCode(spark), unionDigest, tag(tau))
-    val cached = artifactCache.get(unionKey)
-    if (cached != null) return spark.read.parquet(cached)
-    val basePath = verdictPath(base, tau) // builds the base artifact if absent
-    val baseDigest = IvfIndex.corpusDigest(base)
-    val (cents, k) = byDigest.get(baseDigest)
-    val stored = spark.read.parquet(basePath)
+    val baseV = verdictsOf(base, tau) // builds the base artifact if absent
+    val cents = baseV.fit._1
+    val stored = spark.read.parquet(baseV.path)
     val assignedNew = KMeansOps.assignWithDist(newVecs, cents)
       .localCheckpoint() // touched set, pair side and verdicts all read it
     val touched = assignedNew.select(col("cluster")).distinct()
@@ -321,16 +316,8 @@ object SemDedupIndex {
     }
     val untouched = stored.join(touched, Seq("cluster"), "left_anti")
       .select(col("vec_id"), col("cluster"), col("dc"), col("is_kept"))
-    val merged = untouched.unionByName(reVerdict)
-    val path = artifactCache.computeIfAbsent(unionKey, _ => {
-      val p = graft.core.TempDirs.scoped("graft_semdedup_") + "/verdicts"
-      merged.write.parquet(p)
-      p
-    })
     // the union corpus answers oracle dumps with the BASE constants —
-    // append never refits (registered under the union digest so a
-    // q_semdedup_append dump finds them)
-    byDigest.putIfAbsent(unionDigest, (cents, k))
-    spark.read.parquet(path)
+    // append never refits
+    written(untouched.unionByName(reVerdict), baseV.fit)
   }
 }

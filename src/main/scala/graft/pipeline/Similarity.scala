@@ -773,12 +773,23 @@ object Similarity {
   def ivfPqTopK(emb: DataFrame, queryId: Long, k: Int = 10,
       nlist: Int = -1, nprobe: Int = -1, m: Int = 8, cb: Int = 16,
       shortlist: Int = IvfPqShortlist): DataFrame = {
+    val idx = ivfPqIndex(emb, nlist, m, cb)
+    idx.topK(queryId, k, nprobeOf(idx, nprobe), shortlist)
+  }
+
+  /** The IVFPQ index the `ivfPqTopK*` queries probe: `nlist` ≤ 0 takes
+    * the ~√N policy ([[IvfPqIndex.defaultNlist]]).
+    */
+  def ivfPqIndex(emb: DataFrame, nlist: Int = -1, m: Int = 8,
+      cb: Int = 16): IvfPqIndex = {
     reg(emb)
     val nl = if (nlist > 0) nlist
       else IvfPqIndex.defaultNlist(IvfPqIndex.countFor(emb))
-    val np = if (nprobe > 0) nprobe else IvfPqIndex.defaultNprobe(nl)
-    IvfPqIndex.forTable(emb, nl, m, cb).topK(queryId, k, np, shortlist)
+    IvfPqIndex.forTable(emb, nl, m, cb)
   }
+
+  private def nprobeOf(idx: IvfPqIndex, nprobe: Int): Int =
+    if (nprobe > 0) nprobe else IvfPqIndex.defaultNprobe(idx.nlist)
 
   /** r18 (the r17 verdict's #6): BATCH IVFPQ retrieval — a whole query
     * panel probed and scored in ONE plan (two pruned scans total);
@@ -788,11 +799,8 @@ object Similarity {
   def ivfPqTopKBatch(emb: DataFrame, queryIds: Seq[Long], k: Int = 10,
       nlist: Int = -1, nprobe: Int = -1, m: Int = 8, cb: Int = 16,
       shortlist: Int = IvfPqShortlist): DataFrame = {
-    reg(emb)
-    val nl = if (nlist > 0) nlist
-      else IvfPqIndex.defaultNlist(IvfPqIndex.countFor(emb))
-    val np = if (nprobe > 0) nprobe else IvfPqIndex.defaultNprobe(nl)
-    IvfPqIndex.forTable(emb, nl, m, cb).topKBatch(queryIds, k, np, shortlist)
+    val idx = ivfPqIndex(emb, nlist, m, cb)
+    idx.topKBatch(queryIds, k, nprobeOf(idx, nprobe), shortlist)
   }
 
   /** r16 (the r15 verdict's #3): ATTRIBUTE-FILTERED IVFPQ top-k — the
@@ -810,12 +818,8 @@ object Similarity {
   def ivfPqTopKFiltered(emb: DataFrame, queryId: Long, filter: Column,
       k: Int = 10, nlist: Int = -1, nprobe: Int = -1, m: Int = 8,
       cb: Int = 16, shortlist: Int = IvfPqShortlist): DataFrame = {
-    reg(emb)
-    val nl = if (nlist > 0) nlist
-      else IvfPqIndex.defaultNlist(IvfPqIndex.countFor(emb))
-    val np = if (nprobe > 0) nprobe else IvfPqIndex.defaultNprobe(nl)
-    IvfPqIndex.forTable(emb, nl, m, cb)
-      .topK(queryId, k, np, shortlist, Some(filter))
+    val idx = ivfPqIndex(emb, nlist, m, cb)
+    idx.topK(queryId, k, nprobeOf(idx, nprobe), shortlist, Some(filter))
   }
 
   /** NEW r14: int8 quantization-error histogram — per vector, the

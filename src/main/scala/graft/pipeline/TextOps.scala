@@ -1313,28 +1313,19 @@ object TextOps {
       .orderBy("merge_rank")
   }
 
-  /** r16: the induction is DIGEST-CACHED per (session, corpus, k) —
-    * the per-call-refit posture the r12/r15 verdicts flagged for
-    * PQ/SemDeDup, closed for the one remaining iterative fit: repeated
-    * q_bpe_vocab/q_bpe_apply calls (and both together) pay ONE k-round
-    * induction per corpus per process. The cached state is the merge
-    * list plus the final localCheckpointed type table — both
-    * session-tied, hence the session key.
-    */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, Int), (Seq[(Long, String, String, String, Long)], DataFrame)]()
-
   /** The shared induction loop: returns the merge list AND the final
     * word-type state table `(w, freq, t)` (checkpointed), so
     * [[bpeApply]] reuses the already-folded states instead of
-    * re-scanning the corpus and re-applying every merge.
+    * re-scanning the corpus and re-applying every merge. r16: one
+    * induction per (session, corpus digest, k) — repeated
+    * q_bpe_vocab/q_bpe_apply calls (and both together) pay ONE k-round
+    * induction per corpus; the cached state is session-tied (a
+    * localCheckpointed table), hence the session in the key.
     */
   private def bpeInduce(docs: DataFrame, k: Int)
       : (Seq[(Long, String, String, String, Long)], DataFrame) =
-    bpeCache.computeIfAbsent(
-      (System.identityHashCode(docs.sparkSession),
-        IvfIndex.corpusDigest(docs), k),
-      _ => bpeInduceUncached(docs, k))
+    graft.core.Artifacts(graft.core.Artifacts.keyOf(docs, "bpe", k))(
+      bpeInduceUncached(docs, k))
 
   private def bpeInduceUncached(docs: DataFrame, k: Int)
       : (Seq[(Long, String, String, String, Long)], DataFrame) = {

@@ -81,13 +81,11 @@ object Streams {
   /** Stage the events file plus one sentinel tick 2 hours past the
     * real max event time into a stream-input directory (2 h clears
     * every window size used here against the 10-minute watermark).
-    * Cached per source dir — every streaming query over the same data
-    * shares one staged copy and one max-ts scan.
+    * Staged once per (session, source dir) — every streaming query
+    * over the same data shares one staged copy and one max-ts scan.
     */
-  private val sentinelCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def sentinelInput(spark: SparkSession, dir: String): String =
-    sentinelCache.computeIfAbsent(dir, _ => {
+    graft.core.Artifacts(graft.core.Artifacts.key(spark, "staging.sentinel", dir)) {
       val maxTs = graft.core.Tables.eventsRaw(spark, dir)
         .agg(max(col("ts"))).head().getAs[java.time.LocalDateTime](0)
       val base = Paths.get(graft.core.TempDirs.scoped("graft_stream_in_"))
@@ -105,18 +103,8 @@ object Streams {
         try listing.filter(_.toString.endsWith(".parquet")).findFirst().get()
         finally listing.close()
       Files.move(part, in.resolve("zz_sentinel.parquet"))
-      // staged copies live for the process; sweep them on shutdown
-      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(base)))
       in.toString
-    })
-
-  private def deleteTree(root: java.nio.file.Path): Unit =
-    try {
-      val walk = Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    } catch { case _: Exception => () }
+    }
 
   /** Streaming ingest → parquet sink with checkpoint (exactly-once),
     * then scan the sink back. Mirrors reference append path running in

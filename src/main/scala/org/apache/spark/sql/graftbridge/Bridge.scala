@@ -8,9 +8,14 @@ import org.apache.spark.sql.classic
   * custom logical operator ([[graft.plans.AsOfJoinNode]]) can be turned
   * back into a user-facing DataFrame. This is the standard extension
   * technique for third-party operators (same trick Spark connector
-  * libraries use); nothing else from the private surface is touched.
+  * libraries use), plus the session UUID that keys
+  * [[graft.core.Artifacts]]; nothing else from the private surface is
+  * touched.
   */
 object Bridge {
+  def sessionUUID(spark: SparkSession): String =
+    spark.asInstanceOf[classic.SparkSession].sessionUUID
+
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 

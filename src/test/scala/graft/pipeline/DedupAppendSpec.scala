@@ -32,11 +32,11 @@ class DedupAppendSpec extends AnyFunSuite {
     assert(appended.size === union.count())
     assert(appended === rebuilt)
 
-    // the union corpus digest must never have gone through the
-    // full-fixpoint build path (digest-keyed, so parallel suites
-    // building artifacts for OTHER corpora can't pollute the check)
-    val unionDigest = IvfIndex.corpusDigest(union)
-    assert(!Dedup.fullBuildDigests.contains(unionDigest),
+    // the union corpus must never have gone through the full-fixpoint
+    // build (its own registry key, so parallel suites building
+    // artifacts for OTHER corpora can't pollute the check)
+    val unionFixpoint = Dedup.fixpointKey(union)
+    assert(graft.core.Artifacts.peek[String](unionFixpoint).isEmpty,
       "append path ran the full-corpus fixpoint for the union corpus")
 
     // the refreshed artifact is registered under the union digest:
@@ -44,7 +44,7 @@ class DedupAppendSpec extends AnyFunSuite {
     // read, not a rebuild
     val viaArtifact = toMap(Dedup.clusters(base.unionByName(extra)))
     assert(viaArtifact === rebuilt)
-    assert(!Dedup.fullBuildDigests.contains(unionDigest))
+    assert(graft.core.Artifacts.peek[String](unionFixpoint).isEmpty)
   }
 
   test("clustersAppend contract: base and appended doc_ids are disjoint") {

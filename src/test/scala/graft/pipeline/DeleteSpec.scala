@@ -83,11 +83,10 @@ class DeleteSpec extends AnyFunSuite {
     val remaining = SemDedupIndex.remainingOf(emb, del)
     // never a second full fit: the artifact registers under the
     // filtered digest without building
-    assert(SemDedupIndex.buildCounts
-      .get(IvfIndex.corpusDigest(remaining)) == null,
+    assert(graft.core.Artifacts.peek[SemDedupIndex.Fit](
+      SemDedupIndex.fitKey(remaining)).isEmpty,
       "delete ran the full fit for the filtered corpus")
-    val (cents, _) =
-      SemDedupIndex.constantsFor(IvfIndex.corpusDigest(emb)).get
+    val (cents, _) = SemDedupIndex.constantsFor(emb).get
     val ref = rows(
       SemDedupIndex.verdictsAgainst(remaining, cents, 0.25)
         .select(col("vec_id"), col("cluster").cast("long").as("cluster"),

@@ -22,15 +22,26 @@ class SemDedupSpec extends AnyFunSuite {
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
 
   test("repeated calls reuse ONE artifact build per corpus digest") {
-    val digest = IvfIndex.corpusDigest(emb)
+    import graft.core.Artifacts
+    val verdictKey = SemDedupIndex.verdictKey(emb, SemDedupIndex.DefaultTau)
     val first = rows(Similarity.semDedup(emb))
-    val second = rows(Similarity.semDedup(emb))
-    assert(first === second)
-    assert(SemDedupIndex.buildCounts.get(digest).get() === 1,
-      "the fit+verdict pass must run exactly once per corpus digest")
+    val built = Artifacts.peek[SemDedupIndex.Verdicts](verdictKey)
+    assert(built.isDefined, "the verdicts must be a registry artifact")
+    val second = Similarity.semDedup(emb)
+    assert(first === rows(second))
+    // ONE verdict build: the entry is the same value after the second
+    // call, and that call reads the table the first build wrote
+    assert(Artifacts.peek[SemDedupIndex.Verdicts](verdictKey).exists(_ eq built.get),
+      "the verdict artifact was rebuilt")
+    assert(second.inputFiles.nonEmpty &&
+      second.inputFiles.forall(_.contains(built.get.path)),
+      "the second call did not read the first build's verdict table")
+    // ONE fit: the verdicts were scored against the registry's fit entry
+    assert(Artifacts.peek[SemDedupIndex.Fit](SemDedupIndex.fitKey(emb))
+      .exists(_ eq built.get.fit), "the fit must run exactly once per corpus digest")
     // the artifact content equals a recompute from the dumped constants
     // (what the DuckDB oracle independently re-derives)
-    val (cents, k) = SemDedupIndex.constantsFor(digest).get
+    val (cents, k) = SemDedupIndex.constantsFor(emb).get
     assert(k === SemDedupIndex.defaultK(emb.count()))
     val ref = rows(SemDedupIndex.verdictsAgainst(emb, cents, 0.25)
       .select(col("vec_id"), col("cluster").cast("long").as("cluster"),
@@ -81,14 +92,13 @@ class SemDedupSpec extends AnyFunSuite {
     val got = rows(Similarity.semDedupAppend(base, nw))
     // the union fixpoint must NOT have full-built (per-digest gate —
     // parallel suites build their own fixtures)
-    val unionDigest = IvfIndex.corpusDigest(base.unionByName(nw))
-    assert(SemDedupIndex.buildCounts.get(unionDigest) == null,
+    assert(graft.core.Artifacts.peek[SemDedupIndex.Fit](
+      SemDedupIndex.fitKey(base.unionByName(nw))).isEmpty,
       "append ran the full fit for the union corpus")
     // reference: the whole union re-verdicted against the BASE-fit
     // centroids (the append's documented equality contract — model
     // refresh is the digest-advance rebuild, not the append's job)
-    val (cents, _) =
-      SemDedupIndex.constantsFor(IvfIndex.corpusDigest(base)).get
+    val (cents, _) = SemDedupIndex.constantsFor(base).get
     val ref = rows(SemDedupIndex.verdictsAgainst(base.unionByName(nw), cents, 0.25)
       .select(col("vec_id"), col("cluster").cast("long").as("cluster"),
         col("is_kept"))
