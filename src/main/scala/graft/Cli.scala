@@ -214,55 +214,63 @@ object Cli {
         annServe.foreach(_.prewarm())
         bm25Serve.foreach(_.prewarm())
       } catch { case e: Exception =>
-        out.println(s"prewarm: ${e.getMessage}")
+        // diagnostics go to stderr: `out` carries only protocol lines
+        System.err.println(s"[graft] prewarm: ${e.getMessage}")
       }
     }
     // the tick store keeps no versions: this loop's own `insert`
     // invalidates its symbol instead
     val cache = new ServeCache[String, SymCache](maxSymbols, _ => 0L)
     def load(sym: String): SymCache = {
-      // r13 cold path: (count, max ts) come from parquet FOOTERS
-      // driver-side (symbolStatsFast — no Spark job; the footers are
-      // the per-symbol stats sidecar, maintained by every
-      // ingest/compact commit by construction), falling back to the
-      // fused stats aggregation for pre-r13 INT96 stores
-      val (total, maxTs) = localFirst("serve symbol stats")(
-        store.symbolStatsFast(sym))(store.symbolStats(sym))
-      if (total == 0L) SymCache(0L, 0L, Array.empty, Array.empty, Array.empty)
-      else {
-        val maxSec = maxTs.get.getTime / 1000L
-        val fromSec = maxSec - windowDays.toLong * 86400L
-        // the window ticks read DRIVER-SIDE from the symbol's parquet
-        // files (scanRangeLocal — the reference's mmap'd-column-files
-        // analog, with ts row-group skipping; a Spark job pays ~250 ms
-        // of scheduling/serialization for the same bytes), falling back
-        // to a pruned Spark scan for pre-r13 INT96 stores. End bound is
-        // the UNTRUNCATED max ts: a whole-second end would silently drop
-        // the newest fractional second while `total` counts it (r12
-        // ADVICE). Both paths yield (epoch µs, price, volume) sorted by
-        // ts (a stable sort: files/groups may interleave).
-        val endUs = Math.floorDiv(maxTs.get.getTime, 1000L) * 1000000L +
-          maxTs.get.getNanos / 1000L
-        val (us, pr, vo) = localFirst("serve window scan")(
-          store.scanRangeLocal(sym, fromSec * 1000000L, endUs).map {
-            case (us, pr, vo) =>
-              val order = us.indices.toArray.sortBy(us)
-              (order.map(us), order.map(pr), order.map(vo))
-          }) {
+      // the cached window: the trailing `windowDays` from the newest
+      // tick's second, ending at the UNTRUNCATED newest tick — a
+      // whole-second end would silently drop the newest fractional
+      // second while `total` counts it (r12 ADVICE)
+      def fromSec(maxUs: Long) = Math.floorDiv(maxUs, 1000000L) - windowDays.toLong * 86400L
+      // both paths yield (epoch µs, price, volume) sorted by ts (a
+      // stable sort: files/groups may interleave)
+      def cached(total: Long, maxUs: Long, us: Array[Long], pr: Array[Double],
+          vo: Array[Long]) = {
+        val order = us.indices.toArray.sortBy(us)
+        SymCache(fromSec(maxUs), total, order.map(i => Math.floorDiv(us(i), 1000000L)),
+          order.map(pr), order.map(vo))
+      }
+      val empty = SymCache(0L, 0L, Array.empty, Array.empty, Array.empty)
+      // r13 cold path, DRIVER-SIDE and job-free: the symbol's files are
+      // listed once and opened once; (count, max ts) come from their
+      // footers (the per-symbol stats sidecar, maintained by every
+      // ingest/compact commit by construction), then the window ticks
+      // from the same readers' overlapping row groups (the reference's
+      // mmap'd-column-files analog). A pre-r13 INT96 store declines and
+      // loads from Spark: the fused stats aggregation, then a pruned
+      // scan.
+      localFirst("serve symbol load")(store.readLocal(sym) { r =>
+        r.stats.flatMap {
+          case (_, None) => Some(empty)
+          case (total, Some(maxUs)) =>
+            r.scan(fromSec(maxUs) * 1000000L, maxUs).map {
+              case (us, pr, vo) => cached(total, maxUs, us, pr, vo)
+            }
+        }
+      }) {
+        val (total, maxTs) = store.symbolStats(sym)
+        if (total == 0L) empty
+        else {
+          val maxUs = Math.floorDiv(maxTs.get.getTime, 1000L) * 1000000L +
+            maxTs.get.getNanos / 1000L
           // null price/volume coalesce to 0 so this fallback and the
           // fast path agree on degenerate rows (r13 ADVICE:
-          // getDouble/getLong NPE'd here where scanRangeLocal
+          // getDouble/getLong NPE'd here where the local scan
           // zero-filled)
           val rows = store.scanRange(sym,
-            new java.sql.Timestamp(fromSec * 1000L), maxTs.get)
+            new java.sql.Timestamp(fromSec(maxUs) * 1000L), maxTs.get)
             .select(unix_micros(col("ts")),
               coalesce(col("price"), lit(0.0)),
               coalesce(col("volume"), lit(0L)))
             .collect()
-            .sortBy(_.getLong(0))
-          (rows.map(_.getLong(0)), rows.map(_.getDouble(1)), rows.map(_.getLong(2)))
+          cached(total, maxUs, rows.map(_.getLong(0)), rows.map(_.getDouble(1)),
+            rows.map(_.getLong(2)))
         }
-        SymCache(fromSec, total, us.map(Math.floorDiv(_, 1000000L)), pr, vo)
       }
     }
     def warm(sym: String): SymCache = cache.getOrLoadOne(sym)(load(sym))

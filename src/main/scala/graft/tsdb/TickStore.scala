@@ -2,6 +2,7 @@ package graft.tsdb
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -174,181 +175,67 @@ final class TickStore(spark: SparkSession, path: String,
 
   /** The parquet data files of `symbol` (under its daily `ts_date=`
     * directories or flat), skipping `_`/`.` names; empty when the
-    * symbol has no directory. A fresh listing per call.
+    * symbol has no directory. One fresh listing per call.
     */
   private def symbolFiles(symbol: String,
       conf: org.apache.hadoop.conf.Configuration): Seq[org.apache.hadoop.fs.FileStatus] = {
     val dir = new org.apache.hadoop.fs.Path(path, s"symbol=$symbol")
     val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) Seq.empty
-    else (if (dailyPartitions)
+    val listed =
+      if (dailyPartitions)
         Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir, "ts_date=*/*")))
           .map(_.toSeq).getOrElse(Seq.empty)
-      else fs.listStatus(dir).toSeq).filter { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
+      else
+        try fs.listStatus(dir).toSeq
+        catch { case _: java.io.FileNotFoundException => Seq.empty }
+    listed.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+  }
+
+  /** The driver-side read of one symbol: its files listed once, each
+    * opened once ([[graft.core.LocalParquet.open]]), all closed when
+    * `f` returns. The serve loop's cold load takes the footer stats and
+    * then the window's row groups from the same readers;
+    * [[symbolStatsFast]] and [[scanRangeLocal]] each take one of them.
+    * A fresh listing per call sees exactly the committed files (the
+    * ConcurrentServeSpec contract).
+    */
+  private[graft] def readLocal[T](symbol: String)(f: LocalSymbol => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val readers = scala.collection.mutable.ArrayBuffer.empty[ParquetFileReader]
+    try {
+      symbolFiles(symbol, conf).foreach(st => readers += graft.core.LocalParquet.open(st, conf))
+      f(new LocalSymbol(readers.toSeq))
+    } finally readers.foreach(_.close())
   }
 
   /** r13 serve-cold fast path: (tick count, newest ts) for a symbol
-    * read DRIVER-SIDE from parquet footers — no Spark job at all. Row
-    * counts live in every footer; the ts maximum comes from the
-    * column's row-group max statistics, which exist because [[ingest]]
-    * writes INT64 TIMESTAMP(MICROS) (INT96 files carry none). This is
-    * the "per-symbol stats sidecar maintained by ingest/compact/
-    * expire" with zero staleness by construction: the parquet footers
-    * ARE the sidecar, rewritten atomically with the data by the same
-    * commit that lands it — a fresh listing per call sees exactly the
-    * committed files (the ConcurrentServeSpec contract). Cost is
-    * O(files) driver metadata reads — bounded by [[compact]], and one
-    * bulk LIST + footer GETs on an object store.
-    *
-    * Returns None when any data file lacks usable ts statistics (a
-    * store written by pre-r13 INT96 builds) — callers fall back to the
-    * [[symbolStats]] aggregation scan, so mixed-era stores stay
-    * correct.
+    * read DRIVER-SIDE from parquet footers — no Spark job at all
+    * ([[LocalSymbol.stats]]). Returns None when any data file lacks
+    * usable ts statistics (a store written by pre-r13 INT96 builds) —
+    * callers fall back to the [[symbolStats]] aggregation scan, so
+    * mixed-era stores stay correct.
     */
-  def symbolStatsFast(symbol: String): Option[(Long, Option[java.sql.Timestamp])] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = symbolFiles(symbol, conf)
-    var total = 0L
-    var maxUs = Long.MinValue
-    files.foreach { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-      try {
-        reader.getFooter.getBlocks.forEach { b =>
-          if (b.getRowCount > 0) {
-            total += b.getRowCount
-            val ts = b.getColumns.asScala.find(
-              _.getPath.toDotString == "ts")
-            val stats = ts.map(_.getStatistics).orNull
-            // hasNonNullValue guards the all-null-ts row group (r13
-            // ADVICE): its LongStatistics are non-empty (numNulls set)
-            // but min/max are UNINITIALIZED — getMax would silently
-            // anchor maxTs at epoch 0. Same fallback as INT96.
-            if (stats == null || stats.isEmpty ||
-                !stats.isInstanceOf[org.apache.parquet.column.statistics.LongStatistics] ||
-                !stats.hasNonNullValue())
-              return None // INT96-era file or null-only group: no usable ts stats
-            maxUs = math.max(maxUs,
-              stats.asInstanceOf[org.apache.parquet.column.statistics.LongStatistics].getMax)
-          }
-        }
-      } finally reader.close()
+  def symbolStatsFast(symbol: String): Option[(Long, Option[java.sql.Timestamp])] =
+    readLocal(symbol)(_.stats).map { case (n, maxUs) =>
+      (n, maxUs.map { us =>
+        val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
+        t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
+        t
+      })
     }
-    if (total == 0L) Some((0L, None))
-    else Some((total, Some({
-      val t = new java.sql.Timestamp(Math.floorDiv(maxUs, 1000000L) * 1000L)
-      t.setNanos((Math.floorMod(maxUs, 1000000L) * 1000L).toInt)
-      t
-    })))
-  }
 
-  /** r13 serve-cold fast path, part 2: the window ticks themselves
-    * read DRIVER-SIDE from the symbol's parquet files — no Spark job.
-    * This is the serving layer's analog of the reference's mmap'd
-    * per-symbol column files (/root/reference/column_storage.hpp): the
-    * files ARE a columnar store, so a warm-up read of one symbol's
-    * recent window is a direct columnar read plus a row-group skip on
-    * the ts min/max statistics (the B+-tree descent analog, executed
-    * in-process). A Spark job pays ~250 ms of scheduling +
-    * row-serialization for the same bytes; this path reads them in
-    * tens of ms. Scale posture unchanged: this reads ONE symbol's
-    * window (the serve cache's bounded unit) — corpus-wide scans stay
-    * on the cluster.
-    *
-    * Returns (epoch-micros, price, volume) arrays, UNSORTED across
-    * files/row-groups (the caller sorts; within a row group rows are
-    * already ts-sorted by ingest). None when any file lacks INT64 ts
-    * (a pre-r13 INT96 store) — callers fall back to the Spark scan.
-    * Rows with a null ts are skipped; null price/volume read as 0
-    * (degenerate for tick data; the Cli's Spark fallback coalesces
-    * nulls to 0 the same way — r13 ADVICE — while the raw
-    * [[scanRange]] DataFrame surface keeps SQL NULL semantics).
+  /** r13 serve-cold fast path, part 2: the ticks with
+    * `startUs <= ts <= endUs` read DRIVER-SIDE from the symbol's parquet
+    * files — no Spark job ([[LocalSymbol.scan]]). None when any file
+    * lacks INT64 ts (a pre-r13 INT96 store) — callers fall back to the
+    * Spark scan.
     */
   def scanRangeLocal(symbol: String, startUs: Long, endUs: Long)
-      : Option[(Array[Long], Array[Double], Array[Long])] = {
-    import org.apache.parquet.column.impl.ColumnReadStoreImpl
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = symbolFiles(symbol, conf)
-    val tsB = Array.newBuilder[Long]
-    val prB = Array.newBuilder[Double]
-    val voB = Array.newBuilder[Long]
-    // no-op converter tree: we pull values straight off the column
-    // readers, never through record assembly
-    object NoopPrim extends PrimitiveConverter {
-      override def addLong(v: Long): Unit = ()
-      override def addDouble(v: Double): Unit = ()
-      override def addBinary(v: Binary): Unit = ()
-    }
-    object NoopGroup extends GroupConverter {
-      override def getConverter(i: Int): Converter = NoopPrim
-      override def start(): Unit = ()
-      override def end(): Unit = ()
-    }
-    files.foreach { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-      try {
-        val footer = reader.getFooter
-        val schema = footer.getFileMetaData.getSchema
-        val createdBy = footer.getFileMetaData.getCreatedBy
-        def colDesc(name: String) = {
-          val idx = schema.getFieldIndex(name)
-          schema.getColumns.get(idx)
-        }
-        val tsIdx = schema.getFieldIndex("ts")
-        if (schema.getType(tsIdx).asPrimitiveType().getPrimitiveTypeName
-            != PrimitiveTypeName.INT64)
-          return None // pre-r13 INT96 store: no stats, no local decode
-        val blocks = footer.getBlocks.asScala
-        var bi = 0
-        while (bi < blocks.size) {
-          val b = blocks(bi)
-          // row-group skip on ts min/max (the B+-tree descent analog);
-          // a group with missing stats is read, not skipped — correct
-          // either way, stats only prune
-          val st = b.getColumns.asScala.find(_.getPath.toDotString == "ts")
-            .map(_.getStatistics).orNull
-          val overlaps = st match {
-            case s: org.apache.parquet.column.statistics.LongStatistics
-                if !s.isEmpty => s.getMax >= startUs && s.getMin <= endUs
-            case _ => true
-          }
-          val pages = reader.readNextRowGroup() // sequential: always consume
-          if (overlaps && b.getRowCount > 0) {
-            val store = new ColumnReadStoreImpl(pages, NoopGroup, schema, createdBy)
-            val tsR = store.getColumnReader(colDesc("ts"))
-            val prR = store.getColumnReader(colDesc("price"))
-            val voR = store.getColumnReader(colDesc("volume"))
-            val tsDl = colDesc("ts").getMaxDefinitionLevel
-            val prDl = colDesc("price").getMaxDefinitionLevel
-            val voDl = colDesc("volume").getMaxDefinitionLevel
-            val n = b.getRowCount
-            var i = 0L
-            while (i < n) {
-              val tsOk = tsR.getCurrentDefinitionLevel == tsDl
-              val us = if (tsOk) tsR.getLong else 0L
-              val pr = if (prR.getCurrentDefinitionLevel == prDl) prR.getDouble else 0.0
-              val vo = if (voR.getCurrentDefinitionLevel == voDl) voR.getLong else 0L
-              if (tsOk && us >= startUs && us <= endUs) {
-                tsB += us; prB += pr; voB += vo
-              }
-              tsR.consume(); prR.consume(); voR.consume()
-              i += 1
-            }
-          }
-          bi += 1
-        }
-      } finally reader.close()
-    }
-    Some((tsB.result(), prB.result(), voB.result()))
-  }
+      : Option[(Array[Long], Array[Double], Array[Long])] =
+    readLocal(symbol)(_.scan(startUs, endUs))
 
   /** One pruned scan returning (tick count, newest ts) for a symbol —
     * the serve cache's warm-time anchor (fusing the count and the
@@ -578,4 +465,127 @@ object TickStore {
       w.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       w
     })
+
+  /** One symbol's open parquet readers ([[TickStore.readLocal]]), read
+    * in-process — the serving layer's analog of the reference's mmap'd
+    * per-symbol column files (/root/reference/column_storage.hpp).
+    */
+  private[graft] final class LocalSymbol(readers: Seq[ParquetFileReader]) {
+    import org.apache.parquet.column.statistics.LongStatistics
+
+    private def tsStats(b: org.apache.parquet.hadoop.metadata.BlockMetaData) =
+      b.getColumns.asScala.find(_.getPath.toDotString == "ts").map(_.getStatistics).orNull
+
+    /** (tick count, newest ts in epoch µs) from the footers alone. Row
+      * counts live in every footer; the ts maximum comes from the
+      * column's row-group max statistics, which exist because
+      * [[TickStore.ingest]] writes INT64 TIMESTAMP(MICROS) (INT96 files
+      * carry none). The footers ARE the per-symbol stats sidecar,
+      * rewritten atomically with the data by the same commit that lands
+      * it, so they are never stale. Cost is O(files) footer reads,
+      * bounded by [[TickStore.compact]].
+      *
+      * None when a non-empty row group has no usable ts statistics: an
+      * INT96-era file, or a group whose ts values are all null — its
+      * LongStatistics are non-empty (numNulls set) but min/max are
+      * UNINITIALIZED, and `getMax` would silently anchor the newest ts
+      * at epoch 0 (r13 ADVICE; the `hasNonNullValue` guard).
+      */
+    def stats: Option[(Long, Option[Long])] = {
+      var total = 0L
+      var maxUs = Long.MinValue
+      readers.foreach(_.getRowGroups.forEach { b =>
+        if (b.getRowCount > 0) {
+          total += b.getRowCount
+          tsStats(b) match {
+            case s: LongStatistics if s.hasNonNullValue =>
+              maxUs = math.max(maxUs, s.getMax)
+            case _ => return None
+          }
+        }
+      })
+      Some((total, if (total == 0L) None else Some(maxUs)))
+    }
+
+    /** The ticks with `startUs <= ts <= endUs` as (epoch µs, price,
+      * volume) arrays: a direct columnar read that reads only the row
+      * groups whose ts min/max overlap the range (the B+-tree descent
+      * analog, executed in-process). A Spark job pays ~250 ms of
+      * scheduling + row serialization for the same bytes; this read
+      * takes ~1–3 ms for a one-file symbol (open included, 4 cores).
+      *
+      * UNSORTED across files/row groups (the caller sorts; within a row
+      * group rows are already ts-sorted by ingest). None when any file
+      * lacks INT64 ts (a pre-r13 INT96 store). Rows with a null ts are
+      * skipped; null price/volume read as 0 (degenerate for tick data;
+      * the Cli's Spark fallback coalesces nulls to 0 the same way — r13
+      * ADVICE — while the raw [[TickStore.scanRange]] DataFrame surface
+      * keeps SQL NULL semantics).
+      */
+    def scan(startUs: Long, endUs: Long): Option[(Array[Long], Array[Double], Array[Long])] = {
+      import org.apache.parquet.column.impl.ColumnReadStoreImpl
+      import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter}
+      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+      val tsB = Array.newBuilder[Long]
+      val prB = Array.newBuilder[Double]
+      val voB = Array.newBuilder[Long]
+      // no-op converter tree: we pull values straight off the column
+      // readers, never through record assembly
+      object NoopPrim extends PrimitiveConverter {
+        override def addLong(v: Long): Unit = ()
+        override def addDouble(v: Double): Unit = ()
+        override def addBinary(v: Binary): Unit = ()
+      }
+      object NoopGroup extends GroupConverter {
+        override def getConverter(i: Int): Converter = NoopPrim
+        override def start(): Unit = ()
+        override def end(): Unit = ()
+      }
+      readers.foreach { reader =>
+        val meta = reader.getFooter.getFileMetaData
+        val schema = meta.getSchema
+        val tsCol = schema.getColumns.get(schema.getFieldIndex("ts"))
+        val prCol = schema.getColumns.get(schema.getFieldIndex("price"))
+        val voCol = schema.getColumns.get(schema.getFieldIndex("volume"))
+        if (tsCol.getPrimitiveType.getPrimitiveTypeName != PrimitiveTypeName.INT64)
+          return None // pre-r13 INT96 store: no stats, no local decode
+        val blocks = reader.getRowGroups
+        var bi = 0
+        while (bi < blocks.size) {
+          val b = blocks.get(bi)
+          // a group with missing stats is read, not skipped — correct
+          // either way, stats only prune
+          val overlaps = tsStats(b) match {
+            case s: LongStatistics if !s.isEmpty => s.getMax >= startUs && s.getMin <= endUs
+            case _ => true
+          }
+          if (overlaps && b.getRowCount > 0) {
+            val store = new ColumnReadStoreImpl(reader.readRowGroup(bi), NoopGroup,
+              schema, meta.getCreatedBy)
+            val tsR = store.getColumnReader(tsCol)
+            val prR = store.getColumnReader(prCol)
+            val voR = store.getColumnReader(voCol)
+            val tsDl = tsCol.getMaxDefinitionLevel
+            val prDl = prCol.getMaxDefinitionLevel
+            val voDl = voCol.getMaxDefinitionLevel
+            val n = b.getRowCount
+            var i = 0L
+            while (i < n) {
+              val tsOk = tsR.getCurrentDefinitionLevel == tsDl
+              val us = if (tsOk) tsR.getLong else 0L
+              val pr = if (prR.getCurrentDefinitionLevel == prDl) prR.getDouble else 0.0
+              val vo = if (voR.getCurrentDefinitionLevel == voDl) voR.getLong else 0L
+              if (tsOk && us >= startUs && us <= endUs) {
+                tsB += us; prB += pr; voB += vo
+              }
+              tsR.consume(); prR.consume(); voR.consume()
+              i += 1
+            }
+          }
+          bi += 1
+        }
+      }
+      Some((tsB.result(), prB.result(), voB.result()))
+    }
+  }
 }

@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.tsdb.TickStore
 
 /** Drives the CLI parity layer end-to-end against a temp store. */
 class CliSpec extends AnyFunSuite {
@@ -96,5 +100,120 @@ class CliSpec extends AnyFunSuite {
     assert(times(1) < times(0) &&
       times(1) < math.max(times(0) / 5.0, 250.0),
       s"warm query took ${times(1)} ms vs cold ${times(0)} ms (total $totalSec s)")
+  }
+
+  /** `n` ticks of `sym`, 7 seconds apart from `fromSec`. */
+  private def ticks(sym: String, fromSec: Long, n: Int,
+      session: SparkSession = spark): DataFrame =
+    session.range(n).select(lit(sym).as("symbol"),
+      timestamp_seconds(lit(fromSec) + col("id") * 7L).as("ts"),
+      (lit(100.0) + col("id")).as("price"), col("id").as("volume"))
+
+  /** Serve `cmds` on `dir`, then exit: (lines on `out`, text on stderr). */
+  private def serveLines(dir: String, cmds: Seq[String],
+      embDir: Option[String] = None): (Seq[String], String) = {
+    val bout = new java.io.ByteArrayOutputStream()
+    val berr = new java.io.ByteArrayOutputStream()
+    val err = System.err
+    System.setErr(new java.io.PrintStream(berr, true))
+    try Cli.serve(spark, dir,
+      new java.io.BufferedReader(new java.io.StringReader((cmds :+ "exit").mkString("\n"))),
+      new java.io.PrintStream(bout, true), embDir = embDir)
+    finally System.setErr(err)
+    (bout.toString.linesIterator.toSeq, berr.toString)
+  }
+
+  // the banner, up to its em dash (out uses the platform charset)
+  private val banner = "graft serve "
+  private val timing = "\\([\\d.]+ ms\\)"
+
+  /** What serve must print for `count`/`last`/`query`, taken from the
+    * Spark-path reads (`symbolStats`, `queryLast`, `queryRange`).
+    */
+  private def sparkAnswer(store: TickStore, cmd: String): Seq[String] = {
+    def line(r: Row) = f"Timestamp: ${r.getTimestamp(1).getTime / 1000} " +
+      f"Price: ${r.getDouble(2)}%.2f Volume: ${r.getLong(3)}"
+    def ts(sec: String) = new java.sql.Timestamp(sec.toLong * 1000L)
+    cmd.split(" ") match {
+      case Array("count", sym) => Seq(s"Count: ${store.symbolStats(sym)._1}")
+      case Array("last", sym, n) =>
+        val rows = store.queryLast(sym, n.toInt).collect()
+        s"Last ${rows.length} ticks for $sym:" +: rows.map(line).toSeq
+      case Array("query", sym, a, b) =>
+        val rows = store.queryRange(sym, ts(a), ts(b)).collect()
+        s"Found ${rows.length} results:" +: rows.map(line).toSeq
+    }
+  }
+
+  /** Serve answers every command in `cmds` exactly as the Spark path
+    * does, with no fallback failure logged.
+    */
+  private def assertServeMatchesSpark(dir: String, cmds: Seq[String]): Unit = {
+    val store = new TickStore(spark, dir)
+    val (lines, err) = serveLines(dir, cmds)
+    assert(lines.head.startsWith(banner))
+    val got = lines.tail.filterNot(_.matches(timing))
+    assert(got === cmds.flatMap(sparkAnswer(store, _)))
+    assert(!err.contains("driver-side read failed"), err)
+  }
+
+  test("serve's one-open symbol load equals the Spark path on a multi-file, out-of-order symbol") {
+    val sdir = Files.createTempDirectory("cli_load_").toString
+    val store = new TickStore(spark, sdir)
+    store.ingest(ticks("MF", 1700001000L, 40))
+    store.ingest(ticks("MF", 1700000000L, 30)) // older ticks, later commit
+    // the newest tick has a fractional second: the window must end at it
+    store.ingest(spark.range(1).select(lit("MF").as("symbol"),
+      timestamp_micros(lit(1700001300500000L)).as("ts"), lit(7.5).as("price"),
+      lit(9L).as("volume")))
+    assert(store.stats().head._2 === 3)
+    assert(store.symbolStatsFast("MF").map(_._1) === Some(71L))
+    assertServeMatchesSpark(sdir, Seq("count MF", "last MF 5", "last MF 500",
+      "query MF 1700000000 1700002000", "query MF 1700000100 1700001100",
+      "count NONE", "last NONE 3"))
+    graft.core.TempDirs.delete(sdir)
+  }
+
+  test("an INT96 store declines the local read and serve answers from Spark") {
+    val sdir = Files.createTempDirectory("cli_int96_").toString
+    val w = spark.newSession()
+    w.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    ticks("OLD", 1700000000L, 50, w).repartition(col("symbol")).sortWithinPartitions("ts")
+      .write.mode("append").partitionBy("symbol").parquet(sdir)
+    val store = new TickStore(spark, sdir)
+    assert(store.symbolStatsFast("OLD") === None)
+    assert(store.scanRangeLocal("OLD", 0L, Long.MaxValue) === None)
+    assertServeMatchesSpark(sdir, Seq("count OLD", "last OLD 4",
+      "query OLD 1700000010 1700000020"))
+    graft.core.TempDirs.delete(sdir)
+  }
+
+  test("an all-null-ts row group declines the footer stats instead of anchoring at epoch 0") {
+    val sdir = Files.createTempDirectory("cli_nullts_").toString
+    val store = new TickStore(spark, sdir)
+    store.ingest(ticks("NUL", 1700000000L, 20))
+    store.ingest(spark.range(5).select(lit("NUL").as("symbol"),
+      lit(null).cast("timestamp").as("ts"), lit(1.0).as("price"), col("id").as("volume")))
+    assert(store.symbolStatsFast("NUL") === None)
+    val newest = new java.sql.Timestamp((1700000000L + 19 * 7) * 1000L)
+    assert(store.symbolStats("NUL") === ((25L, Some(newest))))
+    assertServeMatchesSpark(sdir, Seq("count NUL", "last NUL 3",
+      "query NUL 1700000000 1700000070"))
+    graft.core.TempDirs.delete(sdir)
+  }
+
+  test("a failed prewarm goes to stderr; out carries only the banner and protocol lines") {
+    val sdir = Files.createTempDirectory("cli_prewarm_").toString
+    new TickStore(spark, sdir).ingest(ticks("PW", 1700000000L, 3))
+    // holds no embeddings/documents tables, so prewarm throws
+    val emb = Files.createTempDirectory("cli_noemb_").toString
+    val (lines, err) = serveLines(sdir, Seq("count PW"), embDir = Some(emb))
+    assert(lines.length === 3, lines)
+    assert(lines(0).startsWith(banner))
+    assert(lines(1) === "Count: 3")
+    assert(lines(2).matches(timing))
+    assert(err.contains("[graft] prewarm:"), err)
+    graft.core.TempDirs.delete(sdir)
+    graft.core.TempDirs.delete(emb)
   }
 }
