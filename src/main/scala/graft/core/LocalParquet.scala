@@ -98,17 +98,17 @@ object LocalParquet {
   /** Data files directly under `dir` (no recursion): parquet part
     * files only, meta/hidden files skipped. A plain-file root returns
     * itself (single-file tables); empty or missing dir → empty list.
+    * One `listStatus` call, which lists a file as itself.
     */
   def dataFiles(dir: Path, conf: Configuration): Seq[FileStatus] = {
     val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) Seq.empty
-    else {
-      val st = fs.getFileStatus(dir)
-      if (st.isFile) Seq(st)
-      else fs.listStatus(dir).toSeq.filter { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
+    val listed =
+      try fs.listStatus(dir).toSeq
+      catch { case _: java.io.FileNotFoundException => return Seq.empty }
+    if (listed.size == 1 && listed.head.getPath == fs.makeQualified(dir)) listed
+    else listed.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
   }
 

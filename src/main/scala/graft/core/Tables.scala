@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.StructType
   * keyed by symbol (/root/reference/timeseries_db.hpp:19-24), one data
   * directory per symbol (/root/reference/README.md:66-76). Here the same
   * logical stream is a declarative view over the `events` table
-  * (symbol=event_type, price=value, volume=user_id), so every operator
+  * (symbol ← event_type, price ← value, volume ← user_id), so every operator
   * downstream consumes a plain `(event_id, symbol, ts, price, volume)`
   * DataFrame and runs unchanged over any conforming source — batch
   * parquet, a [[graft.tsdb.TickStore]], or a stream.

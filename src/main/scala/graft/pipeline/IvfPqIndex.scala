@@ -504,7 +504,7 @@ object IvfPqIndex {
   /** nprobe policy: a fixed 40% of nlist — the scanned fraction of the
     * corpus stays ~constant as N grows. Measured on the weakly
     * clustered sf0.1 bench corpus (n=2000 → nlist=45, nprobe=18,
-    * tools/IvfPqProbe sweep): recall@10 = 0.96 at a 40% scan vs the
+    * IvfPqProbe sweep, commit 9a2bdb1): recall@10 = 0.96 at a 40% scan vs the
     * r14 composition's 0.80 at a 50% scan — finer cells + residual
     * codebooks buy 16 recall points while reading fewer bytes. A
     * tightly clustered production corpus runs a far lower fraction;

@@ -348,7 +348,7 @@ object Similarity {
     * the first `h2Tables` tables additionally probe at Hamming
     * distance 2 (C(nBits,2) extra probes on THOSE tables only — the
     * bounded-growth variant of full H2 multiprobe). Measured
-    * (tools/RecallProbe, bench corpus): h2=0 → 0.78 @ 33% candidates;
+    * (RecallProbe main at commit 9a2bdb1, bench corpus): h2=0 → 0.78 @ 33% candidates;
     * h2=2 (default) → 0.88 @ 49%; h2=4 → 0.96 @ 59%. The default
     * clears the 0.85 bar within the 1.5× candidate budget; IVFPQ
     * remains the primary serving tier (0.96 @ far fewer candidates),

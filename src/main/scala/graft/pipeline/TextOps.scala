@@ -144,7 +144,7 @@ object TextOps {
     * 3-arg levenshtein runs the banded O(len·k) DP with early exit
     * (−1 past the threshold) instead of the full O(len²) table —
     * ~7× cheaper at sf0.1 on the same pair stream (8.1 → 1.2 s warm,
-    * QTime). The DuckDB oracle
+    * the QTime main at commit 9a2bdb1). The DuckDB oracle
     * computes the full distance and applies the cutoff as a CASE,
     * so the semantics are pinned, not just mirrored.
     */

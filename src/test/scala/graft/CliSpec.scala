@@ -174,6 +174,18 @@ class CliSpec extends AnyFunSuite {
     graft.core.TempDirs.delete(sdir)
   }
 
+  test("serve answers symbols the partitioned writer escapes as the Spark path does") {
+    val sdir = Files.createTempDirectory("cli_escaped_").toString
+    val store = new TickStore(spark, sdir)
+    val syms = Seq("EUR/USD", "A=B", "BTC:USD", "X%1", "0700")
+    store.ingest(syms.map(ticks(_, 1700000000L, 10)).reduce(_ union _))
+    store.ingest(syms.map(ticks(_, 1700000003L, 5)).reduce(_ union _)) // second file each
+    syms.foreach(s => assert(store.count(s) === 15L, s))
+    assertServeMatchesSpark(sdir, syms.flatMap(s => Seq(s"count $s", s"last $s 4",
+      s"query $s 1700000010 1700000040")))
+    graft.core.TempDirs.delete(sdir)
+  }
+
   test("an INT96 store declines the local read and serve answers from Spark") {
     val sdir = Files.createTempDirectory("cli_int96_").toString
     val w = spark.newSession()

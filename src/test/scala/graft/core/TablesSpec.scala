@@ -1,11 +1,9 @@
 package graft.core
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,34 +22,6 @@ class TablesSpec extends AnyFunSuite {
   private def tableNames(dir: String): Seq[String] =
     new java.io.File(dir).list().toSeq.filter(_.endsWith(".parquet"))
       .map(_.stripSuffix(".parquet")).sorted
-
-  /** Spark jobs started from this thread while `body` runs. Jobs are
-    * told apart by job group (other suites share the context); a
-    * sentinel job started afterwards flushes the listener queue, since
-    * a listener sees job starts in order.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
-    val sentinel = s"$group-end"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "TablesSpec", interruptOnCancel = false)
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "TablesSpec sentinel", interruptOnCancel = false)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(sentinel), "sentinel job never reached the listener")
-    } finally sc.removeSparkListener(listener)
-    seen.asScala.count(_ == group)
-  }
 
   private def tempDir(prefix: String): Path = Files.createTempDirectory(prefix)
 

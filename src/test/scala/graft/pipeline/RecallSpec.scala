@@ -18,10 +18,11 @@ import graft.core.Tables
   * sign-LSH agreement is correspondingly weak — measured multi-probe
   * recall at nBits=8 with ONE table is 0.22 on this corpus. The r11
   * amplified path (10 independent OR'd hash tables, each multi-probed)
-  * measures 0.72 here and 0.74 at the bench corpus
-  * (tools/RecallProbe). The floors freeze those measurements; the
-  * MONOTONE invariants (multi-probe ⊇ single-probe per table, more
-  * tables ⊇ fewer tables, IVF recall grows with nprobe) are
+  * measures 0.72 here and 0.74 at the bench corpus (the RecallProbe
+  * main, last present at commit 9a2bdb1). The floors freeze those
+  * measurements; the MONOTONE invariants (multi-probe ⊇ single-probe
+  * per table, more tables ⊇ fewer tables, IVF recall grows with
+  * nprobe) are
   * corpus-independent and are the real contract: recall is a knob you
   * buy with candidates scanned, and the knob must work.
   */
@@ -116,7 +117,8 @@ class RecallSpec extends AnyFunSuite {
       Similarity.ivfTopK(emb, q, K, nlist = nlist, nprobe = nprobe))
     assert(full === ivf, s"full-shortlist IVFPQ $full != exact IVF $ivf")
     // default-policy floor (measured 0.96 at the sf0.1 bench corpus,
-    // tools/IvfPqProbe; panel measurement at this sf pins the floor)
+    // IvfPqProbe main, last present at commit 9a2bdb1; panel
+    // measurement at this sf pins the floor)
     val dflt = recallOf(q => Similarity.ivfPqTopK(emb, q, K))
     assert(dflt >= 0.9, s"IVFPQ recall@10 $dflt below floor 0.9")
     assert(dflt <= full, "shortlist truncation cannot add recall")
