@@ -204,11 +204,11 @@ object Cli {
       embDir.map(d => graft.pipeline.Bm25Serve.forTable(
         graft.core.Tables.documents(spark, d)))
     // r20 (the r19 verdict's #3, guide §4.5): when a retrieval dir is
-    // configured, both tiers initialize AND pre-warm their shared plan
-    // fragments at serve start — artifact load, parquet listing,
-    // first-plan analysis — so the first interactive query pays only
-    // its own probed cells'/terms' IO. Tick-only sessions (no embDir)
-    // still never touch the retrieval tables.
+    // configured, both tiers build their artifacts and start their
+    // driver-side readers at serve start (the reader start runs no
+    // Spark job), so the first interactive query pays only its own
+    // probed cells'/terms' IO. Tick-only sessions (no embDir) still
+    // never touch the retrieval tables.
     embDir.foreach { _ =>
       try {
         annServe.foreach(_.prewarm())

@@ -986,7 +986,7 @@ object SparkEntry {
       graft.tsdb.Layout.writeZOrdered(df, basePath, "user_id", "ts_sec",
         partitions = 8)
     }
-    graft.tsdb.Layout.read(s, base)
+    Tables.read(s, base)
       .filter(col("user_id").between(7L, 11L) &&
         col("ts_us") >= 1704844800L * 1000000L && // 2024-01-10
         col("ts_us") <= 1705708800L * 1000000L)   // 2024-01-20
@@ -1273,7 +1273,7 @@ object SparkEntry {
     verifyIvfCentroids.map(_.head.length).getOrElse(64)
 
   /** 6-dp quantization of a double expression via the shared float-op
-    * sequence — the SQL mirror of MarketOps.quant6 (SURVEY §4: scale
+    * sequence — the SQL mirror of GraftFunctions.quant6 (SURVEY §4: scale
     * by 1e6, FLOOR(s+0.5)/CEIL(s−0.5), rebuild DECIMAL(18,6); the
     * identical IEEE ops on both engines, immune to ROUND's divergent
     * half-rounding).

@@ -39,6 +39,9 @@ import org.apache.spark.sql.types.StructType
   *  - a missing path, a directory with no parquet file, or a session
   *    with `spark.sql.parquet.mergeSchema` on reads through Spark's own
   *    inference (and fails the same way it always did).
+  * Every other Spark parquet read — index artifacts, verdict tables,
+  * stream sinks read back — goes through [[read]] as well; a file-sink
+  * directory's `_spark_metadata` log still picks the files read.
   * [[graft.tsdb.TickStore]] owns its layout and reads with its declared
   * schema instead.
   *

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -237,6 +237,20 @@ case class RollingHash64(child: Expression)
   * `graft_fingerprint(text)`.
   */
 object GraftFunctions {
+  /** 6-dp quantization of `s` (a value already scaled by 1e6) via the
+    * shared float-op sequence (SURVEY §4): FLOOR(s+0.5)/CEIL(s−0.5),
+    * rebuilt as DECIMAL(18,6). ROUND(d, 6) half-rounds divergently
+    * between engines on the boundary; this sequence is the identical
+    * IEEE ops on both.
+    */
+  def quant6(s: Column): Column = {
+    import org.apache.spark.sql.functions.{ceil, floor, lit, when}
+    val q = when(s >= 0, floor(s + 0.5)).otherwise(ceil(s - 0.5))
+    (q.cast("long").cast(DecimalType(18, 0)) *
+      lit(new java.math.BigDecimal("0.000001")).cast(DecimalType(7, 6)))
+      .cast(DecimalType(18, 6))
+  }
+
   private def intLit(e: Expression): Int =
     e.eval(null).asInstanceOf[Number].intValue()
 

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.GraftFunctions.quant6
+
 /** Event-stream product analytics over the raw `events` table — the
   * funnel/cohort queries an analytics user runs beside the market ops
   * (the reference's event model is the same (ts, type, value) record,
@@ -411,17 +413,6 @@ object EventAnalytics {
         (floor(rate + 0.5).cast("long").cast("double") / 1000000.0)
           .as("bounce_rate"))
       .orderBy("day")
-  }
-
-  /** 6-dp quantization via the shared float-op sequence (the
-    * MarketOps.quant6 discipline — SURVEY §4): scale by 1e6,
-    * FLOOR(s+0.5)/CEIL(s−0.5), rebuild DECIMAL(18,6).
-    */
-  private def quant6(s: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val q = when(s >= 0, floor(s + 0.5)).otherwise(ceil(s - 0.5))
-    (q.cast("long").cast(DecimalType(18, 0)) *
-      lit(new java.math.BigDecimal("0.000001")).cast(DecimalType(7, 6)))
-      .cast(DecimalType(18, 6))
   }
 
   /** NEW r12b: Markov stationary-distribution estimate — two

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.GraftFunctions.quant6
+
 /** Market-data analytics over the canonical tick view
   * (symbol, ts, price, volume) — the queries a user of the reference TSDB
   * (/root/reference/README.md) runs on top of `query_range` output,
@@ -2152,19 +2154,6 @@ object MarketOps {
   // the OHLC aggregate; every window below is over symbol-day rows —
   // a few thousand per symbol even at 10 years, so direct bounded
   // frames are fine and the 100 TB cost is the single bar aggregate).
-
-  /** 6-dp quantization of a double via the shared float-op sequence
-    * (SURVEY §4, the betaDaily/realizedVol pattern): scale by 1e6,
-    * FLOOR(s+0.5)/CEIL(s−0.5), rebuild as DECIMAL(18,6). ROUND(d, 6)
-    * half-rounds divergently between engines on the boundary; this
-    * sequence is the identical IEEE ops on both.
-    */
-  private def quant6(s: Column): Column = {
-    val q = when(s >= 0, floor(s + 0.5)).otherwise(ceil(s - 0.5))
-    (q.cast("long").cast(DecimalType(18, 0)) *
-      lit(new java.math.BigDecimal("0.000001")).cast(DecimalType(7, 6)))
-      .cast(DecimalType(18, 6))
-  }
 
   /** NEW r11: range-based volatility estimators over daily bars —
     * Parkinson, Garman–Klass, and Rogers–Satchell, the OHLC-range

@@ -134,27 +134,17 @@ class AnnServe private (
       })
   }
 
-  /** r20 (the r19 verdict's #3, guide §4.5 init-once): warm the shared
-    * plan fragments at serve START so the first real query pays only
-    * its own probed cells' IO, not first-plan analysis + parquet
-    * listing/footer work. Two untimed micro-jobs: a zero-partition
-    * pruned codes read (cell = −1 prunes everything — warms the
-    * FileStatusCache listing, schema inference, analysis and codegen
-    * of exactly the warmCells plan shape) and a one-row embeddings
-    * read (warms the point-lookup scan path; bounded at any corpus
-    * size — no filter, LIMIT 1). No cell data, no query answer is
-    * cached here — the LRU stays empty until a real query probes.
+  /** Serve-start init of the driver-side readers that answer
+    * [[warmCells]] and [[vecFor]]: resolves the embeddings roots and
+    * makes one zero-row filtered parquet-mr read, loading the read
+    * stack (Hadoop FS, footer reader, GroupReadSupport, filter2 classes
+    * — ~100 ms of one-time class loading otherwise billed to the first
+    * cold query). Stats prune every row group for vec_id = −1, so no
+    * data is read or cached. No Spark job runs: the Spark reads behind
+    * [[localFirst]] answer only when a driver-side read declines or
+    * throws.
     */
   def prewarm(): Unit = {
-    index.codes().filter(col("cell").isin(-1))
-      .select(col("cell"), col("vec_id"), col("codes"), col("embedding"))
-      .collect()
-    emb.select(col("embedding")).limit(1).collect()
-    // local-reader init (r20): one zero-row filtered parquet-mr read
-    // warms the driver-side read stack (Hadoop FS, footer reader,
-    // GroupReadSupport, filter2 classes — ~100 ms of one-time class
-    // loading otherwise billed to the first cold query). Stats prune
-    // every row group for vec_id = −1, so no data is read or cached.
     localFirst("ann prewarm")(embRoots.map { roots =>
       val conf = emb.sparkSession.sparkContext.hadoopConfiguration
       val pred = FilterApi.eq(FilterApi.longColumn("vec_id"),

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.quant6
+
 /** r16: the INVERTED-INDEX BM25 tier — the 100 TB path behind
   * [[TextOps.bm25]]'s scan formulation. The scan path reads the whole
   * corpus per query (right for ad-hoc audits); a standing retrieval
@@ -64,7 +66,6 @@ class Bm25Index private (
   @volatile private var state = initial
 
   private def spark = docs.sparkSession
-  private[pipeline] def session = spark
 
   /** The current state, for a reader that needs more than one part of
     * it to agree ([[Bm25Serve]]).
@@ -74,10 +75,12 @@ class Bm25Index private (
   def nDocs: Long = state.nDocs
   def totalLen: Long = state.totalLen
 
-  /** Current vocabulary df table path — the serve tier's df gate reads
-    * it term-pruned (a ≤ |terms|-row collect).
+  /** The vocabulary df table `(term, df)` of state `st` — every Spark
+    * read of it (term-pruned model slices, the batch join, df merges)
+    * starts here.
     */
-  private[pipeline] def dfDir: String = state.dfPath
+  private[pipeline] def dfTable(st: Bm25Index.State): DataFrame =
+    graft.core.Tables.read(spark, st.dfPath)
 
   /** Last generation that appended into or deleted from `bucket` — the
     * [[IvfPqIndex.cellVersion]] staleness handshake for warm
@@ -200,7 +203,7 @@ class Bm25Index private (
       val touched = deleted.select(col("bucket")).distinct().collect()
         .map(_.getInt(0))
       val dfPath = files.fresh("df")
-      Bm25Index.mergeDf(cur.dfPath,
+      Bm25Index.mergeDf(dfTable(cur),
         deleted.groupBy(col("term")).agg((-count(lit(1))).as("df")), dfPath)
       val dlGone = deleted.groupBy(col("doc_id")).agg(min(col("dl")).as("dl"))
         .agg(coalesce(sum(col("dl")), lit(0L)).as("tot")).head().getLong(0)
@@ -259,7 +262,7 @@ class Bm25Index private (
     // rescan of the corpus-sized postings (a long-running append stream
     // was paying O(corpus) per micro-batch for a vocabulary-sized fact)
     val dfPath = cur.files.fresh("df")
-    Bm25Index.mergeDf(cur.dfPath,
+    Bm25Index.mergeDf(dfTable(cur),
       batch.groupBy(col("term")).agg(count(lit(1)).as("df")), dfPath)
     val stats = newDocs
       .select(size(split(col("text"), " ")).cast("long").as("dl"))
@@ -324,7 +327,7 @@ class Bm25Index private (
     val st = state
     // per-term df, collected from the term-pruned vocabulary table
     // (≤ |terms| rows — the driver-held model slice)
-    val dfs: Map[String, Long] = spark.read.parquet(st.dfPath)
+    val dfs: Map[String, Long] = dfTable(st)
       .filter(col("term").isin(terms: _*))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val buckets = terms.map(Bm25Index.bucketOf).distinct
@@ -339,7 +342,7 @@ class Bm25Index private (
     val ratio = tf * lit(2.2) / (tf + lit(TextOps.Bm25K1) *
       (lit(1.0) - lit(TextOps.Bm25B) +
         lit(TextOps.Bm25B) * (col("dl").cast("double") / lit(avgdl))))
-    val contrib = PqIndex.quant6(
+    val contrib = quant6(
       element_at(typedLit(idf6), col("term")) * ratio * 1000000.0)
     val pruned = st.files.frame
       .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
@@ -409,7 +412,7 @@ class Bm25Index private (
     // oracle (which mirrors the scan formulation).
     val qt = if (prunedRegime) {
       val terms = termRows.map(_.getString(0)).toSeq
-      val dfs: Map[String, Long] = spark.read.parquet(st.dfPath)
+      val dfs: Map[String, Long] = dfTable(st)
         .filter(col("term").isin(terms: _*))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val idf6: Map[String, Double] = terms.map { t =>
@@ -419,10 +422,9 @@ class Bm25Index private (
       qterms.select(col("query_id"), col("term"),
         element_at(typedLit(idf6), col("term")).as("idf6"))
     } else {
-      val dfTable = spark.read.parquet(st.dfPath)
-      qterms.join(dfTable, Seq("term"), "left")
+      qterms.join(dfTable(st), Seq("term"), "left")
         .select(col("query_id"), col("term"),
-          PqIndex.quant6(log(
+          quant6(log(
             (lit(nDocsD) - coalesce(col("df"), lit(0L)).cast("double") + 0.5) /
               (coalesce(col("df"), lit(0L)).cast("double") + 0.5) + 1.0)
             * 1000000.0).cast("double").as("idf6"))
@@ -439,7 +441,7 @@ class Bm25Index private (
     val ratio = tf * lit(2.2) / (tf + lit(TextOps.Bm25K1) *
       (lit(1.0) - lit(TextOps.Bm25B) +
         lit(TextOps.Bm25B) * (col("dl").cast("double") / lit(avgdl))))
-    val contrib = PqIndex.quant6(col("idf6") * ratio * 1000000.0)
+    val contrib = quant6(col("idf6") * ratio * 1000000.0)
     val grouped = post.join(qt, Seq("term"))
       .select(col("query_id"), col("doc_id"), col("dl"), contrib.as("c"))
       .groupBy(col("query_id"), col("doc_id"))
@@ -510,15 +512,15 @@ object Bm25Index {
   private[pipeline] final case class State(
       files: IndexFiles, dfPath: String, nDocs: Long, totalLen: Long)
 
-  /** The df table at `from` plus per-term `deltas` (term, df), written
+  /** The df table `from` plus per-term `deltas` (term, df), written
     * to `to` — two vocabulary-sized inputs, never a postings scan.
     * Terms whose df falls to 0 drop out: a from-scratch build has no
     * row for them (an absent row scores the same idf as df = 0, so
     * either convention matches; the table stays clean). Appended deltas
     * are ≥ 1, so on an append the filter keeps every row.
     */
-  private[pipeline] def mergeDf(from: String, deltas: DataFrame, to: String): Unit =
-    deltas.sparkSession.read.parquet(from).unionByName(deltas)
+  private[pipeline] def mergeDf(from: DataFrame, deltas: DataFrame, to: String): Unit =
+    from.unionByName(deltas)
       .groupBy(col("term")).agg(sum(col("df")).cast("long").as("df"))
       .filter(col("df") > 0L)
       .write.parquet(to)

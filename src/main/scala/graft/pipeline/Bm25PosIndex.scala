@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.quant6
+
 /** r18 (the r17 verdict's #4): POSITIONAL postings — the Lucene
   * proximity index re-expressed as a partitioned table. r17's phrase
   * tier was shingle postings: each phrase length n was its OWN index
@@ -65,7 +67,7 @@ class Bm25PosIndex private (docs: DataFrame, initial: Bm25PosIndex.State) {
       val deleted = rows.select(col("term"), col("doc_id"), col("dl"))
         .localCheckpoint()
       val dfPath = files.fresh("df")
-      Bm25Index.mergeDf(cur.dfPath,
+      Bm25Index.mergeDf(graft.core.Tables.read(spark, cur.dfPath),
         deleted.groupBy(col("term")).agg((-count(lit(1))).as("df")), dfPath)
       // per-dl deleted-doc counts — the dl histogram decrements (the
       // n-gram model constants for EVERY n stay exact)
@@ -153,7 +155,7 @@ class Bm25PosIndex private (docs: DataFrame, initial: Bm25PosIndex.State) {
     val ratio = tf * lit(2.2) / (tf + lit(TextOps.Bm25K1) *
       (lit(1.0) - lit(TextOps.Bm25B) +
         lit(TextOps.Bm25B) * (col("dln").cast("double") / lit(avgdl))))
-    val contrib = PqIndex.quant6(
+    val contrib = quant6(
       element_at(typedLit(idf6), col("pi")) * ratio * 1000000.0)
     cands
       .select(col("doc_id"), col("dln"), contrib.as("c"))
@@ -204,7 +206,7 @@ class Bm25PosIndex private (docs: DataFrame, initial: Bm25PosIndex.State) {
       val ratio = tf * lit(2.2) / (tf + lit(TextOps.Bm25K1) *
         (lit(1.0) - lit(TextOps.Bm25B) +
           lit(TextOps.Bm25B) * (col("dl").cast("double") / lit(avgdl))))
-      PqIndex.quant6(lit(idf6(t)) * ratio * 1000000.0)
+      quant6(lit(idf6(t)) * ratio * 1000000.0)
     }
     pa.join(pb, Seq("doc_id"))
       .select(col("doc_id"), col("dl"), minDist.cast("long").as("min_dist"),

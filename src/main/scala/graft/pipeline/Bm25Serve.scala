@@ -70,7 +70,7 @@ class Bm25Serve private (index: Bm25Index, maxTerms: Int, maxDf: Long) {
       val missingTerms = missing.map(_._2).distinct
       val dfs: Map[String, Long] =
         localFirst("bm25 df load")(Some(index.dfLocal(missingTerms))) {
-          index.session.read.parquet(index.dfDir)
+          index.dfTable(index.snapshot)
             .filter(col("term").isin(missingTerms: _*))
             .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         }
@@ -113,29 +113,16 @@ class Bm25Serve private (index: Bm25Index, maxTerms: Int, maxDf: Long) {
     termCache.get((Bm25Index.bucketOf(term), term))
       .map(t => (t.posts.length, t.overCap))
 
-  /** r20 (the r19 verdict's #3, guide §4.5 init-once): warm the shared
-    * plan fragments at serve START — the vocabulary-df read and the
-    * bucket/term-pruned postings read — so a first real query pays
-    * only its own terms' postings IO. The df probe uses an impossible
-    * term (row-group stats prune it to zero rows) and the postings
-    * probe an impossible bucket (partition pruning: zero tasks); both
-    * warm FileStatusCache listing, schema inference, analysis and
-    * codegen of exactly the warmTerms plan shapes. No postings, no
-    * query answer is cached here.
+  /** Serve-start init of the driver-side reader that answers
+    * [[warmTerms]]: one term-filtered parquet-mr read of the df table
+    * loads the read stack (footer reader, filter2, codec classes) once,
+    * so the first query does not. A single space can never be a token
+    * (the tokenizer splits on it), so zero rows match or cache. No
+    * Spark job runs: the Spark reads behind [[localFirst]] answer only
+    * when the driver-side read declines or throws.
     */
-  def prewarm(): Unit = {
-    index.session.read.parquet(index.dfDir)
-      .filter(col("term").isin(" ")).collect()
-    index.readPostings
-      .filter(col("bucket").isin(-1) && col("term").isin(" "))
-      .select(col("bucket"), col("term"), col("doc_id"), col("tf"), col("dl"))
-      .collect()
-    // local-reader init (r20): one term-filtered parquet-mr read warms
-    // the driver-side read stack (footer reader, filter2, codec
-    // classes) once, at serve start — a single space can never be a
-    // token (the tokenizer splits on it), so zero rows match or cache
+  def prewarm(): Unit =
     localFirst("bm25 prewarm")(Some(index.dfLocal(Seq(" "))))(Map.empty)
-  }
 
   private def q6micro(x: Double): Long = {
     val s = x * 1000000.0

@@ -390,7 +390,7 @@ object Dedup {
     })
 
   def clusters(docs: DataFrame): DataFrame =
-    docs.sparkSession.read.parquet(clustersPath(docs))
+    graft.core.Tables.read(docs.sparkSession, clustersPath(docs))
 
   /** r14 (the r13 verdict's "missing #2"): INCREMENTAL refresh of the
     * clusters artifact. A corpus that grows by 0.1 % must not pay a
@@ -434,7 +434,7 @@ object Dedup {
     // r15 (ADVICE): a repeat call finds the union's refreshed artifact
     // without re-tokenizing and re-checkpointing the appended docs
     // (localCheckpoint runs a job)
-    base.sparkSession.read.parquet(
+    graft.core.Tables.read(base.sparkSession,
       artifact(clustersKey(base.unionByName(newDocs)))(appendTo(base, newDocs, _)))
 
   /** Writes the clusters artifact of `base ∪ newDocs` to `p` from the
@@ -449,9 +449,9 @@ object Dedup {
     // primary key, so a real append never collides; the spec-level
     // anti-join assert (DedupAppendSpec) guards the contract cheaply.
     val basePath = clustersPath(base) // builds the base artifact if absent
-    val oldClusters = spark.read.parquet(basePath)
+    val oldClusters = graft.core.Tables.read(spark, basePath)
       .select(col("doc_id"), col("cluster_id"))
-    val oldBands = spark.read.parquet(basePath + "_bands")
+    val oldBands = graft.core.Tables.read(spark, basePath + "_bands")
     val newBands = bandedSigs(newDocs)
       .select(col("doc_id"), col("band_id"), col("band_hash"))
       .localCheckpoint() // tokenize the appended docs exactly once
@@ -585,7 +585,7 @@ object Dedup {
     * the corpus-version cadence is the correct posture here.
     */
   def spans(docs: DataFrame, n: Int = 3): DataFrame =
-    docs.sparkSession.read.parquet(
+    graft.core.Tables.read(docs.sparkSession,
       artifact(graft.core.Artifacts.keyOf(docs, "dedup.spans", n)) { p =>
         spanDedupCompute(docs, n).write.parquet(p)
       })

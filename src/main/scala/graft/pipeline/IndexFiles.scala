@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.core.LocalParquet
+import graft.core.{LocalParquet, Tables}
 
 /** One committed state of a mutable index's stored rows: its data
   * directory, the tombstone sidecar of `idCol` values deleted from it
@@ -46,7 +46,7 @@ private[pipeline] final case class IndexFiles(
     * partition pruning push through its left side.
     */
   lazy val frame: DataFrame =
-    tombstones.fold(stored)(t => stored.join(spark.read.parquet(t), Seq(idCol), "left_anti"))
+    tombstones.fold(stored)(t => stored.join(Tables.read(spark, t), Seq(idCol), "left_anti"))
 
   /** Data files of the pinned listing under partition directory `part`
     * (e.g. `cell=3`), for the driver-side readers.
@@ -77,13 +77,13 @@ private[pipeline] final case class IndexFiles(
   def delete(ids: DataFrame): Option[(Long, DataFrame, IndexFiles)] = {
     val incoming = ids.select(col(idCol).cast("long").as(idCol)).distinct()
     val newIds = tombstones.fold(incoming)(t =>
-      incoming.join(spark.read.parquet(t), Seq(idCol), "left_anti"))
+      incoming.join(Tables.read(spark, t), Seq(idCol), "left_anti"))
       .localCheckpoint() // three consumers: count, rows join, sidecar write
     val n = newIds.count()
     if (n == 0L) None
     else {
       val path = fresh("tombstones")
-      tombstones.fold(newIds)(t => spark.read.parquet(t).unionByName(newIds))
+      tombstones.fold(newIds)(t => Tables.read(spark, t).unionByName(newIds))
         .write.parquet(path)
       Some((n, stored.join(newIds, Seq(idCol)), copy(tombstones = Some(path))))
     }
@@ -99,18 +99,18 @@ private[pipeline] final case class IndexFiles(
     * fresh listing, `touched` stamped.
     */
   def appended(touched: Iterable[Int]): IndexFiles =
-    committed(touched).copy(stored = spark.read.parquet(data))
+    committed(touched).copy(stored = Tables.read(spark, data))
 
   /** After the live rows were rewritten into `dir`: the sidecar
     * retires in the same value and no version advances (the logical
     * rows are unchanged, so warm serve caches stay valid).
     */
   def compacted(dir: String): IndexFiles =
-    committed(Nil).copy(data = dir, tombstones = None, stored = spark.read.parquet(dir))
+    committed(Nil).copy(data = dir, tombstones = None, stored = Tables.read(spark, dir))
 }
 
 private[pipeline] object IndexFiles {
   /** The build-time state of the index stored at `root`. */
   def open(spark: SparkSession, root: String, idCol: String): IndexFiles =
-    IndexFiles(root, idCol, root, None, Map.empty, 0L, spark.read.parquet(root))
+    IndexFiles(root, idCol, root, None, Map.empty, 0L, Tables.read(spark, root))
 }

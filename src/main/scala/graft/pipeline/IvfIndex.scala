@@ -62,7 +62,7 @@ class IvfIndex private (
     val probes = IvfIndex.nearestCells(centroids,
       IvfIndex.normalize(qVec.map(_.toDouble)), nprobe)
 
-    val cells = emb.sparkSession.read.parquet(cellsPath)
+    val cells = graft.core.Tables.read(emb.sparkSession, cellsPath)
     cells
       .filter(col("cell").isin(probes: _*) && col("vec_id") =!= queryId)
       .withColumn("qe", typedLit(qVec.map(_.toFloat).toSeq))

@@ -605,7 +605,7 @@ object IvfPqIndex {
     val sub = dim / m
     // residuals over the persisted cell layout (cell assignment already
     // materialized by the IVF build — never recomputed here)
-    val cellsTable = emb.sparkSession.read.parquet(ivf.cellsDir)
+    val cellsTable = graft.core.Tables.read(emb.sparkSession, ivf.cellsDir)
     val resid = withResiduals(cellsTable, cents)
     // codebook init: residuals of the first cb vectors, derived
     // driver-side with the same normalize/assign/subtract op sequence

@@ -2,7 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+
+import graft.functions.GraftFunctions.quant6
 
 /** Transparent Lloyd k-means over the embedding table — the semantic-
   * clustering pass a training-data pipeline runs for topic balancing /
@@ -31,13 +32,6 @@ import org.apache.spark.sql.types.DecimalType
   * and embeddings never shuffle.
   */
 object KMeansOps {
-
-  private def quant6(s: Column): Column = {
-    val q = when(s >= 0, floor(s + 0.5)).otherwise(ceil(s - 0.5))
-    (q.cast("long").cast(DecimalType(18, 0)) *
-      lit(new java.math.BigDecimal("0.000001")).cast(DecimalType(7, 6)))
-      .cast(DecimalType(18, 6))
-  }
 
   /** Squared L2 distance to a constant centroid, folded in index order
     * (mirrors DuckDB's list_sum over the same term order), rounded to

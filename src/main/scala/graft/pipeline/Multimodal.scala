@@ -19,32 +19,6 @@ import org.apache.spark.sql.functions._
   * joins/aggregations downstream.
   */
 object Multimodal {
-  /** Attach a binary payload column. In production this is the raw
-    * media payload read from parquet/object storage; here the document
-    * text bytes stand in as the blob.
-    */
-  def attachBlob(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("text").cast("binary").as("blob"),
-      col("source"), col("lang"))
-
-  /** Typed metadata over the opaque blob — size, checksum, and a
-    * deterministic pseudo width/height/duration (in production these
-    * come from the container header; derivation from the checksum keeps
-    * the pipeline runnable without codecs). The checksum is the first
-    * 8 hex digits of md5 as an integer — md5 is the one digest every
-    * engine computes identically, keeping this oracle-checkable.
-    */
-  def extractMeta(withBlob: DataFrame): DataFrame = {
-    val sum = conv(substring(md5(col("blob")), 1, 8), 16, 10).cast("long")
-    withBlob.select(col("doc_id"), col("blob"),
-      struct(
-        length(col("blob")).cast("long").as("n_bytes"),
-        sum.as("checksum"),
-        (pmod(sum, lit(1280L)) + 32L).as("width"),
-        (pmod(sum, lit(720L)) + 32L).as("height"),
-        col("source").as("container")).as("meta"))
-  }
-
   // ---- real container decode (BMP / WAV headers) ----
   //
   // The container has no image/audio codec LIBRARIES, but BMP and WAV

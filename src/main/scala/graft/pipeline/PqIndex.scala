@@ -2,7 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+
+import graft.functions.GraftFunctions.quant6
 
 /** Offline product-quantization ANN index: codebooks fitted once,
   * every corpus vector encoded once into `m` sub-space codes, both
@@ -52,7 +53,7 @@ class PqIndex private (
 
   /** The stored `(vec_id, embedding, codes)` table. */
   private[pipeline] def codes(): DataFrame =
-    emb.sparkSession.read.parquet(codesPath)
+    graft.core.Tables.read(emb.sparkSession, codesPath)
 
   /** Top-k cosine neighbors of `queryId`: ADC shortlist over stored
     * codes, exact re-rank on `shortlist` rows.
@@ -165,13 +166,6 @@ object PqIndex {
     val s = x * 1000000.0
     val r = if (s >= 0) math.floor(s + 0.5) else math.ceil(s - 0.5)
     new java.math.BigDecimal(r.toLong).movePointLeft(6).doubleValue()
-  }
-
-  private[pipeline] def quant6(s: Column): Column = {
-    val q = when(s >= 0, floor(s + 0.5)).otherwise(ceil(s - 0.5))
-    (q.cast("long").cast(DecimalType(18, 0)) *
-      lit(new java.math.BigDecimal("0.000001")).cast(DecimalType(7, 6)))
-      .cast(DecimalType(18, 6))
   }
 
   /** The corpus with its m sub-vectors PROJECTED ONCE as attributes:

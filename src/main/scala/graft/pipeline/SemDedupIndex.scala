@@ -97,7 +97,7 @@ object SemDedupIndex {
     * `emb` — built on first touch, a parquet read ever after.
     */
   def verdicts(emb: DataFrame, tau: Double = DefaultTau): DataFrame =
-    emb.sparkSession.read.parquet(verdictsOf(emb, tau).path)
+    graft.core.Tables.read(emb.sparkSession, verdictsOf(emb, tau).path)
 
   private def verdictsOf(emb: DataFrame, tau: Double): Verdicts =
     graft.core.Artifacts(verdictKey(emb, tau)) {
@@ -209,7 +209,7 @@ object SemDedupIndex {
     */
   def delete(base: DataFrame, delIds: DataFrame,
       tau: Double = DefaultTau): DataFrame =
-    base.sparkSession.read.parquet(graft.core.Artifacts(
+    graft.core.Tables.read(base.sparkSession, graft.core.Artifacts(
       verdictKey(remainingOf(base, delIds), tau))(deleted(base, delIds, tau)).path)
 
   /** The verdict artifact of `base` minus `delIds` (see [[delete]]). */
@@ -217,7 +217,7 @@ object SemDedupIndex {
       tau: Double): Verdicts = {
     val spark = base.sparkSession
     val baseV = verdictsOf(base, tau) // builds the base artifact if absent
-    val stored = spark.read.parquet(baseV.path)
+    val stored = graft.core.Tables.read(spark, baseV.path)
     val delSet = delIds.select(col("vec_id")).distinct().localCheckpoint()
     // clusters that lost a member (metadata-sized); their survivors
     // re-fetch embeddings by vec_id (the append discipline — the
@@ -239,7 +239,7 @@ object SemDedupIndex {
 
   def append(base: DataFrame, newVecs: DataFrame,
       tau: Double = DefaultTau): DataFrame =
-    base.sparkSession.read.parquet(graft.core.Artifacts(
+    graft.core.Tables.read(base.sparkSession, graft.core.Artifacts(
       verdictKey(base.unionByName(newVecs), tau))(appended(base, newVecs, tau)).path)
 
   /** The verdict artifact of `base ∪ newVecs` (see [[append]]). */
@@ -248,7 +248,7 @@ object SemDedupIndex {
     val spark = base.sparkSession
     val baseV = verdictsOf(base, tau) // builds the base artifact if absent
     val cents = baseV.fit._1
-    val stored = spark.read.parquet(baseV.path)
+    val stored = graft.core.Tables.read(spark, baseV.path)
     val assignedNew = KMeansOps.assignWithDist(newVecs, cents)
       .localCheckpoint() // touched set, pair side and verdicts all read it
     val touched = assignedNew.select(col("cluster")).distinct()

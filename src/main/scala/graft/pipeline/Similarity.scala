@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.quant6
+
 /** Similarity search over an embedding column (`array<float>`).
   *
   * Brute-force cosine top-k is the exactness baseline: one broadcast of
@@ -968,13 +970,6 @@ object Similarity {
     * is undefined (d₁ = 0).
     */
   def intrinsicDim(emb: DataFrame, dim: Int = 64): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    def quant6(s: Column): Column = {
-      val q = when(s >= 0, floor(s + 0.5)).otherwise(ceil(s - 0.5))
-      (q.cast("long").cast(DecimalType(18, 0)) *
-        lit(new java.math.BigDecimal("0.000001")).cast(DecimalType(7, 6)))
-        .cast(DecimalType(18, 6))
-    }
     val two = knnJoin(emb, dim, 2)
       .groupBy(col("vec_id"))
       .agg(max(when(col("rk") === 1, col("cos_sim"))).as("c1"),

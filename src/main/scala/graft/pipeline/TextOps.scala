@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions.quant6
+
 /** Text-analysis operators for a large-scale training-data pipeline,
   * run over the `documents` table (doc_id, text, lang, source, n_chars).
   *
@@ -398,13 +400,6 @@ object TextOps {
     * one counter-only doc rollup. No text re-scan, no driver loops.
     */
   def tokenEntropy(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    def quant6(s: Column): Column = {
-      val q = when(s >= 0, floor(s + 0.5)).otherwise(ceil(s - 0.5))
-      (q.cast("long").cast(DecimalType(18, 0)) *
-        lit(new java.math.BigDecimal("0.000001")).cast(DecimalType(7, 6)))
-        .cast(DecimalType(18, 6))
-    }
     val w = Window.partitionBy("doc_id")
     val counts = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
@@ -441,13 +436,6 @@ object TextOps {
     * single-row total broadcasts. Text crosses one exchange as tokens.
     */
   def unigramSurprisal(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    def quant6(s: Column): Column = {
-      val q = when(s >= 0, floor(s + 0.5)).otherwise(ceil(s - 0.5))
-      (q.cast("long").cast(DecimalType(18, 0)) *
-        lit(new java.math.BigDecimal("0.000001")).cast(DecimalType(7, 6)))
-        .cast(DecimalType(18, 6))
-    }
     val dw = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
@@ -1072,15 +1060,6 @@ object TextOps {
         (col("n_hapax").cast("double") / col("vocab").cast("double"))
           .as("hapax_share"))
       .orderBy("source")
-
-  /** The shared 6-dp quantization (SURVEY §4; expects s = value·1e6). */
-  private def quant6(s: Column): Column = {
-    import org.apache.spark.sql.types.DecimalType
-    val q = when(s >= 0, floor(s + 0.5)).otherwise(ceil(s - 0.5))
-    (q.cast("long").cast(DecimalType(18, 0)) *
-      lit(new java.math.BigDecimal("0.000001")).cast(DecimalType(7, 6)))
-      .cast(DecimalType(18, 6))
-  }
 
   /** NEW r12: Zipf slope per source — the OLS slope of quant6(ln count)
     * on quant6(ln rank) over each source's top-k tokens, the classic

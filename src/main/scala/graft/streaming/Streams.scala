@@ -31,10 +31,8 @@ object Streams {
     * cardinalities here are 5 symbols / 150 users, so each extra
     * partition is a state-store instance of pure fixed overhead; on a
     * cluster size this O(executor cores) like any shuffle).
-    * Env-overridable for benchmarking the trade-off.
     */
-  private val statePartitions: Int =
-    sys.env.getOrElse("SPARK_GRAFT_STATE_PARTITIONS", "4").toInt
+  private val statePartitions = 4
 
   /** Heartbeat symbol; filtered out of every result. */
   val SentinelSymbol = "~sentinel~"
@@ -120,7 +118,7 @@ object Streams {
       .start()
     q.processAllAvailable()
     q.stop()
-    spark.read.parquet(s"$base/data")
+    graft.core.Tables.read(spark, s"$base/data")
       .groupBy(col("symbol")).agg(count(lit(1)).as("n_ticks"))
       .orderBy("symbol")
   }
@@ -155,7 +153,7 @@ object Streams {
       q.stop()
     }
     // query the rollup store, not the raw ticks
-    spark.read.parquet(s"$base/bars")
+    graft.core.Tables.read(spark, s"$base/bars")
       .filter(col("symbol") =!= SentinelSymbol)
       .select(unix_micros(col("bar_start")).as("bar_start_us"), col("symbol"),
         col("n_ticks"), col("low"), col("high"), col("volume"))
@@ -340,7 +338,7 @@ object Streams {
       .start()
     q.processAllAvailable()
     q.stop()
-    spark.read.parquet(s"$base/delta")
+    graft.core.Tables.read(spark, s"$base/delta")
       .groupBy(col("symbol"))
       .agg(max(col("last_ts_us")).as("last_ts_us"),
         max_by(col("last_price"), col("last_key")).as("last_price"))
@@ -376,7 +374,7 @@ object Streams {
     // a retried micro-batch appends its per-batch top-k twice; the
     // read-side dedup on the natural key makes the sink-side append
     // idempotent (duplicates of the best row must not occupy two ranks)
-    spark.read.parquet(s"$base/delta")
+    graft.core.Tables.read(spark, s"$base/delta")
       .dropDuplicates("symbol", "event_id")
       .withColumn("rn", row_number().over(rankW).cast("long"))
       .filter(col("rn") <= k)

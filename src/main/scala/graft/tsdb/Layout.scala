@@ -1,6 +1,6 @@
 package graft.tsdb
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Z-ordered data layout: multi-dimensional clustering for scans that
@@ -31,10 +31,4 @@ object Layout {
       .drop("_z")
       .write.mode("overwrite").parquet(path)
   }
-
-  /** Read back a z-ordered layout (plain parquet scan — the clustering
-    * lives in the file/row-group statistics, not the reader).
-    */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 }

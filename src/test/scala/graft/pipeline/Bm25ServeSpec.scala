@@ -55,7 +55,7 @@ class Bm25ServeSpec extends AnyFunSuite {
     // pick a term from a bucket that genuinely holds other vocabulary —
     // a bucket at 100 TB is O(corpus/64); a term is O(df), and the r16
     // whole-bucket collect was the repo's one driver-OOM path
-    val byBucket = idx.session.read.parquet(idx.postingsDir)
+    val byBucket = spark.read.parquet(idx.postingsDir)
       .select(col("bucket"), col("term")).distinct()
       .collect().map(r => (r.getInt(0), r.getString(1)))
       .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
@@ -113,7 +113,7 @@ class Bm25ServeSpec extends AnyFunSuite {
     val idx = Bm25Index.forTable(docs)
     // cap between the two fixture terms' dfs: 'dup' (rare) stays
     // cacheable, 'spark' (common) routes distributed
-    val dfs = idx.session.read.parquet(idx.dfDir)
+    val dfs = idx.dfTable(idx.snapshot)
       .filter(col("term").isin("dup", "spark"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(dfs("dup") < dfs("spark"), s"fixture assumption broke: $dfs")
