@@ -1063,7 +1063,7 @@ object SparkEntry {
     * the ORC reader, digest every column. Value-preserving, so the
     * oracle is the direct parquet scan (same pattern as JSONL).
     * The written copy is staged once per (session, input dir) so
-    * Bench's repeated iterations reuse one corpus-sized copy.
+    * repeated runs of the query reuse one corpus-sized copy.
     */
   private def orcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val base = staged(s, "staging.orc", dir) { basePath =>

@@ -12,8 +12,8 @@ import scala.collection.mutable
   * verify/bench/test cycle leaked them permanently (~0.5 GB of /tmp per
   * cycle measured in r9). Every staging dir goes through [[scoped]];
   * one JVM shutdown hook deletes everything registered. Callers that
-  * can free a dir earlier (Bench's throwaway ingest samples) call
-  * [[delete]] eagerly — the hook tolerates already-deleted paths.
+  * can free a dir earlier (a test's or benchmark's throwaway store)
+  * call [[delete]] eagerly — the hook tolerates already-deleted paths.
   */
 object TempDirs {
   private val dirs = mutable.ArrayBuffer.empty[Path]

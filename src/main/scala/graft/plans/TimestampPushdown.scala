@@ -112,8 +112,8 @@ object TimestampFilterPushdown extends Rule[LogicalPlan] {
   }
 }
 
-/** Installer for sessions created outside the builder (the driver's
-  * Verify/Bench sessions): `spark.experimental` has no optimizer hook,
+/** Installer for sessions created outside the builder (the mains'
+  * `LocalSession` sessions): `spark.experimental` has no optimizer hook,
   * so this goes through `extraOptimizations`.
   */
 object GraftOptimizations {

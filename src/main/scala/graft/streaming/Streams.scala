@@ -27,28 +27,32 @@ import org.apache.spark.sql.functions._
 object Streams {
   private val counter = new AtomicInteger(0)
 
-  /** State partitions for the local streaming smoke paths (key
-    * cardinalities here are 5 symbols / 150 users, so each extra
-    * partition is a state-store instance of pure fixed overhead; on a
-    * cluster size this O(executor cores) like any shuffle).
-    */
-  private val statePartitions = 4
-
   /** Heartbeat symbol; filtered out of every result. */
   val SentinelSymbol = "~sentinel~"
 
-  /** Run a streaming query with `n` state partitions (baked in at
-    * query start): stateful operators create one state-store instance
-    * per shuffle partition per store, so a 5-symbol/150-user local
-    * stream paying 32×4 store instances is pure fixed overhead. On a
-    * cluster, size this like any shuffle — O(executor cores) — via the
-    * same conf. The session value is restored afterwards.
+  /** The session the stateful streams run in: 4 shuffle partitions.
+    * A query fixes its state-partition count from its session's
+    * `spark.sql.shuffle.partitions` when it starts, and stateful
+    * operators create one state-store instance per partition per
+    * store, so a 5-symbol/150-user local stream paying 32×4 store
+    * instances is pure fixed overhead. On a cluster, size this like any
+    * shuffle — O(executor cores). A derived session, so the caller's
+    * conf is never touched.
     */
-  private def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
+  private def stateSession(spark: SparkSession): SparkSession =
+    graft.core.LocalSession.derived(spark, "spark.sql.shuffle.partitions" -> "4")
+
+  /** Run `df` to the end of its input into a memory sink named
+    * `<prefix>_<n>` and read the sink back. The sink's view lives in
+    * the session that started the query, which is `df`'s.
+    */
+  private def drainToMemory(df: DataFrame, prefix: String): DataFrame = {
+    val name = s"${prefix}_${counter.incrementAndGet()}"
+    val q = df.writeStream.outputMode("append")
+      .format("memory").queryName(name).start()
+    q.processAllAvailable()
+    q.stop()
+    df.sparkSession.table(name)
   }
 
   final case class VwapIn(symbol: String, price: Double, volume: Long)
@@ -134,7 +138,7 @@ object Streams {
     // sentinel past max: watermark (10 min behind) passes every real
     // hourly window end, flushing the full rollup
     val inDir = sentinelInput(spark, dir)
-    val bars = tickStreamFrom(spark, inDir, "*.parquet")
+    val bars = tickStreamFrom(stateSession(spark), inDir, "*.parquet")
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("symbol"))
       .agg(count(lit(1)).as("n_ticks"),
@@ -142,16 +146,14 @@ object Streams {
         sum(col("volume")).as("volume"))
       .select(col("window.start").as("bar_start"), col("symbol"),
         col("n_ticks"), col("low"), col("high"), col("volume"))
-    withStatePartitions(spark, statePartitions) {
-      val q = bars.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", s"$base/bars")
-        .option("checkpointLocation", s"$base/chk")
-        .partitionBy("symbol")
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
+    val q = bars.writeStream.outputMode("append")
+      .format("parquet")
+      .option("path", s"$base/bars")
+      .option("checkpointLocation", s"$base/chk")
+      .partitionBy("symbol")
+      .start()
+    q.processAllAvailable()
+    q.stop()
     // query the rollup store, not the raw ticks
     graft.core.Tables.read(spark, s"$base/bars")
       .filter(col("symbol") =!= SentinelSymbol)
@@ -171,8 +173,7 @@ object Streams {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
 
-    val name = s"graft_vwap_${counter.incrementAndGet()}"
-    val ticks = tickStream(spark, dir)
+    val ticks = tickStream(stateSession(spark), dir)
       .select(col("symbol"), col("price"), col("volume")).as[VwapIn]
     val updated = ticks.groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -186,14 +187,8 @@ object Streams {
           Iterator.single(VwapOut(sym, s.n,
             if (s.v == 0) 0.0 else (s.pvCents.toDouble / 100.0) / s.v.toDouble))
       }
-    withStatePartitions(spark, statePartitions) {
-      val q = updated.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-    }
     // final snapshot per symbol = totals over all micro-batches
-    spark.table(name).groupBy(col("symbol"))
+    drainToMemory(updated.toDF(), "graft_vwap").groupBy(col("symbol"))
       .agg(max(col("n_ticks")).as("n_ticks"),
         round(max_by(col("running_vwap"), col("n_ticks")), 6).as("running_vwap"))
       .orderBy("symbol")
@@ -211,27 +206,21 @@ object Streams {
     * its oracle.
     */
   def streamRangeJoin(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_rj_${counter.incrementAndGet()}"
+    val ss = stateSession(spark)
     def side(sym: String, prefix: String) =
-      tickStream(spark, dir)
+      tickStream(ss, dir)
         .withWatermark("ts", "10 minutes")
         .filter(col("symbol") === sym)
         .select(col("event_id").as(s"${prefix}_event_id"),
           col("volume").as(s"${prefix}_user_id"), col("ts").as(s"${prefix}_ts"))
-    withStatePartitions(spark, statePartitions) {
-      val joined = side("error", "l").join(side("click", "r"),
-        col("l_user_id") === col("r_user_id") &&
-          col("r_ts") >= col("l_ts") - expr("interval 5 minutes") &&
-          col("r_ts") < col("l_ts"))
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    val counts = spark.table(name)
+    val joined = side("error", "l").join(side("click", "r"),
+      col("l_user_id") === col("r_user_id") &&
+        col("r_ts") >= col("l_ts") - expr("interval 5 minutes") &&
+        col("r_ts") < col("l_ts"))
+    val counts = drainToMemory(joined, "graft_stream_rj")
       .groupBy(col("l_event_id").as("event_id"))
       .agg(count(lit(1)).as("n_matched"))
-    graft.core.Tables.ticks(spark, dir).filter(col("symbol") === "error")
+    graft.core.Tables.ticks(ss, dir).filter(col("symbol") === "error")
       .select(col("event_id"))
       .join(counts, Seq("event_id"), "left")
       .select(col("event_id"), coalesce(col("n_matched"), lit(0L)).as("n_prior"))
@@ -244,23 +233,15 @@ object Streams {
     * batch oracle.
     */
   def streamSessions(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_sess_${counter.incrementAndGet()}"
     val inDir = sentinelInput(spark, dir)
-    val src = tickStreamFrom(spark, inDir, "*.parquet")
+    val sessions = tickStreamFrom(stateSession(spark), inDir, "*.parquet")
       .withWatermark("ts", "10 minutes")
-    withStatePartitions(spark, statePartitions) {
-      val sessions = src
-        .groupBy(col("symbol"), session_window(col("ts"), "30 minutes"))
-        .agg(count(lit(1)).as("n_ticks"))
-        .select(col("symbol"),
-          unix_micros(col("session_window.start")).as("sess_start_us"),
-          col("n_ticks"))
-      val q = sessions.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    spark.table(name)
+      .groupBy(col("symbol"), session_window(col("ts"), "30 minutes"))
+      .agg(count(lit(1)).as("n_ticks"))
+      .select(col("symbol"),
+        unix_micros(col("session_window.start")).as("sess_start_us"),
+        col("n_ticks"))
+    drainToMemory(sessions, "graft_stream_sess")
       .filter(col("symbol") =!= SentinelSymbol)
       .orderBy("symbol", "sess_start_us")
   }
@@ -271,18 +252,13 @@ object Streams {
     * no state at all. The oracle is the equivalent batch join.
     */
   def streamEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_enrich_${counter.incrementAndGet()}"
     val dim = graft.core.Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
     val enriched = tickStream(spark, dir)
       .join(broadcast(dim), col("volume") === col("c_custkey"), "left")
       .select(col("event_id"), col("symbol"),
         coalesce(col("c_mktsegment"), lit("NONE")).as("mktsegment"))
-    val q = enriched.writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name).orderBy("event_id")
+    drainToMemory(enriched, "graft_stream_enrich").orderBy("event_id")
   }
 
   /** Streaming deduplication with BOUNDED state: first-seen
@@ -297,18 +273,11 @@ object Streams {
     * DISTINCT, which is the oracle.
     */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_dedup_${counter.incrementAndGet()}"
-    withStatePartitions(spark, statePartitions) {
-      val deduped = tickStream(spark, dir)
-        .withWatermark("ts", "10 minutes")
-        .dropDuplicatesWithinWatermark("volume", "symbol")
-        .select(col("volume").as("user_id"), col("symbol"))
-      val q = deduped.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    spark.table(name).distinct().orderBy("user_id", "symbol")
+    val deduped = tickStream(stateSession(spark), dir)
+      .withWatermark("ts", "10 minutes")
+      .dropDuplicatesWithinWatermark("volume", "symbol")
+      .select(col("volume").as("user_id"), col("symbol"))
+    drainToMemory(deduped, "graft_stream_dedup").distinct().orderBy("user_id", "symbol")
   }
 
   /** Continuous latest-value store via `foreachBatch`: each micro-batch
@@ -412,8 +381,7 @@ object Streams {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import spark.implicits._
 
-    val name = s"graft_stream_asof_${counter.incrementAndGet()}"
-    val src = tickStream(spark, dir)
+    val src = tickStream(stateSession(spark), dir)
       .filter(col("symbol").isin("purchase", "click"))
       .select(
         when(col("symbol") === "click", 0).otherwise(1).as("side"),
@@ -433,13 +401,7 @@ object Streams {
           state.update(q)
           out.result().iterator
       }
-    withStatePartitions(spark, statePartitions) {
-      val q = joined.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    spark.table(name).orderBy("event_id")
+    drainToMemory(joined.toDF(), "graft_stream_asof").orderBy("event_id")
   }
 
   /** Streaming 1-minute OHLC-style bars with a 10-minute watermark:
@@ -449,23 +411,16 @@ object Streams {
     * result equals the batch per-minute aggregation.
     */
   def streamBars(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_bars_${counter.incrementAndGet()}"
     // sentinel past max: watermark (10 min behind) passes every real
     // 1-minute window end
     val inDir = sentinelInput(spark, dir)
-    val bars = tickStreamFrom(spark, inDir, "*.parquet")
+    val bars = tickStreamFrom(stateSession(spark), inDir, "*.parquet")
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 minute"), col("symbol"))
       .agg(count(lit(1)).as("n_ticks"),
         min(col("price")).as("low"), max(col("price")).as("high"),
         sum(col("volume")).as("volume"))
-    withStatePartitions(spark, statePartitions) {
-      val q = bars.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    spark.table(name)
+    drainToMemory(bars, "graft_bars")
       .filter(col("symbol") =!= SentinelSymbol)
       .select(unix_micros(col("window.start")).as("bar_start_us"), col("symbol"),
         col("n_ticks"), col("low"), col("high"), col("volume"))
@@ -493,7 +448,6 @@ object Streams {
     * candidates exactly like the batch [[graft.pipeline.Dedup]] path.
     */
   def streamDedupFlags(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"graft_stream_dedupflags_${counter.incrementAndGet()}"
     graft.functions.GraftFunctions.register(spark)
     val corpusBands = graft.pipeline.Dedup
       .bandedSigs(graft.core.Tables.documents(spark, dir))
@@ -507,11 +461,7 @@ object Streams {
       .select(col("doc_id").as("new_doc_id"), col("band_id"), col("band_hash"))
       .join(corpusBands, Seq("band_id", "band_hash"))
       .select(col("new_doc_id"), col("corpus_doc"))
-    val q = pairs.writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(name)
+    drainToMemory(pairs, "graft_stream_dedupflags")
       .groupBy(col("new_doc_id"))
       .agg(countDistinct(col("corpus_doc")).as("n_candidates"))
       .orderBy("new_doc_id")

@@ -35,7 +35,7 @@ object PlanAudit {
       if (args.nonEmpty) args.toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
         .filterNot(_.startsWith("q_stream_"))
-    // warmup (mirrors Bench)
+    // warmup: one-time JIT, footer and offline index builds
     Seq("q1_agg", "q_range_scan", "q_ohlc_daily", "q_ann_ivf", "q_ann_pq",
         "q_bucketed_join").foreach { n =>
       try graft.SparkEntry.queries(n)(spark, sfDir).collect()

@@ -84,8 +84,8 @@ final class TickStore(spark: SparkSession, path: String,
         .partitionBy("symbol").parquet(path)
   }
 
-  /** Re-bind `df` to the store's µs-writing session
-    * ([[TickStore.microsSession]]) so its parquet writes emit
+  /** Re-bind `df` to the µs-writing session derived from the store's
+    * ([[graft.core.LocalSession.derived]]) so its parquet writes emit
     * INT64 TIMESTAMP(MICROS) instead of Spark's default INT96.
     * INT96 columns carry NO row-group min/max statistics (the format
     * deprecated them), which silently voids both the ts row-group
@@ -97,7 +97,7 @@ final class TickStore(spark: SparkSession, path: String,
     */
   private def microsWrite(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftbridge.Bridge.ofRows(
-      TickStore.microsSession(spark), df.queryExecution.analyzed)
+      graft.core.LocalSession.derived(spark, MicrosTimestamps), df.queryExecution.analyzed)
 
   /** Single-tick append — reference `append`
     * (/root/reference/timeseries_db.hpp:32). Provided for API parity; on
@@ -463,27 +463,9 @@ object TickStore {
     StructField("symbol", StringType)) ++
     (if (dailyPartitions) Seq(StructField("ts_date", DateType)) else Nil))
 
-  /** One µs-writing session per base session (shared SparkContext,
-    * isolated SQLConf): `spark.sql.parquet.outputTimestampType =
-    * TIMESTAMP_MICROS` without mutating the caller's session conf —
-    * a runtime `conf.set`/restore around the write would race
-    * concurrent planning on the shared session (parallel suites, the
-    * ConcurrentServeSpec writer thread). Session-critical confs are
-    * copied from the parent's RUNTIME values (newSession inherits only
-    * builder-level configs).
-    */
-  private val writeSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-
-  private[tsdb] def microsSession(spark: SparkSession): SparkSession =
-    writeSessions.computeIfAbsent(spark, s => {
-      val w = s.newSession()
-      Seq("spark.sql.session.timeZone", "spark.sql.shuffle.partitions",
-        "spark.sql.ansi.enabled").foreach(k =>
-        w.conf.set(k, s.conf.get(k)))
-      w.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      w
-    })
+  /** The write conf of [[microsWrite]]'s session. */
+  private val MicrosTimestamps =
+    "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"
 
   /** One symbol's open parquet readers ([[TickStore.readLocal]]), read
     * in-process — the serving layer's analog of the reference's mmap'd
