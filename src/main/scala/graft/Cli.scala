@@ -162,16 +162,15 @@ object Cli {
     * r11 — the cache is BOUNDED on both axes (a hot symbol's
     * multi-year tape does not fit a driver at 100 TB):
     *  - TIME: only the trailing `windowDays` days (relative to the
-    *    symbol's newest tick) load per symbol
-    *    (`GRAFT_SERVE_WINDOW_DAYS`, default 365). Range/last reads
-    *    that reach past the cached window fall through to a pruned
-    *    Spark scan (cold but correct); `count` serves from a full
-    *    count cached at warm time.
-    *  - SYMBOLS: at most `maxSymbols` symbols stay cached
-    *    (`GRAFT_SERVE_MAX_SYMBOLS`, default 64), LRU-evicted by the
-    *    shared [[graft.core.ServeCache]] — the warm set follows the
-    *    query mix; an evicted symbol pays one re-warm scan on next
-    *    touch, and an `insert` invalidates its symbol.
+    *    symbol's newest tick) load per symbol (default 365).
+    *    Range/last reads that reach past the cached window fall
+    *    through to a pruned Spark scan (cold but correct); `count`
+    *    serves from a full count cached at warm time.
+    *  - SYMBOLS: at most `maxSymbols` symbols stay cached (default
+    *    64), LRU-evicted by the shared [[graft.core.ServeCache]] — the
+    *    warm set follows the query mix; an evicted symbol pays one
+    *    re-warm scan on next touch, and an `insert` invalidates its
+    *    symbol.
     *
     * Protocol (one command per line, results + `(N ms)` timing):
     * {{{
@@ -184,10 +183,8 @@ object Cli {
     */
   def serve(spark: SparkSession, dataDir: String,
       in: java.io.BufferedReader, out: java.io.PrintStream,
-      windowDays: Int =
-        sys.env.get("GRAFT_SERVE_WINDOW_DAYS").map(_.toInt).getOrElse(365),
-      maxSymbols: Int =
-        sys.env.get("GRAFT_SERVE_MAX_SYMBOLS").map(_.toInt).getOrElse(64),
+      windowDays: Int = 365,
+      maxSymbols: Int = 64,
       embDir: Option[String] = sys.env.get("GRAFT_EMB_DIR")): Unit = {
     val store = new TickStore(spark, dataDir)
     // r15: warm ANN serving (`ann <vec_id> <k>`) — lazily initialized

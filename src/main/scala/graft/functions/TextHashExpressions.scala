@@ -251,6 +251,20 @@ object GraftFunctions {
       .cast(DecimalType(18, 6))
   }
 
+  /** Driver-side twin of [[quant6]] on an unscaled double: `x` in
+    * micros, rounded half away from zero by the same FLOOR/CEIL ops.
+    */
+  def quant6Micros(x: Double): Long = {
+    val s = x * 1000000.0
+    (if (s >= 0) math.floor(s + 0.5) else math.ceil(s - 0.5)).toLong
+  }
+
+  /** A micro count as the nearest double — the DECIMAL(18,6) → DOUBLE
+    * cast of [[quant6]]'s value.
+    */
+  def fromMicros(micros: Long): Double =
+    new java.math.BigDecimal(micros).movePointLeft(6).doubleValue()
+
   private def intLit(e: Expression): Int =
     e.eval(null).asInstanceOf[Number].intValue()
 

@@ -541,9 +541,7 @@ object EventAnalytics {
   }
 
   def entryExit(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
-    val tk = concat(
-      lpad(unix_micros(col("ts")).cast("string"), 20, "0"),
-      lpad(col("event_id").cast("string"), 20, "0"))
+    val tk = MarketOps.tieKey
     val t = userSessions(events, gapMinutes)
     val sess = t.groupBy(col("user_id"), col("session_id"))
       .agg(min_by(col("event_type"), tk).as("entry_type"),

@@ -41,7 +41,7 @@ object MarketOps {
     * so a 10-wide event_id pad would silently collide for ids ≥ 1e10 —
     * 20 covers the full non-negative int64 range (max 19 digits).
     */
-  private[operators] def tieKey: Column = concat(
+  private[graft] def tieKey: Column = concat(
     lpad(unix_micros(col("ts")).cast("string"), 20, "0"),
     lpad(col("event_id").cast("string"), 20, "0"))
 

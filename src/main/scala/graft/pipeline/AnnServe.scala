@@ -34,8 +34,6 @@ class AnnServe private (
     shortlist: Int,
     maxCells: Int) {
 
-  import PqIndex.q6
-
   // r17 (ADVICE): a single query probing more cells than the cache
   // holds would SELF-EVICT mid-pass (cells loaded early evicted by
   // later ones, so every repeat reloads them all). Guard the
@@ -164,23 +162,11 @@ class AnnServe private (
     */
   def topK(qvecF: Array[Float], k: Int, excludeId: Long = -1L): Seq[(Long, Double)] = {
     val m = index.m
-    val sub = index.sub
     val qn = IvfIndex.normalize(qvecF.map(_.toDouble))
     val probes = IvfIndex.nearestCells(index.centroids, qn, nprobe)
     val (_, cells) = ServeCache.stable(index.snapshot)(warmCells(probes))
-    // per-(cell, j) ADC tables — identical construction to the query
-    // path's literal maps
     val tables: Map[Int, Array[Map[Int, Double]]] = probes.map { cell =>
-      val cc = index.centroids(cell)
-      cell -> Array.tabulate(m) { j =>
-        val qr = Array.tabulate(sub)(i => qn(j * sub + i) - cc(j * sub + i))
-        index.codebooks(j).map { case (code, cent) =>
-          var acc = 0.0
-          var i = 0
-          while (i < sub) { val d = cent(i) - qr(i); acc += d * d; i += 1 }
-          code -> q6(acc)
-        }.toMap
-      }
+      cell -> Array.tabulate(m)(j => index.cellAdcTable(qn, cell, j).toMap)
     }.toMap
     // candidates: (adc, vec_id) over the probed cells
     val cand = Array.newBuilder[(Double, Long, Array[Float])]

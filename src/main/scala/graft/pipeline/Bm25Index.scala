@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions.quant6
+import graft.functions.GraftFunctions.{fromMicros, quant6, quant6Micros}
 
 /** r16: the INVERTED-INDEX BM25 tier — the 100 TB path behind
   * [[TextOps.bm25]]'s scan formulation. The scan path reads the whole
@@ -332,18 +332,11 @@ class Bm25Index private (
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val buckets = terms.map(Bm25Index.bucketOf).distinct
     val avgdl = st.totalLen.toDouble / st.nDocs.toDouble
-    // idf per queried term, quant6'd driver-side with the same double
-    // chain the scan path (and the oracle) use
     val idf6: Map[String, Double] = terms.map { t =>
-      val df = dfs.getOrElse(t, 0L).toDouble
-      t -> PqIndex.q6(math.log((st.nDocs.toDouble - df + 0.5) / (df + 0.5) + 1.0))
+      t -> Bm25Index.idf6(st.nDocs.toDouble, dfs.getOrElse(t, 0L).toDouble)
     }.toMap
-    val tf = col("tf").cast("double")
-    val ratio = tf * lit(2.2) / (tf + lit(TextOps.Bm25K1) *
-      (lit(1.0) - lit(TextOps.Bm25B) +
-        lit(TextOps.Bm25B) * (col("dl").cast("double") / lit(avgdl))))
-    val contrib = quant6(
-      element_at(typedLit(idf6), col("term")) * ratio * 1000000.0)
+    val contrib = Bm25Index.weight(element_at(typedLit(idf6), col("term")),
+      col("tf"), col("dl"), lit(avgdl))
     val pruned = st.files.frame
       .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
     val grouped = filter.fold(pruned)(pruned.filter)
@@ -400,7 +393,7 @@ class Bm25Index private (
     val prunedRegime = termRows.length <= Bm25Index.BatchPruneCap
     // per-(query, term) idf. r18 (ADVICE): in the pruned regime the
     // distinct terms are already driver-collected, so idf6 is the SAME
-    // driver-side PqIndex.q6(math.log(…)) map [[topK]] builds — Spark's
+    // driver-side map [[topK]] builds — Spark's
     // in-plan log() lowers to StrictMath.log while math.log is the
     // intrinsic, and the two can differ by 1 ulp, which a value landing
     // on a .5 micro boundary would quant6 differently, breaking the
@@ -416,18 +409,15 @@ class Bm25Index private (
         .filter(col("term").isin(terms: _*))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val idf6: Map[String, Double] = terms.map { t =>
-        val df = dfs.getOrElse(t, 0L).toDouble
-        t -> PqIndex.q6(math.log((nDocsD - df + 0.5) / (df + 0.5) + 1.0))
+        t -> Bm25Index.idf6(nDocsD, dfs.getOrElse(t, 0L).toDouble)
       }.toMap
       qterms.select(col("query_id"), col("term"),
         element_at(typedLit(idf6), col("term")).as("idf6"))
     } else {
       qterms.join(dfTable(st), Seq("term"), "left")
         .select(col("query_id"), col("term"),
-          quant6(log(
-            (lit(nDocsD) - coalesce(col("df"), lit(0L)).cast("double") + 0.5) /
-              (coalesce(col("df"), lit(0L)).cast("double") + 0.5) + 1.0)
-            * 1000000.0).cast("double").as("idf6"))
+          Bm25Index.idf6(lit(nDocsD),
+            coalesce(col("df"), lit(0L)).cast("double")).as("idf6"))
     }
     val post =
       if (prunedRegime) {
@@ -437,11 +427,7 @@ class Bm25Index private (
           .filter(col("bucket").isin(buckets: _*) &&
             col("term").isin(terms: _*))
       } else st.files.frame
-    val tf = col("tf").cast("double")
-    val ratio = tf * lit(2.2) / (tf + lit(TextOps.Bm25K1) *
-      (lit(1.0) - lit(TextOps.Bm25B) +
-        lit(TextOps.Bm25B) * (col("dl").cast("double") / lit(avgdl))))
-    val contrib = quant6(col("idf6") * ratio * 1000000.0)
+    val contrib = Bm25Index.weight(col("idf6"), col("tf"), col("dl"), lit(avgdl))
     val grouped = post.join(qt, Seq("term"))
       .select(col("query_id"), col("doc_id"), col("dl"), contrib.as("c"))
       .groupBy(col("query_id"), col("doc_id"))
@@ -490,6 +476,43 @@ object Bm25Index {
     * postings scan joined to the (broadcast) query-term table.
     */
   val BatchPruneCap = 8192
+
+  /** BM25's Lucene-style idf `ln((N − df + 0.5)/(df + 0.5) + 1)`,
+    * quant6'd driver-side (ln is the 1-ulp libm class) — the value
+    * every indexed and serve path scores a term with.
+    */
+  private[pipeline] def idf6(nDocs: Double, df: Double): Double =
+    fromMicros(quant6Micros(math.log((nDocs - df + 0.5) / (df + 0.5) + 1.0)))
+
+  /** The same idf computed in-plan, for plans whose term list never
+    * reaches the driver (DOUBLE columns `nDocs`, `df`). Spark's log()
+    * is StrictMath.log and may sit 1 ulp off the driver's math.log.
+    */
+  private[pipeline] def idf6(nDocs: Column, df: Column): Column =
+    quant6(log((nDocs - df + 0.5) / (df + 0.5) + 1.0) * 1000000.0).cast("double")
+
+  /** One term's BM25 contribution `idf6 · tf·(k1+1) / (tf + k1·(1 − b +
+    * b·dl/avgdl))`, quant6'd to DECIMAL(18,6) so per-doc sums are exact
+    * and order-free. `2.2` (k1+1) is a literal, as in the oracle.
+    */
+  private[pipeline] def weight(idf6: Column, tf: Column, dl: Column,
+      avgdl: Column): Column = {
+    val t = tf.cast("double")
+    val ratio = t * lit(2.2) / (t + lit(TextOps.Bm25K1) *
+      (lit(1.0) - lit(TextOps.Bm25B) +
+        lit(TextOps.Bm25B) * (dl.cast("double") / avgdl)))
+    quant6(idf6 * ratio * 1000000.0)
+  }
+
+  /** Driver-side twin of [[weight]], in micros: the same double chain,
+    * so a micro sum equals the Spark path's exact decimal sum.
+    */
+  private[pipeline] def weightMicros(idf6: Double, tf: Long, dl: Long,
+      avgdl: Double): Long = {
+    val ratio = tf.toDouble * 2.2 / (tf.toDouble + TextOps.Bm25K1 *
+      (1.0 - TextOps.Bm25B + TextOps.Bm25B * (dl.toDouble / avgdl)))
+    quant6Micros(idf6 * ratio)
+  }
 
   /** Driver-side twin of the build's bucket expression: Spark's
     * `hash()` is Murmur3_x86_32 with seed 42 — internal layout only

@@ -3,8 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions.quant6
-
 /** r18 (the r17 verdict's #4): POSITIONAL postings — the Lucene
   * proximity index re-expressed as a partitioned table. r17's phrase
   * tier was shingle postings: each phrase length n was its OWN index
@@ -148,15 +146,10 @@ class Bm25PosIndex private (docs: DataFrame, initial: Bm25PosIndex.State) {
     val nD = st.nDocs.toDouble
     val avgdl = totalLenN(st, n).toDouble / nD
     val idf6: Map[Int, Double] = split.indices.map { pi =>
-      val df = dfs.getOrElse(pi, 0L).toDouble
-      pi -> PqIndex.q6(math.log((nD - df + 0.5) / (df + 0.5) + 1.0))
+      pi -> Bm25Index.idf6(nD, dfs.getOrElse(pi, 0L).toDouble)
     }.toMap
-    val tf = col("tf").cast("double")
-    val ratio = tf * lit(2.2) / (tf + lit(TextOps.Bm25K1) *
-      (lit(1.0) - lit(TextOps.Bm25B) +
-        lit(TextOps.Bm25B) * (col("dln").cast("double") / lit(avgdl))))
-    val contrib = quant6(
-      element_at(typedLit(idf6), col("pi")) * ratio * 1000000.0)
+    val contrib = Bm25Index.weight(element_at(typedLit(idf6), col("pi")),
+      col("tf"), col("dln"), lit(avgdl))
     cands
       .select(col("doc_id"), col("dln"), contrib.as("c"))
       .groupBy(col("doc_id"))
@@ -186,8 +179,7 @@ class Bm25PosIndex private (docs: DataFrame, initial: Bm25PosIndex.State) {
     val nD = st.nDocs.toDouble
     val avgdl = st.totalLen.toDouble / nD
     val idf6: Map[String, Double] = Seq(a, b).map { t =>
-      val df = dfs.getOrElse(t, 0L).toDouble
-      t -> PqIndex.q6(math.log((nD - df + 0.5) / (df + 0.5) + 1.0))
+      t -> Bm25Index.idf6(nD, dfs.getOrElse(t, 0L).toDouble)
     }.toMap
     val pa = posts.filter(col("term") === a)
       .select(col("doc_id"), col("dl"), col("tf").as("tfa"),
@@ -201,13 +193,8 @@ class Bm25PosIndex private (docs: DataFrame, initial: Bm25PosIndex.State) {
     // in WholeStageCodegen; same minimum, q_bm25_near hash unchanged.
     graft.functions.GraftFunctions.register(spark)
     val minDist = expr("graft_min_pos_dist(pa, pb)")
-    def contrib(t: String, tfc: Column): Column = {
-      val tf = tfc.cast("double")
-      val ratio = tf * lit(2.2) / (tf + lit(TextOps.Bm25K1) *
-        (lit(1.0) - lit(TextOps.Bm25B) +
-          lit(TextOps.Bm25B) * (col("dl").cast("double") / lit(avgdl))))
-      quant6(lit(idf6(t)) * ratio * 1000000.0)
-    }
+    def contrib(t: String, tf: Column): Column =
+      Bm25Index.weight(lit(idf6(t)), tf, col("dl"), lit(avgdl))
     pa.join(pb, Seq("doc_id"))
       .select(col("doc_id"), col("dl"), minDist.cast("long").as("min_dist"),
         (contrib(a, col("tfa")) + contrib(b, col("tfb")))

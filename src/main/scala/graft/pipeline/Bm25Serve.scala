@@ -124,11 +124,6 @@ class Bm25Serve private (index: Bm25Index, maxTerms: Int, maxDf: Long) {
   def prewarm(): Unit =
     localFirst("bm25 prewarm")(Some(index.dfLocal(Seq(" "))))(Map.empty)
 
-  private def q6micro(x: Double): Long = {
-    val s = x * 1000000.0
-    (if (s >= 0) math.floor(s + 0.5) else math.ceil(s - 0.5)).toLong
-  }
-
   /** Warm top-k BM25 — the serve-loop entry point. Returns
     * (doc_id, dl, score) exactly as [[Bm25Index.topK]] would collect
     * against one committed index state: the postings and N/avgdl come
@@ -169,12 +164,9 @@ class Bm25Serve private (index: Bm25Index, maxTerms: Int, maxDf: Long) {
     val dls = scala.collection.mutable.LongMap.empty[Long]
     keys.foreach { key =>
       val posts = cached(key).posts
-      val df = posts.length.toDouble
-      val idf6 = PqIndex.q6(math.log((n - df + 0.5) / (df + 0.5) + 1.0))
+      val idf6 = Bm25Index.idf6(n, posts.length.toDouble)
       posts.foreach { case (doc, tf, dl) =>
-        val ratio = tf.toDouble * 2.2 / (tf.toDouble + TextOps.Bm25K1 *
-          (1.0 - TextOps.Bm25B + TextOps.Bm25B * (dl.toDouble / avgdl)))
-        acc(doc) = acc.getOrElse(doc, 0L) + q6micro(idf6 * ratio)
+        acc(doc) = acc.getOrElse(doc, 0L) + Bm25Index.weightMicros(idf6, tf, dl, avgdl)
         cnt(doc) = cnt.getOrElse(doc, 0L) + 1L
         dls(doc) = dl
       }
@@ -183,8 +175,7 @@ class Bm25Serve private (index: Bm25Index, maxTerms: Int, maxDf: Long) {
                else acc.toSeq
     kept.sortBy { case (doc, micro) => (-micro, doc) }.take(k)
       .map { case (doc, micro) =>
-        (doc, dls(doc),
-          new java.math.BigDecimal(micro).movePointLeft(6).doubleValue())
+        (doc, dls(doc), graft.functions.GraftFunctions.fromMicros(micro))
       }.toSeq
   }
 }

@@ -98,31 +98,36 @@ object Dedup {
       }: _*)).as(Seq("band_id", "band_hash")))
   }
 
-  def minhashCandidates(docs: DataFrame, n: Int = 3, k: Int = 16, bands: Int = 4): DataFrame = {
-    val banded = bandedSigs(docs, n, k, bands)
-    // bucket-size gate as a WINDOW count over the banded shuffle:
-    // sizing consumes the same exchange the pair join needs, so the
-    // signature computation runs once and shuffles once. Buckets of 1
-    // pair nothing; buckets above the cap are degenerate (handled by
-    // exact dedup) and excluded.
+  /** The LSH band-pair gate: pairs `a.doc_id < b.doc_id` sharing a
+    * (band_id, `key`) bucket of 2..[[maxBucket]] members, sides aliased
+    * `a`/`b`. The bucket size is a WINDOW count over the banded
+    * shuffle: sizing consumes the same exchange the pair join needs, so
+    * the signatures compute once and shuffle once. Buckets of 1 pair
+    * nothing; buckets above the cap are degenerate (handled by exact
+    * dedup) and excluded.
+    */
+  private def bandPairs(banded: DataFrame, key: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val eligible = banded.withColumn("cnt",
-        count(lit(1)).over(Window.partitionBy("band_id", "band_hash")))
+        count(lit(1)).over(Window.partitionBy("band_id", key)))
       .filter(col("cnt").between(2, maxBucket))
       .drop("cnt")
     // symmetric self-join (dataset aliases, not per-side renames) so
     // both sides canonicalize identically and AQE plans a single
     // ReusedExchange — see SURVEY §6.5 plan audit
     eligible.as("a").join(eligible.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
+      col("a.band_id") === col("b.band_id") &&
+        col(s"a.$key") === col(s"b.$key") &&
+        col("a.doc_id") < col("b.doc_id"))
+  }
+
+  def minhashCandidates(docs: DataFrame, n: Int = 3, k: Int = 16, bands: Int = 4): DataFrame =
+    bandPairs(bandedSigs(docs, n, k, bands), "band_hash")
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         (call_function("graft_sig_match", col("a.sig"), col("b.sig"))
           .cast("double") / k).as("est_jaccard"))
       .distinct()
       .orderBy("doc_a", "doc_b")
-  }
 
   /** NEW r12b: MinHash calibration report — the threshold-tuning
     * table a dedup operator reads before picking a similarity cutoff:
@@ -234,17 +239,7 @@ object Dedup {
         shiftrightunsigned(col("simhash"), b * width)
           .bitwiseAND((1L << width) - 1L)
       }: _*)).as(Seq("band_id", "band_val")))
-    // same one-shuffle window-gated self-join shape as
-    // [[minhashCandidates]]
-    import org.apache.spark.sql.expressions.Window
-    val eligible = banded.withColumn("cnt",
-        count(lit(1)).over(Window.partitionBy("band_id", "band_val")))
-      .filter(col("cnt").between(2, maxBucket))
-      .drop("cnt")
-    eligible.as("a").join(eligible.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id"))
+    bandPairs(banded, "band_val")
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
           .cast("long").as("hamming"))

@@ -74,8 +74,6 @@ class IvfPqIndex private (
     */
   private[pipeline] def snapshot: IndexFiles = files
 
-  import PqIndex.q6
-
   /** Last generation that appended into or deleted from `cell` (0 =
     * build-time only) — the staleness handshake that lets a warm
     * [[AnnServe]] cache drop exactly the cells a mutation touched (r16,
@@ -175,18 +173,12 @@ class IvfPqIndex private (
       .select(col("embedding")).head().getSeq[Float](0).toArray
     val qn = IvfIndex.normalize(qvecF.map(_.toDouble))
     val probes = IvfIndex.nearestCells(centroids, qn, nprobe)
-    // per-(cell, sub-space) ADC tables against the PER-CELL query
-    // residual — m maps of nprobe × cb quant6'd entries, keyed
-    // cell·stride + code so the scan side needs no join
+    // per-(cell, sub-space) ADC tables — m maps of nprobe × cb
+    // entries, keyed cell·stride + code so the scan side needs no join
     val tables: IndexedSeq[Map[Long, Double]] = (0 until m).map { j =>
       probes.flatMap { cell =>
-        val cc = centroids(cell)
-        val qr = Array.tabulate(sub)(i => qn(j * sub + i) - cc(j * sub + i))
-        codebooks(j).map { case (code, cent) =>
-          var acc = 0.0
-          var i = 0
-          while (i < sub) { val d = cent(i) - qr(i); acc += d * d; i += 1 }
-          (cell.toLong * IvfPqIndex.CellKeyStride + code) -> q6(acc)
+        cellAdcTable(qn, cell, j).map { case (code, d) =>
+          (cell.toLong * IvfPqIndex.CellKeyStride + code) -> d
         }
       }.toMap
     }
@@ -197,15 +189,18 @@ class IvfPqIndex private (
     }.reduce(_ + _)
     val pruned = codes()
       .filter(col("cell").isin(probes: _*) && col("vec_id") =!= queryId)
-    filter.map(pruned.filter).getOrElse(pruned)
-      .select(col("vec_id"), col("embedding"), adc.as("adc"))
-      .orderBy(col("adc"), col("vec_id"))
-      .limit(shortlist)
-      .withColumn("qe", typedLit(qvecF.toSeq))
-      .select(col("vec_id"),
-        round(Similarity.cosine(col("embedding"), col("qe")), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
+    PqIndex.shortlistRerank(filter.map(pruned.filter).getOrElse(pruned), adc,
+      qvecF, k, shortlist)
+  }
+
+  /** Sub-space `j`'s ADC table for `cell`: built against the PER-CELL
+    * query residual `qn − c(cell)` (the residual encoding's query side).
+    */
+  private[pipeline] def cellAdcTable(qn: Array[Double], cell: Int,
+      j: Int): Seq[(Int, Double)] = {
+    val cc = centroids(cell)
+    PqIndex.adcTable(codebooks(j),
+      Array.tabulate(sub)(i => qn(j * sub + i) - cc(j * sub + i)))
   }
 
   /** r18 (the r17 verdict's #6): BATCH retrieval — every query of a
@@ -249,8 +244,8 @@ class IvfPqIndex private (
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
     val missing = ids.filterNot(qvecs.contains)
     require(missing.isEmpty, s"query ids absent from the corpus: $missing")
-    // per-query probes + the combined per-subspace ADC maps — the same
-    // driver arithmetic as topK, keyed (qidx, cell, code)
+    // per-query probes + the combined per-subspace ADC maps, keyed
+    // (qidx, cell, code)
     val qInfo = ids.zipWithIndex.map { case (id, qi) =>
       val qn = IvfIndex.normalize(qvecs(id).map(_.toDouble))
       (id, qi, qn, IvfIndex.nearestCells(centroids, qn, nprobe))
@@ -258,14 +253,9 @@ class IvfPqIndex private (
     val tables: IndexedSeq[Map[Long, Double]] = (0 until m).map { j =>
       qInfo.flatMap { case (_, qi, qn, probes) =>
         probes.flatMap { cell =>
-          val cc = centroids(cell)
-          val qr = Array.tabulate(sub)(i => qn(j * sub + i) - cc(j * sub + i))
-          codebooks(j).map { case (code, cent) =>
-            var acc = 0.0
-            var i = 0
-            while (i < sub) { val d = cent(i) - qr(i); acc += d * d; i += 1 }
+          cellAdcTable(qn, cell, j).map { case (code, d) =>
             (qi.toLong * IvfPqIndex.QueryKeyStride +
-              cell.toLong * IvfPqIndex.CellKeyStride + code) -> q6(acc)
+              cell.toLong * IvfPqIndex.CellKeyStride + code) -> d
           }
         }
       }.toMap

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions.quant6
+import graft.functions.GraftFunctions.{fromMicros, quant6, quant6Micros}
 
 /** Offline product-quantization ANN index: codebooks fitted once,
   * every corpus vector encoded once into `m` sub-space codes, both
@@ -49,8 +49,6 @@ class PqIndex private (
     val sub: Int,
     val codebooks: IndexedSeq[Seq[(Int, Array[Double])]]) {
 
-  import PqIndex.q6
-
   /** The stored `(vec_id, embedding, codes)` table. */
   private[pipeline] def codes(): DataFrame =
     graft.core.Tables.read(emb.sparkSession, codesPath)
@@ -58,45 +56,17 @@ class PqIndex private (
   /** Top-k cosine neighbors of `queryId`: ADC shortlist over stored
     * codes, exact re-rank on `shortlist` rows.
     */
-  def topK(queryId: Long, k: Int, shortlist: Int): DataFrame =
-    adcRerank(codes().filter(col("vec_id") =!= queryId), queryId, k, shortlist)
-
-  /** The ADC-shortlist + exact-rerank tail over an arbitrary candidate
-    * slice of the stored codes table — shared by [[topK]] (whole
-    * corpus) and the r14 IVF+PQ composition
-    * ([[Similarity.ivfPqTopK]]: candidates = the probed IVF cells).
-    */
-  private[pipeline] def adcRerank(candCodes: DataFrame, queryId: Long,
-      k: Int, shortlist: Int): DataFrame = {
+  def topK(queryId: Long, k: Int, shortlist: Int): DataFrame = {
     // point lookup of the query vector (pushed-down scan on vec_id)
     val qvecF = emb.filter(col("vec_id") === queryId)
       .select(col("embedding")).head().getSeq[Float](0).toArray
     val qvec = qvecF.map(_.toDouble)
-    // ADC tables: per (sub-space, cell) the quant6'd squared distance
-    // of the stored centroid to the query sub-vector (driver-side,
-    // sequential fold — mirrored by the oracle's list_sum + quant6)
-    val tables: IndexedSeq[Map[Int, Double]] = (0 until m).map { j =>
-      codebooks(j).map { case (c, cent) =>
-        var acc = 0.0
-        var i = 0
-        while (i < sub) {
-          val d = cent(i) - qvec(j * sub + i); acc += d * d; i += 1
-        }
-        c -> q6(acc)
-      }.toMap
-    }
     val adc = (0 until m).map { j =>
-      element_at(typedLit(tables(j)), element_at(col("codes"), j + 1))
+      val table = PqIndex.adcTable(codebooks(j), qvec.slice(j * sub, j * sub + sub)).toMap
+      element_at(typedLit(table), element_at(col("codes"), j + 1))
     }.reduce(_ + _)
-    candCodes
-      .select(col("vec_id"), col("embedding"), adc.as("adc"))
-      .orderBy(col("adc"), col("vec_id"))
-      .limit(shortlist)
-      .withColumn("qe", typedLit(qvecF.toSeq))
-      .select(col("vec_id"),
-        round(Similarity.cosine(col("embedding"), col("qe")), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
+    PqIndex.shortlistRerank(codes().filter(col("vec_id") =!= queryId), adc,
+      qvecF, k, shortlist)
   }
 
   /** Mean quant6'd encoding distortion of the STORED corpus — each
@@ -162,11 +132,36 @@ object PqIndex {
     graft.core.Artifacts(graft.core.Artifacts.keyOf(emb, "pq", m, cb))(
       build(emb, m, cb))
 
-  private[pipeline] def q6(x: Double): Double = {
-    val s = x * 1000000.0
-    val r = if (s >= 0) math.floor(s + 0.5) else math.ceil(s - 0.5)
-    new java.math.BigDecimal(r.toLong).movePointLeft(6).doubleValue()
-  }
+  /** One sub-space's ADC table: per code of `codebook`, the quant6'd
+    * squared distance of its centroid to the query sub-vector `qs`
+    * (driver-side sequential fold — mirrored by the oracle's list_sum +
+    * quant6). Every ADC path, Spark and serve, builds its entries here.
+    */
+  private[pipeline] def adcTable(codebook: Seq[(Int, Array[Double])],
+      qs: Array[Double]): Seq[(Int, Double)] =
+    codebook.map { case (code, cent) =>
+      var acc = 0.0
+      var i = 0
+      while (i < qs.length) { val d = cent(i) - qs(i); acc += d * d; i += 1 }
+      code -> fromMicros(quant6Micros(acc))
+    }
+
+  /** The ADC shortlist and exact re-rank tail: the `shortlist`
+    * candidates of least `adc` (ties to the lower vec_id), then the top
+    * `k` by cosine to the query vector rounded to 4 dp (ties to the
+    * lower vec_id) — TakeOrderedAndProject both times.
+    */
+  private[pipeline] def shortlistRerank(cand: DataFrame, adc: Column,
+      qvecF: Array[Float], k: Int, shortlist: Int): DataFrame =
+    cand
+      .select(col("vec_id"), col("embedding"), adc.as("adc"))
+      .orderBy(col("adc"), col("vec_id"))
+      .limit(shortlist)
+      .withColumn("qe", typedLit(qvecF.toSeq))
+      .select(col("vec_id"),
+        round(Similarity.cosine(col("embedding"), col("qe")), 4).as("cos_sim"))
+      .orderBy(col("cos_sim").desc, col("vec_id"))
+      .limit(k)
 
   /** The corpus with its m sub-vectors PROJECTED ONCE as attributes:
     * every argmin evaluates cb interpreted zip_with folds per

@@ -126,11 +126,14 @@ object SemDedupIndex {
 
   /** Keeper-rule verdicts over an assigned member table: pairs are
     * drawn from `pairSource` (size-capped per cluster), every row of
-    * `all` gets a verdict. `pairSource` ⊆ `all` lets [[append]] limit
-    * pair generation to pairs touching a new vector.
+    * `all` gets a verdict — 0 when out-ranked by a ≥τ partner, else
+    * `kept`. `pairSource` ⊆ `all` plus the `pairFilter` predicate over
+    * the `a`/`b` sides let [[append]] limit pair generation to pairs
+    * touching a new vector.
     */
   private def verdictsOver(all: DataFrame, pairSource: DataFrame,
-      tau: Double): DataFrame = {
+      tau: Double, pairFilter: Option[Column] = None,
+      kept: Column = lit(1L)): DataFrame = {
     // cluster sizes from the FULL member table (k rows — AQE broadcasts
     // the join back; deliberately unhinted per the chunk-offsets rule)
     val sizes = all.groupBy(col("cluster")).agg(count(lit(1)).as("__n"))
@@ -147,9 +150,10 @@ object SemDedupIndex {
       Similarity.dot(col(s"$side.embedding"), col(s"$side.embedding"))
     val cos = when(n2("a") > 0.0 && n2("b") > 0.0,
       round(Similarity.cosine(col("a.embedding"), col("b.embedding")), 4))
+    val sameCluster = col("a.cluster") === col("b.cluster") &&
+      col("a.vec_id") =!= col("b.vec_id")
     val dup = elig.as("a").join(elig.as("b"),
-        col("a.cluster") === col("b.cluster") &&
-          col("a.vec_id") =!= col("b.vec_id") &&
+        pairFilter.fold(sameCluster)(sameCluster && _) &&
           (col("a.dc") > col("b.dc") ||
             (col("a.dc") === col("b.dc") && col("a.vec_id") < col("b.vec_id"))))
       .filter(cos >= tau)
@@ -157,7 +161,7 @@ object SemDedupIndex {
       .withColumn("dropped", lit(1L))
     all.join(dup, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster"), col("dc"),
-        when(col("dropped").isNull, 1L).otherwise(0L).as("is_kept"))
+        when(col("dropped").isNull, kept).otherwise(0L).as("is_kept"))
   }
 
   /** r16 (the r15 verdict's #7): INCREMENTAL verdict refresh. New
@@ -265,55 +269,33 @@ object SemDedupIndex {
     val pairSource = members
       .select(col("vec_id"), col("embedding"), col("cluster"), col("dc"),
         col("is_new"))
-    // pairs must touch a new vector: restrict ONE side to new members —
-    // keeper drops b when a out-ranks it, so (a any, b any) pairs with
-    // a or b new are covered by the union of (a new) and (b new) joins;
-    // verdictsOver's symmetric join makes that the filter below
-    val reVerdict = {
-      val sizesAll = members.groupBy(col("cluster"))
-        .agg(count(lit(1)).as("__n"))
-      // r17 (ADVICE): the documented append divergence — a touched
-      // cluster crossing MaxCluster only BECAUSE of the append keeps
-      // its pre-existing drops, where a full rebuild would skip the
-      // whole degenerate cluster — contradicts the strict append ≡
-      // full-re-verdict gates (q_semdedup_append oracle, SemDedupSpec).
-      // It has never fired at a verify/bench SF; if it ever does, this
-      // warning makes the red immediately attributable instead of a
-      // silent hash mismatch. Touched clusters only — a bounded read.
-      val crossed = sizesAll.filter(col("__n") > MaxCluster)
-        .join(stored.filter(col("is_kept") === 0L)
-          .select(col("cluster")).distinct(), Seq("cluster"), "left_semi")
-        .select(col("cluster")).collect().map(_.get(0))
-      if (crossed.nonEmpty)
-        System.err.println(
-          s"[graft] WARNING: SemDedupIndex.append — touched cluster(s) " +
-            s"${crossed.mkString(",")} crossed MaxCluster=$MaxCluster with " +
-            "stored drops; append keeps those drops but a full rebuild " +
-            "would skip the whole cluster — expect the strict-equality " +
-            "gates (q_semdedup_append / SemDedupSpec) to mismatch here")
-      val sizes = sizesAll
-        .filter(col("__n").between(2, MaxCluster))
-        .select(col("cluster"))
-      val elig = pairSource.join(sizes, Seq("cluster"))
-      def n2(side: String): Column =
-        Similarity.dot(col(s"$side.embedding"), col(s"$side.embedding"))
-      val cos = when(n2("a") > 0.0 && n2("b") > 0.0,
-        round(Similarity.cosine(col("a.embedding"), col("b.embedding")), 4))
-      val dup = elig.as("a").join(elig.as("b"),
-          col("a.cluster") === col("b.cluster") &&
-            col("a.vec_id") =!= col("b.vec_id") &&
-            (col("a.is_new") || col("b.is_new")) &&
-            (col("a.dc") > col("b.dc") ||
-              (col("a.dc") === col("b.dc") &&
-                col("a.vec_id") < col("b.vec_id"))))
-        .filter(cos >= tau)
-        .select(col("b.vec_id").as("vec_id")).distinct()
-        .withColumn("dropped", lit(1L))
-      members.join(dup, Seq("vec_id"), "left")
-        .select(col("vec_id"), col("cluster"), col("dc"),
-          when(col("dropped").isNull, col("old_kept")).otherwise(0L)
-            .as("is_kept"))
-    }
+    // r17 (ADVICE): the documented append divergence — a touched
+    // cluster crossing MaxCluster only BECAUSE of the append keeps its
+    // pre-existing drops, where a full rebuild would skip the whole
+    // degenerate cluster — contradicts the strict append ≡
+    // full-re-verdict gates (q_semdedup_append oracle, SemDedupSpec).
+    // It has never fired at a verify/bench SF; if it ever does, this
+    // warning makes the red immediately attributable instead of a
+    // silent hash mismatch. Touched clusters only — a bounded read.
+    val crossed = members.groupBy(col("cluster"))
+      .agg(count(lit(1)).as("__n"))
+      .filter(col("__n") > MaxCluster)
+      .join(stored.filter(col("is_kept") === 0L)
+        .select(col("cluster")).distinct(), Seq("cluster"), "left_semi")
+      .select(col("cluster")).collect().map(_.get(0))
+    if (crossed.nonEmpty)
+      System.err.println(
+        s"[graft] WARNING: SemDedupIndex.append — touched cluster(s) " +
+          s"${crossed.mkString(",")} crossed MaxCluster=$MaxCluster with " +
+          "stored drops; append keeps those drops but a full rebuild " +
+          "would skip the whole cluster — expect the strict-equality " +
+          "gates (q_semdedup_append / SemDedupSpec) to mismatch here")
+    // pairs must touch a new vector (keeper drops b when a out-ranks
+    // it, so either side may be the new one); a member no new pair
+    // drops keeps its stored verdict
+    val reVerdict = verdictsOver(members, pairSource, tau,
+      pairFilter = Some(col("a.is_new") || col("b.is_new")),
+      kept = col("old_kept"))
     val untouched = stored.join(touched, Seq("cluster"), "left_anti")
       .select(col("vec_id"), col("cluster"), col("dc"), col("is_kept"))
     // the union corpus answers oracle dumps with the BASE constants —

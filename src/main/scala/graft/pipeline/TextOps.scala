@@ -1438,16 +1438,9 @@ object TextOps {
       (sum(col("dl")).as("tot") +: terms.indices.map(i =>
         sum((col(s"tf$i") > 0).cast("long")).as(s"df$i"))): _*)
     val avgdl = col("tot").cast("double") / col("n").cast("double")
-    def contrib(i: Int): Column = {
-      val tf = col(s"tf$i").cast("double")
-      val df = col(s"df$i").cast("double")
-      val idf6 = quant6(log(
-        (col("n").cast("double") - df + 0.5) / (df + 0.5) + 1.0)
-        * 1000000.0).cast("double")
-      val ratio = tf * lit(2.2) / (tf + lit(Bm25K1) *
-        (lit(1.0) - lit(Bm25B) + lit(Bm25B) * (col("dl").cast("double") / avgdl)))
-      quant6(idf6 * ratio * 1000000.0)
-    }
+    def contrib(i: Int): Column = Bm25Index.weight(
+      Bm25Index.idf6(col("n").cast("double"), col(s"df$i").cast("double")),
+      col(s"tf$i"), col("dl"), avgdl)
     // conjunctive = AND retrieval (every query term present) — the
     // decontamination default; disjunctive = classic bag-of-terms OR
     val keep = if (conjunctive)

@@ -289,12 +289,10 @@ object Streams {
   def streamLatest(spark: SparkSession, dir: String): DataFrame = {
     val base = graft.core.TempDirs.scoped("graft_stream_latest_")
     // deterministic argmax under (symbol, ts) ties: the zero-padded
-    // (epoch_us, event_id) tie key (MarketOps.tieKey pattern) keys the
-    // per-batch pick AND travels with the delta so compaction re-picks
-    // by the globally-unique key, not the tie-prone timestamp alone
-    val key = concat(
-      lpad(unix_micros(col("ts")).cast("string"), 20, "0"),
-      lpad(col("event_id").cast("string"), 20, "0"))
+    // (epoch_us, event_id) tie key keys the per-batch pick AND travels
+    // with the delta so compaction re-picks by the globally-unique key,
+    // not the tie-prone timestamp alone
+    val key = graft.operators.MarketOps.tieKey
     val q = tickStream(spark, dir).writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         batch.groupBy(col("symbol"))
